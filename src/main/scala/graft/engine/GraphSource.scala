@@ -6,6 +6,7 @@ import org.apache.spark.sql.Row
 import graft.core.Rows
 
 import java.util.concurrent.atomic.AtomicLong
+import scala.collection.mutable
 
 /** A queryable graph: two DataFrames with the fixed node/edge schemas
   * (FIXTURES.md §1) plus optional FTS posting DataFrames
@@ -46,13 +47,34 @@ trait GraphSource {
     * unicode61, matching the reference. */
   def ftsUnicode61: Boolean = false
 
-  /** (Re-)register temp views for SQL-based query compilation. Cheap; called
-    * per fetch so mutable sources always expose current state. */
-  def registerViews(): Unit = {
-    nodes.createOrReplaceTempView(nodesView)
-    edges.createOrReplaceTempView(edgesView)
-    nodeFts.createOrReplaceTempView(nodeFtsView)
-    edgeFts.createOrReplaceTempView(edgeFtsView)
+  /** Whether the node and edge views of this source hold at most one row
+    * per uid, as the reference's `uid TEXT PRIMARY KEY` tables do
+    * (graphydb.py:521-522). The FTS views are not covered: they hold one
+    * row per term occurrence, so a join on them keeps rows unique only
+    * through [[graft.query.Fts.matchSql]], which returns one row per uid.
+    * [[graft.query.Fetch]] then emits no dedup for a single-link fetch,
+    * whose rows are unique as they stand. Only a source that enforces it
+    * may declare it ([[MemGraph]], keyed by uid): a z-view or a projection
+    * can carry a uid twice. */
+  def uidUnique: Boolean = false
+
+  private val registered = mutable.HashMap.empty[String, DataFrame]
+
+  /** (Re-)register temp views for SQL-based query compilation; called per
+    * fetch so mutable sources always expose current state. A registration
+    * re-analyzes the view's plan, about 2–8 ms per view over a 10k-item
+    * MemGraph on a 4-core host, so a view is re-registered only when the
+    * DataFrame instance behind it changed since its last registration. */
+  def registerViews(): Unit = synchronized {
+    def register(df: DataFrame, view: String): Unit =
+      if (!registered.get(view).exists(_ eq df)) {
+        df.createOrReplaceTempView(view)
+        registered(view) = df
+      }
+    register(nodes, nodesView)
+    register(edges, edgesView)
+    register(nodeFts, nodeFtsView)
+    register(edgeFts, edgeFtsView)
   }
 }
 

@@ -1,9 +1,15 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
+import org.apache.spark.sql.graft.LocalFrame
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core.{Delta, Json, Rows, Uid}
 import graft.query.{Fetch, Fts}
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -17,6 +23,17 @@ import scala.jdk.CollectionConverters._
   * reference's ~10k-item working set); the same journal schema scales out
   * via [[graft.engine.Journal]], which reconstructs identical snapshots with
   * distributed window/fold operations over a change log of any size.
+  *
+  * Snapshots are kept per table (nodes, edges, node and edge FTS postings).
+  * Each table caches every uid's rows in Catalyst's converted form and
+  * drops a uid's entry when that uid is saved, deleted or re-indexed; the
+  * table's DataFrame is rebuilt on the first read after a change to THAT
+  * table, rendering only the dropped uids and sharing every other row with
+  * the cache. A node-only write therefore leaves the edge and FTS frames
+  * (and their registered views) untouched. The maps are keyed by uid, like
+  * the reference's `uid TEXT PRIMARY KEY`, so the node and edge views hold
+  * one row per uid ([[uidUnique]]); the FTS views hold one row per term
+  * occurrence and reach one row per uid only through `Fts.matchSql`.
   */
 final class MemGraph(val spark: SparkSession) extends GraphSource {
 
@@ -38,15 +55,31 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
   // FTS config + per-item field texts (graphydb.py:638-658, 1165-1196)
   private var nodeFtsFields: Option[Set[String]] = None
   private var edgeFtsFields: Option[Set[String]] = None
-  private val nodeFtsDocs = mutable.LinkedHashMap.empty[String, Map[String, String]]
-  private val edgeFtsDocs = mutable.LinkedHashMap.empty[String, Map[String, String]]
+  private[engine] val nodeFtsDocs = mutable.LinkedHashMap.empty[String, Map[String, String]]
+  private[engine] val edgeFtsDocs = mutable.LinkedHashMap.empty[String, Map[String, String]]
 
   private var version = 0L
   private def bump(): Unit = version += 1
 
-  /** Every mutation bumps `version` (it already invalidates the node/edge
-    * DataFrame caches below), so it doubles as the analytics-memo key. */
+  /** Every mutation bumps `version`, the analytics-memo key. */
   override def analyticsVersion: Long = version
+
+  override def uidUnique: Boolean = true
+
+  /** node uid → uids of the edges that start or end there, so a node delete
+    * finds its edges without scanning every edge. */
+  private val incident = mutable.HashMap.empty[String, mutable.LinkedHashSet[String]]
+
+  private def endpoints(edge: Map[String, Any]): Seq[String] =
+    Seq(edge("startuid").toString, edge("enduid").toString)
+
+  private def link(euid: String, edge: Map[String, Any]): Unit =
+    endpoints(edge).foreach(n => incident.getOrElseUpdate(n, mutable.LinkedHashSet.empty) += euid)
+
+  private def unlink(euid: String, edge: Map[String, Any]): Unit =
+    endpoints(edge).foreach { n =>
+      incident.get(n).foreach { es => es -= euid; if (es.isEmpty) incident.remove(n) }
+    }
 
   // ---------------------------------------------------------------- builders
 
@@ -78,7 +111,11 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
     val diffKeys = old.map(_.keySet).getOrElse(Set.empty) ++ clean.keySet ++ item.changedKeys
     if (journal && journaling) addChange(item.uid, old, Some(clean), diffKeys, batch)
     map(item.uid) = clean
-    bump()
+    if (item.isEdge && !old.exists(o => endpoints(o) == endpoints(clean))) {
+      old.foreach(unlink(item.uid, _))
+      link(item.uid, clean)
+    }
+    changed(if (item.isEdge) edgeTable else nodeTable, item.uid)
   }
 
   private[engine] def deleteItem(item: Item, batch: Option[String]): Unit = {
@@ -93,8 +130,9 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
       case Some(image) =>
         if (journaling) addChange(item.uid, Some(image), None, Set.empty, batch)
         map.remove(item.uid)
+        if (item.isEdge) unlink(item.uid, image)
         deleteFts(item.uid, item.isEdge)
-        bump()
+        changed(if (item.isEdge) edgeTable else nodeTable, item.uid)
       case None => ()
     }
   }
@@ -133,7 +171,7 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
       .orElse(edgesMap.get(uid).map(d => new Edge(this, mutable.LinkedHashMap(d.toSeq: _*), changed0 = false)))
 
   private[engine] def edgesTouching(uid: String): Seq[String] =
-    edgesMap.collect { case (euid, d) if d("startuid") == uid || d("enduid") == uid => euid }.toSeq
+    incident.get(uid).fold(List.empty[String])(_.toList)
 
   // ------------------------------------------------------------------ fetch
 
@@ -210,6 +248,8 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
     settingsMap.clear(); cacheMap.clear()
     nodeFtsFields = None; edgeFtsFields = None
     nodeFtsDocs.clear(); edgeFtsDocs.clear()
+    incident.clear()
+    Seq(nodeTable, edgeTable, nodeFtsTable, edgeFtsTable).foreach(_.clear())
     bump()
   }
 
@@ -282,7 +322,9 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
     nodeFtsFields = Option(nodeFields).map(_.toSet)
     edgeFtsFields = Option(edgeFields).map(_.toSet)
     ftsUnicode = unicode61
-    nodeFtsDocs.clear(); edgeFtsDocs.clear(); bump()
+    nodeFtsDocs.clear(); edgeFtsDocs.clear()
+    nodeFtsTable.clear(); edgeFtsTable.clear()
+    bump()
   }
 
   private var ftsUnicode: Boolean = true
@@ -297,16 +339,16 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
     * re-configured index must re-read content either way. */
   def reindexFts(): Unit = {
     def index(docs: mutable.LinkedHashMap[String, Map[String, String]],
-        allowed: Option[Set[String]],
+        table: Snapshot, allowed: Option[Set[String]],
         items: mutable.LinkedHashMap[String, Map[String, Any]]): Unit =
       allowed.foreach { fields =>
         items.foreach { case (uid, data) =>
           val kept = data.collect { case (k, v: String) if fields.contains(k) => k -> v }
-          if (kept.nonEmpty) docs(uid) = kept
+          if (kept.nonEmpty) { docs(uid) = kept; table.drop(uid) }
         }
       }
-    index(nodeFtsDocs, nodeFtsFields, nodesMap)
-    index(edgeFtsDocs, edgeFtsFields, edgesMap)
+    index(nodeFtsDocs, nodeFtsTable, nodeFtsFields, nodesMap)
+    index(edgeFtsDocs, edgeFtsTable, edgeFtsFields, edgesMap)
     bump()
   }
 
@@ -316,13 +358,13 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
     if (kept.nonEmpty) {
       val docs = if (item.isEdge) edgeFtsDocs else nodeFtsDocs
       docs(item.uid) = docs.getOrElse(item.uid, Map.empty) ++ kept
-      bump()
+      changed(if (item.isEdge) edgeFtsTable else nodeFtsTable, item.uid)
     }
   }
 
   private[engine] def deleteFts(uid: String, isEdge: Boolean): Unit = {
     val docs = if (isEdge) edgeFtsDocs else nodeFtsDocs
-    if (docs.remove(uid).isDefined) bump()
+    if (docs.remove(uid).isDefined) changed(if (isEdge) edgeFtsTable else nodeFtsTable, uid)
   }
 
   // ------------------------------------------------------------------- stats
@@ -347,61 +389,86 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
 
   // ------------------------------------------------- GraphSource (snapshots)
 
-  private var nodesCache: (Long, DataFrame) = (-1L, null)
-  private var edgesCache: (Long, DataFrame) = (-1L, null)
-  private var nftsCache: (Long, DataFrame) = (-1L, null)
-  private var eftsCache: (Long, DataFrame) = (-1L, null)
+  /** One snapshot table: each uid's rows, converted once and kept until
+    * [[drop]] (that uid was saved, deleted or re-indexed), and the
+    * DataFrame over all of them, rebuilt on the first read after a change
+    * to this table only. `uids` lists the table's live uids in map order,
+    * which is the snapshot's row order; `render` gives a uid's rows as
+    * String/Double/Int values in schema order. */
+  private final class Snapshot(schema: StructType, uids: () => Iterable[String],
+      render: String => Seq[Seq[Any]]) {
+    private val rows = mutable.HashMap.empty[String, Seq[InternalRow]]
+    private var frame: DataFrame = _
+    private val writer = new UnsafeRowWriter(schema.length)
 
-  private def itemRows(map: mutable.LinkedHashMap[String, Map[String, Any]],
-      isEdge: Boolean): java.util.List[Row] =
-    map.values.map { d =>
-      val props = Json.render(d -- Rows.Reserved)
-      def dbl(k: String): Double = d(k) match {
-        case x: Double => x; case x: Long => x.toDouble; case x: Int => x.toDouble
-        case x => x.toString.toDouble
+    def drop(uid: String): Unit = { rows.remove(uid); frame = null }
+    def clear(): Unit = { rows.clear(); frame = null }
+
+    private def convert(values: Seq[Any]): InternalRow = {
+      writer.reset(); writer.zeroOutNullBytes()
+      var i = 0
+      values.foreach { v =>
+        v match {
+          case s: String => writer.write(i, UTF8String.fromString(s))
+          case d: Double => writer.write(i, d)
+          case n: Int => writer.write(i, n)
+        }
+        i += 1
       }
-      if (isEdge)
-        Row(d("uid").toString, d("kind").toString, d("startuid").toString,
-          d("enduid").toString, dbl("ctime"), dbl("mtime"), props)
-      else Row(d("uid").toString, d("kind").toString, dbl("ctime"), dbl("mtime"), props)
-    }.toList.asJava
+      writer.getRow.copy()
+    }
 
-  def nodes: DataFrame = {
-    if (nodesCache._1 != version)
-      nodesCache = (version, spark.createDataFrame(itemRows(nodesMap, isEdge = false), Rows.nodeSchema))
-    nodesCache._2
-  }
-  def edges: DataFrame = {
-    if (edgesCache._1 != version)
-      edgesCache = (version, spark.createDataFrame(itemRows(edgesMap, isEdge = true), Rows.edgeSchema))
-    edgesCache._2
-  }
-
-  private def ftsRows(docs: mutable.LinkedHashMap[String, Map[String, String]]): java.util.List[Row] =
-    docs.toSeq.flatMap { case (uid, fields) =>
-      fields.toSeq.flatMap { case (field, text) =>
-        // keep split indices as positions (phrase adjacency); one row per
-        // occurrence so tf scores count repeats, like Fts.postings — and
-        // the SAME fold-then-split order as Fts.postings' unicode61 path,
-        // so working-set and distributed postings can never disagree
-        val folded =
-          if (ftsUnicode) Fts.unicode61Fold(text) else text.toLowerCase
-        folded.split(Fts.TokenSplit).zipWithIndex
-          .filter(_._1.nonEmpty).toSeq
-          .map { case (term, pos) => Row(term, field, uid, pos) }
+    def df: DataFrame = {
+      if (frame == null) {
+        val all = mutable.ArrayBuilder.make[InternalRow]
+        uids().foreach(u => all ++= rows.getOrElseUpdate(u, render(u).map(convert)))
+        frame = LocalFrame(spark, schema, ArraySeq.unsafeWrapArray(all.result()))
       }
-    }.asJava
+      frame
+    }
+  }
 
-  override def nodeFts: DataFrame = {
-    if (nftsCache._1 != version)
-      nftsCache = (version, spark.createDataFrame(ftsRows(nodeFtsDocs), GraphSource.ftsSchema))
-    nftsCache._2
+  private def itemRow(d: Map[String, Any], isEdge: Boolean): Seq[Seq[Any]] = {
+    val props = Json.render(d -- Rows.Reserved)
+    def dbl(k: String): Double = d(k) match {
+      case x: Double => x; case x: Long => x.toDouble; case x: Int => x.toDouble
+      case x => x.toString.toDouble
+    }
+    def str(k: String): String = d(k).toString
+    Seq(
+      if (isEdge) Seq(str("uid"), str("kind"), str("startuid"), str("enduid"),
+        dbl("ctime"), dbl("mtime"), props)
+      else Seq(str("uid"), str("kind"), dbl("ctime"), dbl("mtime"), props))
   }
-  override def edgeFts: DataFrame = {
-    if (eftsCache._1 != version)
-      eftsCache = (version, spark.createDataFrame(ftsRows(edgeFtsDocs), GraphSource.ftsSchema))
-    eftsCache._2
-  }
+
+  private def ftsRows(uid: String, fields: Map[String, String]): Seq[Seq[Any]] =
+    fields.toSeq.flatMap { case (field, text) =>
+      // keep split indices as positions (phrase adjacency); one row per
+      // occurrence so tf scores count repeats, like Fts.postings — and
+      // the SAME fold-then-split order as Fts.postings' unicode61 path,
+      // so working-set and distributed postings can never disagree
+      val folded =
+        if (ftsUnicode) Fts.unicode61Fold(text) else text.toLowerCase
+      folded.split(Fts.TokenSplit).zipWithIndex
+        .filter(_._1.nonEmpty).toSeq
+        .map { case (term, pos) => Seq(term, field, uid, pos) }
+    }
+
+  private val nodeTable = new Snapshot(Rows.nodeSchema, () => nodesMap.keys,
+    u => itemRow(nodesMap(u), isEdge = false))
+  private val edgeTable = new Snapshot(Rows.edgeSchema, () => edgesMap.keys,
+    u => itemRow(edgesMap(u), isEdge = true))
+  private val nodeFtsTable = new Snapshot(GraphSource.ftsSchema, () => nodeFtsDocs.keys,
+    u => ftsRows(u, nodeFtsDocs(u)))
+  private val edgeFtsTable = new Snapshot(GraphSource.ftsSchema, () => edgeFtsDocs.keys,
+    u => ftsRows(u, edgeFtsDocs(u)))
+
+  private def changed(table: Snapshot, uid: String): Unit = { table.drop(uid); bump() }
+
+  def nodes: DataFrame = nodeTable.df
+  def edges: DataFrame = edgeTable.df
+  override def nodeFts: DataFrame = nodeFtsTable.df
+  override def edgeFts: DataFrame = edgeFtsTable.df
 
   /** The journal as a DataFrame (scale path input for [[Journal]]). */
   def changesDf: DataFrame = {
@@ -466,7 +533,9 @@ object MemGraph {
     }
     if (have("edges")) SqliteFile.readTable(path, "edges").foreach { r =>
       // DDL order (graphydb.py:522): uid, kind, startuid, enduid, ctime, mtime, data
-      g.edgesMap(s(r.values(0))) = numFix(Json.parse(s(r.values(6))))
+      val uid = s(r.values(0))
+      g.edgesMap(uid) = numFix(Json.parse(s(r.values(6))))
+      g.link(uid, g.edgesMap(uid))
     }
     if (have("settings")) SqliteFile.readTable(path, "settings").foreach { r =>
       g.settingsMap(s(r.values(0))) = Json.parseAny(s(r.values(1)))

@@ -23,6 +23,13 @@ import graft.engine.GraphSource
   *     reference's GROUP keys are uid-functional in every documented use).
   *   - COUNT returns `COUNT(DISTINCT alias.uid)` as a one-row DataFrame;
   *     `Fetch.count` collects it to a Long.
+  *   - A single-link, non-grouped, non-count fetch over a source that
+  *     declares one row per uid in its node and edge views
+  *     ([[GraphSource.uidUnique]]) emits no `DISTINCT`/`GROUP BY` at all:
+  *     its rows are already unique (an FTS join goes through the
+  *     `Fts.matchSql` subquery, one row per uid), so the dedup would only cost a
+  *     shuffle — and without it Catalyst folds a fetch over driver-held
+  *     rows into a local relation that runs no Spark job.
   */
 object Fetch extends org.apache.spark.internal.Logging {
 
@@ -78,10 +85,12 @@ object Fetch extends org.apache.spark.internal.Logging {
     // measured: g09's SortAggregate-over-props + 2nd exchange removed).
     val groupIsCollectUid =
       groupTr.exists(_.trim.equalsIgnoreCase(s"${collect.alias}.uid"))
+    // one link over uid-unique views: every row is a distinct uid already
+    val rowsUnique = src.uidUnique && parsed.links.length == 1 && !args.count && !grouped
     // ORDER BY a NON-collected alias under DISTINCT (see the rewrite below)
     // — detected up front because it picks the SELECT's shape
     val orderTr = args.order.map(tr)
-    val distinctOrderRewrite = args.distinct && !args.count && args.group.isEmpty &&
+    val distinctOrderRewrite = args.distinct && !rowsUnique && !args.count && args.group.isEmpty &&
       orderTr.exists(o => referencedAliases(o).exists(_ != collect.alias))
     // Non-grouped DISTINCT with no extras ≡ GROUP BY the collected uid
     // (r17 opt): the projected row is the collected VIEW row, unique per
@@ -92,7 +101,7 @@ object Fetch extends org.apache.spark.internal.Logging {
     // two anti-join sides each shuffled full node rows to answer a
     // uid-only question). Extras can reference other aliases (non-
     // uid-functional), so the rewrite only fires without them.
-    val uidDistinctRewrite = args.distinct && !args.count && !grouped &&
+    val uidDistinctRewrite = args.distinct && !rowsUnique && !args.count && !grouped &&
       !distinctOrderRewrite && collect.extras.isEmpty
     if (args.count) {
       val d = if (args.distinct) "DISTINCT " else ""
@@ -115,7 +124,7 @@ object Fetch extends org.apache.spark.internal.Logging {
         s"${tr(exprParams(name))} AS $name"
       }
       val d = if (args.distinct && !(grouped && groupIsCollectUid) &&
-                 !uidDistinctRewrite) "DISTINCT "
+                 !uidDistinctRewrite && !rowsUnique) "DISTINCT "
               else ""
       sb.append("SELECT ").append(d).append((core ++ extras).mkString(", "))
     }

@@ -81,9 +81,14 @@ class MoreEngineSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterEach 
   test("DEBUG returns SQL without executing (graphydb.py:977-978)") {
     val sql = g.fetchSql("(n)", Seq("n.data.n > :min"), Map("min" -> 1))
     assert(sql.contains("get_json_object(n.props, '$.n') > 1"))
-    // DISTINCT-without-extras compiles to the equivalent GROUP BY uid form
-    // (rows are unique per collected uid; see Fetch.sql).
-    assert(sql.contains("GROUP BY n.uid"))
+    // one link over MemGraph's uid-keyed views: rows are unique as they
+    // stand, so no dedup is emitted (see Fetch.sql)
+    assert(!sql.contains("GROUP BY") && !sql.contains("DISTINCT"), sql)
+    assert(sql.startsWith("SELECT n.uid AS uid, n.kind AS kind,"), sql)
+    // a chain dedups: DISTINCT-without-extras compiles to the equivalent
+    // GROUP BY uid form (rows are unique per collected uid)
+    val chain = g.fetchSql("(n) -(e)> [m]", Seq("n.data.n > :min"), Map("min" -> 1))
+    assert(chain.contains("GROUP BY m.uid"), chain)
   }
 
   test("renew discards local edits, keeps _-prefixed keys (graphydb.py:1150-1163)") {

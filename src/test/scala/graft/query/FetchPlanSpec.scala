@@ -1,0 +1,139 @@
+package graft.query
+
+import graft.SparkSpec
+import graft.engine.{MemGraph, Node, ViewGraph}
+import org.apache.spark.grafttest.ListenerDrain.drain
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Plan shape of fetches over MemGraph, whose views hold one row per uid:
+  * a single-link fetch plans no dedup and runs no Spark job, a chain still
+  * dedups, a read re-registers only the views whose snapshot changed, and
+  * the SQL over any other source is unchanged. */
+class FetchPlanSpec extends AnyFunSuite with SparkSpec {
+
+  private lazy val g: MemGraph = {
+    val g = MemGraph(spark)
+    g.resetFts(nodeFields = Seq("name"))
+    val names = Seq("apple pie", "apple apple tart", "pear", "apple apple apple", "plum")
+    val ps = names.zipWithIndex.map { case (n, i) =>
+      g.node("Person", "name" -> n, "age" -> (20 + 10 * i)).save().updatefts("name" -> n)
+    }
+    val co = g.node("Company", "name" -> "Acme").save()
+    ps.foreach(p => g.edge(p, "WorksAt", co).save())
+    // parallel edges: p0 knows p1 twice
+    g.edge(ps(0), "Knows", ps(1)).save()
+    g.edge(ps(0), "Knows", ps(1)).save()
+    g
+  }
+
+  private def uid(name: String): String =
+    g.fetchN("(n)", Seq("n.data.name = :name"), params = Map("name" -> name)).one.get.uid
+
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val result = body
+      drain(spark.sparkContext)
+      (result, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def exchanges(df: DataFrame): Int =
+    df.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }.size
+
+  test("(n:Person) with a where clause: no Exchange, 0 Spark jobs") {
+    val df = Fetch.df(g, Fetch.Args("(n:Person)", Seq("CAST(n.data.age AS INT) >= :lo"),
+      params = Map("lo" -> 40)))
+    assert(exchanges(df) == 0, df.queryExecution.executedPlan.toString)
+    val (rows, jobs) = jobsOf(df.collect())
+    assert(jobs == 0, s"ran $jobs Spark jobs")
+    assert(rows.map(_.getAs[String]("uid")).toSet ==
+      Set("pear", "apple apple apple", "plum").map(uid))
+  }
+
+  test("<(e)- with an enduid predicate: no Exchange, 0 Spark jobs") {
+    val co = uid("Acme")
+    val df = Fetch.df(g, Fetch.Args("<(e)-", Seq(s"e.enduid = '$co'")))
+    assert(exchanges(df) == 0, df.queryExecution.executedPlan.toString)
+    val (rows, jobs) = jobsOf(df.collect())
+    assert(jobs == 0, s"ran $jobs Spark jobs")
+    assert(rows.length == 5 && rows.map(_.getAs[String]("uid")).distinct.length == 5)
+    assert(g.getuid(co).get.asInstanceOf[Node].inE().size == 5)
+  }
+
+  test("ORDER BY the FTS score on a single link ranks by score") {
+    val got = g.fetchN("(n:Person)", order = Some("n_fts.score DESC"),
+      params = Map("n_fts" -> "apple")).toSeq.map(_("name"))
+    assert(got == Seq("apple apple apple", "apple apple tart", "apple pie"))
+  }
+
+  test("a read after a node-only write re-registers only the nodes view") {
+    val catalog = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.catalog
+    val views = Seq(g.nodesView, g.edgesView, g.nodeFtsView, g.edgeFtsView)
+    def registered = views.map(v => catalog.getRawTempView(v).get)
+    g.fetchN("(n:Person)")
+    val before = registered
+    val p = g.getuid(uid("plum")).get
+    p("age") = 61
+    p.save()
+    assert(g.fetchN("(n:Person)", Seq("CAST(n.data.age AS INT) = 61")).size == 1)
+    val after = registered
+    assert(!(after.head eq before.head), "nodes view must be re-registered")
+    views.indices.tail.foreach { i =>
+      assert(after(i) eq before(i), s"${views(i)} must stay registered as it was")
+    }
+    g.undo()
+  }
+
+  test("chains of two or more links still dedup, over parallel edges too") {
+    val (a, b) = (uid("apple pie"), uid("apple apple tart"))
+    val sql = Fetch.sql(g, Fetch.Args("(a) -(e:Knows)> [b]"))
+    assert(sql.contains("GROUP BY b.uid"), sql)
+    assert(g.fetchN("(a) -(e:Knows)> [b]").toSeq.map(_.uid) == Seq(b))
+    assert(g.fetchN("[a] -(e:Knows)> (b)").toSeq.map(_.uid) == Seq(a))
+    assert(g.fetchN("[a] -(e:Knows)> (b) -(w:WorksAt)> (c:Company)").toSeq.map(_.uid) == Seq(a))
+    assert(Fetch.df(g, Fetch.Args("(a) -(e:Knows)> [b]", distinct = false)).count() == 2)
+  }
+
+  test("Fetch.sql over a ViewGraph is unchanged") {
+    val vg = new ViewGraph(spark, g.nodes, g.edges, Some(g.nodeFts), Some(g.edgeFts))
+    val (n, e, nf) = (vg.nodesView, vg.edgesView, vg.nodeFtsView)
+    val single = Fetch.sql(vg, Fetch.Args("(n:Person)", Seq("n.data.age > :a"),
+      params = Map("a" -> 30)))
+    assert(single ==
+      s"""SELECT n.uid AS uid, max(n.kind) AS kind, max(n.ctime) AS ctime, max(n.mtime) AS mtime, max(n.props) AS props
+         |FROM $n AS n
+         |WHERE (get_json_object(n.props, '$$.age') > 30) AND n.kind = 'Person'
+         |GROUP BY n.uid""".stripMargin)
+    val edges = Fetch.sql(vg, Fetch.Args("<(e)-", Seq("e.enduid = 'x'")))
+    assert(edges ==
+      s"""SELECT e.uid AS uid, max(e.kind) AS kind, max(e.startuid) AS startuid, max(e.enduid) AS enduid, max(e.ctime) AS ctime, max(e.mtime) AS mtime, max(e.props) AS props
+         |FROM $e AS e
+         |WHERE (e.enduid = 'x')
+         |GROUP BY e.uid""".stripMargin)
+    val fts = Fetch.sql(vg, Fetch.Args("(n:Person)", order = Some("n_fts.score DESC"),
+      params = Map("n_fts" -> "apple")))
+    assert(fts ==
+      s"""SELECT n.uid AS uid, n.kind AS kind, n.ctime AS ctime, n.mtime AS mtime, n.props AS props
+         |FROM $n AS n
+         |JOIN (SELECT uid, CAST(SUM(c) AS BIGINT) AS score
+         |FROM (SELECT uid, COUNT(*) AS c FROM $nf WHERE term = 'apple' GROUP BY uid) AS parts GROUP BY uid) AS n_fts ON n.uid = n_fts.uid
+         |WHERE n.kind = 'Person'
+         |GROUP BY 1, 2, 3, 4, 5
+         |ORDER BY max(n_fts.score) DESC""".stripMargin)
+    // and over the ViewGraph the FTS-ordered fetch ranks the same way
+    val ranked = Fetch.df(vg, Fetch.Args("(n:Person)", order = Some("n_fts.score DESC"),
+      params = Map("n_fts" -> "apple"))).collect().map(_.getAs[String]("uid")).toSeq
+    assert(ranked == Seq("apple apple apple", "apple apple tart", "apple pie").map(uid))
+  }
+}
