@@ -387,8 +387,7 @@ object Layout {
       s"generation $gen of $path is not retained (window: " +
         s"${retainedGens(path).mkString(", ")}) — raise keepGenerations " +
         "BEFORE the commits you want to travel to")
-    val man = readManifest(path, gen)
-    spanFilesLive(spark, path, man, man.spans)
+    liveScan(spark, path, gen, readManifest(path, gen))._1
   }
 
   /** [[zorderScan]] against a RETAINED generation: the same driver-side
@@ -403,8 +402,8 @@ object Layout {
       s.aMin <= aRange._2 && s.aMax >= aRange._1 &&
       s.bMin <= bRange._2 && s.bMax >= bRange._1)
     val base =
-      if (hit.isEmpty) spanFiles(spark, path, man.spans, man.mixedSchema).limit(0)
-      else spanFilesLive(spark, path, man, hit)
+      if (hit.isEmpty) spanFiles(spark, path, gen, man, man.spans).limit(0)
+      else spanFilesLive(spark, path, gen, man, hit)
     base.filter(col(man.colA).between(aRange._1, aRange._2) &&
       col(man.colB).between(bRange._1, bRange._2))
   }
@@ -761,74 +760,112 @@ object Layout {
     (gen, readManifest(path, gen))
   }
 
-  private def spanFiles(spark: SparkSession, path: String, spans: Seq[Span],
-      mixedSchema: Boolean = false): DataFrame = {
-    val root = java.nio.file.Paths.get(path).toAbsolutePath
-    val rd = if (mixedSchema) spark.read.option("mergeSchema", "true")
-      else spark.read
-    rd.parquet(spans.map(s => root.resolve(s.file).toString): _*)
+  /** PHYSICAL scan (tombstones not applied) of `man`'s files — the
+    * relation every z-table read plans over: a [[ManifestFileIndex]], so
+    * the planner's filters prune files by span, and no LIST or footer
+    * read happens while planning. The read schema is the one the
+    * generation persisted at commit time; only a mixed-schema or
+    * pre-schema generation reads footers (a Spark job) to get it. */
+  private[ops] def scanRelation(spark: SparkSession, path: String, gen: Long,
+      man: Manifest): (DataFrame, ManifestFileIndex) = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val fi = new ManifestFileIndex(path, man, gen)
+    val dataSchema = man.schemaJson.filter(_ => !man.mixedSchema)
+      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+      .getOrElse {
+        if (man.mixedSchema)
+          spark.read.option("mergeSchema", "true").parquet(fi.inputFiles: _*).schema
+        else spark.read.parquet(fi.inputFiles.head).schema
+      }
+    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      location = fi,
+      partitionSchema = new StructType(),
+      dataSchema = dataSchema,
+      bucketSpec = None,
+      fileFormat =
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+      options = if (man.mixedSchema) Map("mergeSchema" -> "true") else Map.empty
+    )(classic)
+    (classic.baseRelationToDataFrame(relation), fi)
   }
+
+  /** [[scanRelation]] over a span subset of generation `gen`. */
+  private def spanFiles(spark: SparkSession, path: String, gen: Long,
+      man: Manifest, spans: Seq[Span]): DataFrame =
+    scanRelation(spark, path, gen, man.copy(spans = spans))._1
 
   private def basenameOf(file: String): String =
     java.nio.file.Paths.get(file).getFileName.toString
 
-  /** The generation's deletion-vector rows — (fname, pos) tombstones —
-    * or None when the generation has none. */
-  private def dvDF(spark: SparkSession, path: String,
-      man: Manifest): Option[DataFrame] =
-    man.dv.map { rel =>
-      spark.read.parquet(
-        java.nio.file.Paths.get(path).toAbsolutePath.resolve(rel).toString)
-    }
+  /** Explicit schema of a deletion-vector file: never inferred, so reading
+    * one plans no footer job. */
+  private val DvSchema = "fname STRING, pos BIGINT"
 
-  /** LIVE read of a span subset: physical rows minus the generation's
-    * deletion-vector tombstones. Files without tombstones (`dvRows == 0`,
-    * the common case) take the plain scan path — no metadata column, no
-    * join; only tombstoned files read with `_metadata.row_index` and
-    * anti-join the (broadcast) tombstone set for exactly those files.
-    * Positions are parquet physical row indexes, stable because data
-    * files are immutable — the Iceberg v2 positional-delete / Delta
-    * deletion-vector shape. */
-  private def spanFilesLive(spark: SparkSession, path: String, man: Manifest,
-      spans: Seq[Span]): DataFrame =
-    spanFilesLiveNamed(spark, path, man, spans).drop("_live_fname")
-
-  /** [[spanFilesLive]] keeping a `_live_fname` basename column, stamped
-    * at SCAN time in both branches — `input_file_name()` is unreliable
-    * after joins/unions, so callers that need per-row file identity
-    * ([[readWithFid]]) take it from here instead of recomputing. */
-  private def spanFilesLiveNamed(spark: SparkSession, path: String,
-      man: Manifest, spans: Seq[Span]): DataFrame = {
-    val root = java.nio.file.Paths.get(path).toAbsolutePath
-    val rd = if (man.mixedSchema) spark.read.option("mergeSchema", "true")
-      else spark.read
-    def named(ss: Seq[Span]) =
-      rd.parquet(ss.map(s => root.resolve(s.file).toString): _*)
-        .withColumn("_live_fname", element_at(split(input_file_name(), "/"), -1))
-    val tomb = spans.filter(_.dvRows > 0)
-    if (tomb.isEmpty || man.dv.isEmpty) return named(spans)
-    val clean = spans.filter(_.dvRows == 0)
-    val tombNames = tomb.map(s => basenameOf(s.file))
-    val dv = dvDF(spark, path, man).get
-      .filter(col("fname").isin(tombNames: _*))
-      .withColumnRenamed("fname", "_dv_fname")
-      .withColumnRenamed("pos", "_dv_pos")
-    val tombLive = named(tomb)
-      .withColumn("_pos", col("_metadata.row_index"))
-      .join(broadcast(dv),
-        col("_live_fname") === col("_dv_fname") && col("_pos") === col("_dv_pos"),
-        "left_anti")
-      .drop("_pos")
-    if (clean.isEmpty) tombLive
-    else named(clean).unionByName(tombLive, allowMissingColumns = true)
+  /** The LIVE-row predicate of `man`'s files: None when none of them
+    * carries a tombstone, else a deterministic filter over the scan's own
+    * `_metadata.file_name` / `_metadata.row_index`. The generation's DV
+    * is read on the DRIVER (parquet-hadoop, no Spark job), kept only for
+    * the tombstoned files' basenames (carried DV files hold rows of files
+    * rewritten since, which must not hide rows of the rewrite), and its
+    * sorted positions ship in a broadcast variable, so the plan stays
+    * small whatever the DV size. Rows of untombstoned files pass the
+    * first disjunct without a lookup. Being deterministic, the filter
+    * lets the caller's own predicates push into the scan and prune files,
+    * exactly as over a clean generation. Positions are parquet physical
+    * row indexes, stable because data files are immutable — the Iceberg
+    * v2 positional-delete / Delta deletion-vector shape. */
+  private[ops] def liveFilter(spark: SparkSession, path: String,
+      man: Manifest): Option[Column] = {
+    val tomb = man.spans.filter(_.dvRows > 0).map(s => basenameOf(s.file)).toSet
+    if (tomb.isEmpty || man.dv.isEmpty) return None
+    val dvFile = new org.apache.hadoop.fs.Path(
+      java.nio.file.Paths.get(path).toAbsolutePath.resolve(man.dv.get).toUri)
+    val acc = scala.collection.mutable.HashMap.empty[String,
+      scala.collection.mutable.ArrayBuilder.ofLong]
+    val reader = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), dvFile)
+      .withConf(spark.sparkContext.hadoopConfiguration).build()
+    try {
+      var g = reader.read()
+      while (g != null) {
+        val f = g.getString("fname", 0)
+        if (tomb(f))
+          acc.getOrElseUpdate(f, new scala.collection.mutable.ArrayBuilder.ofLong)
+            .addOne(g.getLong("pos", 0))
+        g = reader.read()
+      }
+    } finally reader.close()
+    val positions = acc.map { case (f, b) =>
+      val a = b.result(); java.util.Arrays.sort(a); f -> a
+    }.toMap
+    val bc = spark.sparkContext.broadcast(positions)
+    val live = udf((f: String, pos: Long) =>
+      bc.value.get(f).forall(a => java.util.Arrays.binarySearch(a, pos) < 0))
+    val fname = col("_metadata.file_name")
+    Some(!fname.isin(tomb.toSeq.sorted: _*) || live(fname, col("_metadata.row_index")))
   }
+
+  /** LIVE read of `man`'s files: [[scanRelation]] filtered by
+    * [[liveFilter]] — one relation and one filter, whether or not the
+    * generation carries tombstones. */
+  private[ops] def liveScan(spark: SparkSession, path: String, gen: Long,
+      man: Manifest): (DataFrame, ManifestFileIndex) = {
+    val (base, fi) = scanRelation(spark, path, gen, man)
+    (liveFilter(spark, path, man).fold(base)(base.filter), fi)
+  }
+
+  /** [[liveScan]] of a span subset of generation `gen`. */
+  private def spanFilesLive(spark: SparkSession, path: String, gen: Long,
+      man: Manifest, spans: Seq[Span]): DataFrame =
+    liveScan(spark, path, gen, man.copy(spans = spans))._1
 
   /** Read the CURRENT committed generation (landing rows are invisible
     * until maintained — snapshot semantics; use [[zorderReadWithLanding]]
     * for read-your-appends). */
   def zorderRead(spark: SparkSession, path: String): DataFrame = {
-    val (_, man) = currentManifest(path)
-    spanFilesLive(spark, path, man, man.spans)
+    val (gen, man) = currentManifest(path)
+    liveScan(spark, path, gen, man)._1
   }
 
   /** Span-pruned scan of the CURRENT generation: the reader-side payoff
@@ -841,13 +878,13 @@ object Layout {
     * Returns an empty frame of the right schema when nothing matches. */
   def zorderScan(spark: SparkSession, path: String,
       aRange: (Long, Long), bRange: (Long, Long)): DataFrame = {
-    val (_, man) = currentManifest(path)
+    val (gen, man) = currentManifest(path)
     val hit = man.spans.filter(s =>
       s.aMin <= aRange._2 && s.aMax >= aRange._1 &&
       s.bMin <= bRange._2 && s.bMax >= bRange._1)
     val base =
-      if (hit.isEmpty) spanFiles(spark, path, man.spans, man.mixedSchema).limit(0)
-      else spanFilesLive(spark, path, man, hit)
+      if (hit.isEmpty) spanFiles(spark, path, gen, man, man.spans).limit(0)
+      else spanFilesLive(spark, path, gen, man, hit)
     base.filter(col(man.colA).between(aRange._1, aRange._2) &&
       col(man.colB).between(bRange._1, bRange._2))
   }
@@ -976,30 +1013,28 @@ object Layout {
     else
       call_function("searchsorted", lit(cuts.toArray), zCol)
 
-  /** Read a subset of a manifest's files with their span index attached:
-    * a tiny broadcast basename→fid map joined against the basename
-    * `input_file_name` exposes. Basenames are unique per table by
+  /** Read a subset of generation `gen`'s files with their span index
+    * attached: a literal basename→fid map looked up with the scan's own
+    * `_metadata.file_name` (no join). Basenames are unique per table by
     * construction ([[commitRewrite]] generation-qualifies every rewrite
     * name; init part names carry job UUIDs) — the require makes a
-    * violation loud instead of silently fanning rows out through the
-    * join. LIVE rows only: tombstoned positions of deletion-vectored
-    * files anti-join out here, so every rewrite path (maintain / delete /
-    * upsert / bin-pack) MATERIALIZES the affected files' tombstones —
-    * a rewritten file never resurrects a vector-deleted row. */
-  private def readWithFid(spark: SparkSession, path: String, man: Manifest,
-      idx: Seq[Int], z: Column): DataFrame = {
-    import spark.implicits._
+    * violation loud instead of silently routing rows to the wrong file.
+    * LIVE rows only: tombstoned positions of deletion-vectored files
+    * filter out here, so every rewrite path (maintain / delete / upsert /
+    * bin-pack) MATERIALIZES the affected files' tombstones — a rewritten
+    * file never resurrects a vector-deleted row. */
+  private def readWithFid(spark: SparkSession, path: String, gen: Long,
+      man: Manifest, idx: Seq[Int], z: Column): DataFrame = {
     val spans = man.spans
-    val root = java.nio.file.Paths.get(path).toAbsolutePath
     val names = idx.map(i => basenameOf(spans(i).file))
     require(names.distinct.size == names.size,
       s"duplicate data-file basenames in the manifest at $path — " +
         "rebuild the table via zorderCompact")
-    val nameToFid = names.zip(idx).toDF("_live_fname", "_fid")
-    spanFilesLiveNamed(spark, path, man, idx.map(spans))
-      .withColumn("_zm", z)
-      .join(broadcast(nameToFid), "_live_fname")
-      .drop("_live_fname")
+    // one projection: `_metadata` resolves only directly over the scan
+    spanFilesLive(spark, path, gen, man, idx.map(spans)).select(col("*"),
+      z.as("_zm"),
+      element_at(typedLit(names.zip(idx).toMap), col("_metadata.file_name"))
+        .as("_fid"))
   }
 
   /** Shared commit tail for the rewrite family (maintain / delete /
@@ -1157,7 +1192,7 @@ object Layout {
     // or omit non-key columns); bounds stay frozen (the manifest copy
     // keeps them)
     val oldRows = if (affected.isEmpty) None
-      else Some(readWithFid(spark, path, man, affected, z))
+      else Some(readWithFid(spark, path, cur, man, affected, z))
     val merged = oldRows
       .map(_.unionByName(newRows, allowMissingColumns = true))
       .getOrElse(newRows)
@@ -1165,7 +1200,7 @@ object Layout {
     // from the committed files' (rewritten files carry the merged schema,
     // carried files keep theirs); a compact heals back to homogeneous
     val mixedNow = man.mixedSchema || {
-      val curNames = spanFiles(spark, path, man.spans.take(1))
+      val curNames = spanFiles(spark, path, cur, man, man.spans.take(1))
         .schema.fieldNames.toSet
       newRows.drop("_zm", "_fid").schema.fieldNames.toSet != curNames
     }
@@ -1197,7 +1232,7 @@ object Layout {
     val man = readManifest(path, cur)
     val landing = landingFiles(path)
     val all = {
-      val base = spanFilesLive(spark, path, man, man.spans)
+      val base = liveScan(spark, path, cur, man)._1
       if (landing.isEmpty) base
       else base.unionByName(
         spark.read.option("mergeSchema", "true")
@@ -1272,7 +1307,7 @@ object Layout {
     if (hitIdx.isEmpty) return (0L, 0, spans.size)
     val z = zValue(scale16(col(man.colA), man.aLo, man.aHi),
       scale16(col(man.colB), man.bLo, man.bHi))
-    val matched = readWithFid(spark, path, man, hitIdx, z)
+    val matched = readWithFid(spark, path, cur, man, hitIdx, z)
       .filter(pred).groupBy("_fid").agg(count(lit(1)))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // ≤ hit files
     val affected = hitIdx.filter(matched.contains).sorted
@@ -1282,7 +1317,7 @@ object Layout {
     // counting pass read the wider span-hit set once). NULL-key rows make
     // `pred` NULL, not false — coalesce keeps them, or they would vanish
     // from the rewritten files without ever counting as deleted.
-    val survivors = readWithFid(spark, path, man, affected, z)
+    val survivors = readWithFid(spark, path, cur, man, affected, z)
       .filter(!coalesce(pred, lit(false)))
     commitRewrite(spark, path, cur, man, affected, survivors, "deleted",
       requireFilePerFid = false, consumed = Seq.empty)
@@ -1347,7 +1382,7 @@ object Layout {
       val keyCols = Seq(man.colA, man.colB)
       val keys = batch.select(man.colA, man.colB).distinct()
       val oldRows = if (affected.isEmpty) None
-        else Some(readWithFid(spark, path, man, affected, z))
+        else Some(readWithFid(spark, path, cur, man, affected, z))
       val nReplaced = oldRows
         .map(_.join(broadcast(keys), keyCols, "left_semi").count())
         .getOrElse(0L)
@@ -1357,7 +1392,7 @@ object Layout {
         .getOrElse(batch)
       // schema evolution through upsert, same rule as maintain
       val mixedNow = man.mixedSchema || {
-        val curNames = spanFiles(spark, path, man.spans.take(1))
+        val curNames = spanFiles(spark, path, cur, man, man.spans.take(1))
           .schema.fieldNames.toSet
         batch.drop("_zm", "_fid").schema.fieldNames.toSet != curNames
       }
@@ -1913,8 +1948,8 @@ object Layout {
   private def pointLookupAny(spark: SparkSession, path: String,
       keyCol: String, values: Seq[Any], wantDom: String,
       residual: Column): DataFrame = {
-    val (cur, man) = currentManifest(path)
-    val hit = readBloom(path, cur, keyCol).filter(_.domain == wantDom) match {
+    val (gen, man) = currentManifest(path)
+    val hit = readBloom(path, gen, keyCol).filter(_.domain == wantDom) match {
       case None => man.spans
       case Some(b) =>
         val probes = values.distinct.flatMap(v => probeFor(b, v))
@@ -1922,8 +1957,8 @@ object Layout {
           bloomAdmits(b, s.file, p)))
     }
     val base =
-      if (hit.isEmpty) spanFiles(spark, path, man.spans, man.mixedSchema).limit(0)
-      else spanFilesLive(spark, path, man, hit)
+      if (hit.isEmpty) spanFiles(spark, path, gen, man, man.spans).limit(0)
+      else spanFilesLive(spark, path, gen, man, hit)
     base.filter(residual)
   }
 
@@ -1965,14 +2000,14 @@ object Layout {
     * answers purely from the manifest. */
   def zorderCountBand(spark: SparkSession, path: String,
       aRange: (Long, Long), bRange: (Long, Long)): Long = {
-    val (_, man) = currentManifest(path)
+    val (gen, man) = currentManifest(path)
     val (covered, boundary) = splitCovered(man.spans, aRange, bRange)
     // a tombstoned row is deleted wherever it sits, so a fully-covered
     // file contributes its LIVE count (physical minus tombstones)
     val metaRows = covered.map(s => s.rows - s.dvRows).sum
     val scanned =
       if (boundary.isEmpty) 0L
-      else spanFilesLive(spark, path, man, boundary)
+      else spanFilesLive(spark, path, gen, man, boundary)
         .filter(col(man.colA).between(aRange._1, aRange._2) &&
           col(man.colB).between(bRange._1, bRange._2))
         .count()
@@ -2031,13 +2066,13 @@ object Layout {
     val z = zValue(scale16(col(man.colA), man.aLo, man.aHi),
       scale16(col(man.colB), man.bLo, man.bHi))
     val pred = col(keyCol).cast("long").isin(values: _*)
-    val matched = readWithFid(spark, path, man, candIdx, z)
+    val matched = readWithFid(spark, path, cur, man, candIdx, z)
       .filter(pred).groupBy("_fid").agg(count(lit(1)))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val affected = candIdx.filter(matched.contains).sorted
     if (affected.isEmpty) return (0L, 0, spans.size)
     val nDeleted = matched.values.sum
-    val survivors = readWithFid(spark, path, man, affected, z)
+    val survivors = readWithFid(spark, path, cur, man, affected, z)
       .filter(!coalesce(pred, lit(false))) // NULL keys never match: kept
     commitRewrite(spark, path, cur, man, affected, survivors, "keydel",
       requireFilePerFid = false, consumed = Seq.empty)
@@ -2053,9 +2088,9 @@ object Layout {
   // specs) writes TOMBSTONES instead: one parquet of (file basename,
   // physical row position) per generation, referenced from the manifest
   // header, with a per-span tombstone counter so readers know which
-  // files even need the anti-join. A vectored delete writes ONLY the
+  // files even need a position lookup. A vectored delete writes ONLY the
   // tombstones — zero data files touched, cost O(deleted rows) — and
-  // every reader applies them ([[spanFilesLive]]); every rewrite path
+  // every reader applies them ([[liveFilter]]); every rewrite path
   // materializes them for the files it rewrites (live rows only, fresh
   // basename), so DVs drain out of the table through normal maintenance,
   // or all at once through [[zorderDvMaterialize]] — the PHYSICAL purge
@@ -2112,26 +2147,20 @@ object Layout {
     val candIdx = candIdxOf(man)
     if (candIdx.isEmpty) return (0L, 0)
     val root = java.nio.file.Paths.get(path).toAbsolutePath
-    val rd = if (man.mixedSchema) spark.read.option("mergeSchema", "true")
-      else spark.read
-    // physical candidate read with per-row file identity + position;
-    // NULL-key rows make a filter pred NULL (→ never tombstoned, kept
-    // like the copy-on-write delete's survivors) and never equal a
+    // LIVE candidate read with per-row file identity + position: the live
+    // filter drops positions an earlier vectored delete already
+    // tombstoned, so repeat deletes are exact no-ops and counts stay
+    // exact. NULL-key rows make a filter pred NULL (→ never tombstoned,
+    // kept like the copy-on-write delete's survivors) and never equal a
     // semi-join key
-    val scan = rd
-      .parquet(candIdx.map(i => root.resolve(spans(i).file).toString): _*)
-      .withColumn("_fname", element_at(split(input_file_name(), "/"), -1))
-      .withColumn("_pos", col("_metadata.row_index"))
-    val matches = matchOf(man, scan)
+    val scan = spanFilesLive(spark, path, cur, man, candIdx.map(spans))
+      .select(col("*"), col("_metadata.file_name").as("_fname"),
+        col("_metadata.row_index").as("_pos"))
+    // Persisted: the candidate scan feeds BOTH the counts collect and the
+    // DV write below — without the persist it would run twice, and the
+    // scan is the takedown's dominant cost.
+    val fresh = matchOf(man, scan)
       .select(col("_fname").as("fname"), col("_pos").as("pos"))
-    // exclude positions an earlier vectored delete already tombstoned —
-    // repeat deletes are exact no-ops and counts stay exact. Persisted:
-    // the candidate scan + anti-join feeds BOTH the counts collect and
-    // the DV write below — without the persist it would run twice, and
-    // the scan is the takedown's dominant cost.
-    val fresh = dvDF(spark, path, man)
-      .map(dv => matches.join(broadcast(dv), Seq("fname", "pos"), "left_anti"))
-      .getOrElse(matches)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
     val counts = fresh.groupBy("fname").agg(count(lit(1)))
@@ -2151,8 +2180,10 @@ object Layout {
         "delete its directory instead")
     val aliveTombNames = alive.filter(_.dvRows > 0).map(s => basenameOf(s.file))
     val dvNext = if (aliveTombNames.isEmpty) None else { // all tombstoned files went fully dead
-      val dvAll = dvDF(spark, path, man)
-        .map(_.unionByName(fresh)).getOrElse(fresh)
+      val dvAll = man.dv
+        .map(rel => spark.read.schema(DvSchema).parquet(root.resolve(rel).toString)
+          .unionByName(fresh))
+        .getOrElse(fresh)
         .filter(col("fname").isin(aliveTombNames: _*))
       val target = genDataDir(path, cur + 1).resolve(dvFileName(cur + 1))
       writeSingleParquet(dvAll, dataDir(path).resolve(s"g${cur + 1}.dvstaging"),
@@ -2341,7 +2372,7 @@ object Layout {
       val purged = affected.map(i => man.spans(i).dvRows).sum
       val z = zValue(scale16(col(man.colA), man.aLo, man.aHi),
         scale16(col(man.colB), man.bLo, man.bHi))
-      val merged = readWithFid(spark, path, man, affected, z)
+      val merged = readWithFid(spark, path, cur, man, affected, z)
       commitRewrite(spark, path, cur, man, affected, merged, "dvmat",
         requireFilePerFid = false, consumed = Seq.empty)
       (affected.length, purged)
@@ -2432,7 +2463,7 @@ object Layout {
         .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq)
       .getOrElse(
         if (from.spans.isEmpty) Seq.empty
-        else spanFiles(spark, path, from.spans.take(1), from.mixedSchema)
+        else spanFiles(spark, path, fromGen, from, from.spans.take(1))
           .columns.toSeq)
     require(!fromCols.contains("change_type"),
       "the table has a column named change_type — reserved by the CDC " +
@@ -2442,11 +2473,11 @@ object Layout {
     // 'delete' rows (shared-by-name files with churned tombstone counts
     // read on both sides; untouched rows cancel in the EXCEPT)
     val (fromSide, toSide, _) = changeSides(from, to)
-    def slice(man: Manifest, spans: Seq[Span]) =
-      if (spans.isEmpty) spanFiles(spark, path, from.spans, man.mixedSchema).limit(0)
-      else spanFilesLive(spark, path, man, spans)
-    val old0 = slice(from, fromSide)
-    val neu0 = slice(to, toSide)
+    def slice(gen: Long, man: Manifest, spans: Seq[Span]) =
+      if (spans.isEmpty) spanFiles(spark, path, fromGen, from, from.spans).limit(0)
+      else spanFilesLive(spark, path, gen, man, spans)
+    val old0 = slice(fromGen, from, fromSide)
+    val neu0 = slice(toGen, to, toSide)
     // schema evolution between the generations: conform both slices to
     // the united column set (null fill, by name) so the EXCEPT compares
     // rows — null-safe set semantics make a column added with null values
@@ -2512,7 +2543,7 @@ object Layout {
     graft.functions.GraftExtensions.register(spark)
     val z = zValue(scale16(col(man.colA), man.aLo, man.aHi),
       scale16(col(man.colB), man.bLo, man.bHi))
-    val merged = readWithFid(spark, path, man, affected, z)
+    val merged = readWithFid(spark, path, cur, man, affected, z)
       .withColumn("_fid",
         element_at(typedLit(leaderOf.map { case (k, v) => k -> v }), col("_fid")))
     commitRewrite(spark, path, cur, man, affected, merged, "binpack",

@@ -6,9 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo,
   Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull,
   LessThan, LessThanOrEqual, Literal, Or}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
-  PartitionDirectory}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
 /** CATALYST-INTEGRATED reads of a maintained z-order table: a manifest-backed
@@ -32,15 +30,17 @@ import org.apache.spark.sql.types.StructType
 object ZTable {
 
   /** The maintained table as a plain DataFrame whose scan prunes via the
-    * manifest. Deletion-vector tombstones apply transparently: one
-    * broadcast anti-join over the scan, with the DV filtered to the
-    * TOMBSTONED files' basenames (per-span dvRows counters), so the
-    * broadcast never carries stale rows a rewrite already materialized;
-    * every row pays one broadcast-hash probe (the single-relation price —
-    * [[Layout.zorderRead]] splits clean files onto a join-free plan when
-    * that matters more than SQL composability). Filters on data columns
-    * still push into the scan through the join's streamed side. Snapshot
-    * semantics: the CURRENT generation at call time. */
+    * manifest. Deletion-vector tombstones apply transparently as one
+    * deterministic filter over the scan's own `_metadata.file_name` /
+    * `_metadata.row_index` ([[Layout.liveFilter]]): the DV is read on the
+    * driver and restricted to the TOMBSTONED files' basenames (per-span
+    * dvRows counters), so a rewrite's fresh files never meet stale DV
+    * rows, and only rows of tombstoned files pay a position lookup. The
+    * filter blocks nothing: filters on data columns still push into the
+    * scan and prune files, so a read over a tombstoned generation plans
+    * like one over a clean generation, and building the DataFrame starts
+    * no Spark job. Snapshot semantics: the CURRENT generation at call
+    * time. */
   def dataFrame(spark: SparkSession, path: String): DataFrame =
     dataFrameWithIndex(spark, path)._1
 
@@ -51,7 +51,7 @@ object ZTable {
     require(Layout.retainedGens(path).contains(gen),
       s"generation $gen of $path is not retained (window: " +
         s"${Layout.retainedGens(path).mkString(", ")})")
-    fromManifest(spark, path, Layout.readManifest(path, gen), gen)._1
+    Layout.liveScan(spark, path, gen, Layout.readManifest(path, gen))._1
   }
 
   /** [[dataFrame]] plus its [[ManifestFileIndex]], for callers auditing
@@ -59,61 +59,7 @@ object ZTable {
   def dataFrameWithIndex(spark: SparkSession,
       path: String): (DataFrame, ManifestFileIndex) = {
     val (gen, man) = Layout.currentManifest(path)
-    fromManifest(spark, path, man, gen)
-  }
-
-  private def fromManifest(spark: SparkSession, path: String,
-      man: Layout.Manifest, gen: Long): (DataFrame, ManifestFileIndex) = {
-    val fi = new ManifestFileIndex(path, man, gen)
-    // v2+ manifests persist the homogeneous generation's schema at commit
-    // time — the read schema builds DRIVER-SIDE with zero parquet footer
-    // fetches (at 100k files on object storage, footer HEAD+GETs are the
-    // planning budget). Mixed generations and pre-schema manifests fall
-    // back to footer reads.
-    val dataSchema = man.schemaJson.filter(_ => !man.mixedSchema)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
-      .getOrElse {
-        if (man.mixedSchema)
-          spark.read.option("mergeSchema", "true").parquet(fi.inputFiles: _*).schema
-        else spark.read.parquet(fi.inputFiles.head).schema
-      }
-    val relation = HadoopFsRelation(
-      location = fi,
-      partitionSchema = new StructType(),
-      dataSchema = dataSchema,
-      bucketSpec = None,
-      fileFormat =
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-      options =
-        if (man.mixedSchema) Map("mergeSchema" -> "true") else Map.empty
-    )(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-    val base = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .baseRelationToDataFrame(relation)
-    val tomb = man.spans.filter(_.dvRows > 0)
-    val df = if (tomb.isEmpty || man.dv.isEmpty) base
-    else {
-      // deletion-vector anti-join over the scan: same live contract as
-      // Layout.spanFilesLive, expressed against the single relation.
-      // The DV is FILTERED to tombstoned basenames — carried DV files
-      // accumulate rows for rewritten (renamed) files until a
-      // materialize, and those must not bloat the broadcast
-      val root = java.nio.file.Paths.get(path).toAbsolutePath
-      val tombNames = tomb.map(s =>
-        java.nio.file.Paths.get(s.file).getFileName.toString)
-      val dv = spark.read.parquet(root.resolve(man.dv.get).toString)
-        .filter(col("fname").isin(tombNames: _*))
-        .withColumnRenamed("fname", "_dv_fname")
-        .withColumnRenamed("pos", "_dv_pos")
-      base
-        .withColumn("_fname", element_at(split(input_file_name(), "/"), -1))
-        .withColumn("_pos", col("_metadata.row_index"))
-        .join(broadcast(dv),
-          col("_fname") === col("_dv_fname") && col("_pos") === col("_dv_pos"),
-          "left_anti")
-        .drop("_fname", "_pos")
-    }
-    (df, fi)
+    Layout.liveScan(spark, path, gen, man)
   }
 }
 

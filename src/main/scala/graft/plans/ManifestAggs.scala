@@ -34,8 +34,8 @@ import graft.ops.ManifestFileIndex
   * Any filter, grouping key, DISTINCT, filter clause, other aggregate, or
   * uncovered column blocks the fold; so does a generation carrying
   * deletion-vector tombstones (tombstoned rows may hold the extremes, and
-  * the physical count overcounts — that plan shape reads through an
-  * anti-join and never matches here, but the index check backstops it).
+  * the physical count overcounts — that plan shape reads through a
+  * Filter and never matches here, but the index check backstops it).
   *
   * Registration: `ManifestAggs.enable(spark)` appends the rule to
   * `spark.experimental.extraOptimizations` (idempotent; `disable`

@@ -1244,6 +1244,23 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
     val (df4, fi4) = ZTable.dataFrameWithIndex(spark, dir)
     assert(df4.filter(col("a") > 1000L).count() == 0L && fi4.lastListed == 0)
 
+    // a band over a tile the delete below leaves untouched, read before
+    // any tombstone exists: the plan and job count a tombstoned
+    // generation's read must match
+    import org.apache.spark.grafttest.ListenerDrain.jobsDuring
+    def exchanges(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collect {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }.size
+    def tileRead() = jobsDuring(spark.sparkContext) {
+      val (df, fi) = ZTable.dataFrameWithIndex(spark, dir)
+      (df.filter(col("a").between(40, 47) && col("b").between(40, 47)), fi)
+    }
+    val ((cleanTile, _), _) = tileRead()
+    val (cleanCount, cleanJobs) =
+      jobsDuring(spark.sparkContext)(cleanTile.count())
+    assert(cleanCount == 64L)
+
     // deletion vectors apply through the relation: vector-delete the
     // corner, re-derive the table, same band now counts zero
     val (deleted, _) = Layout.zorderDeleteVectored(spark, dir, (4L, 11L), (4L, 11L))
@@ -1257,6 +1274,30 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
       .groupBy("a").agg(count(lit(1)).as("n"))
     val got = df5.groupBy("a").agg(count(lit(1)).as("n"))
     assert(got.except(want).count() == 0 && want.except(got).count() == 0)
+
+    // the tombstones filter the scan without blocking it: over the
+    // tombstoned generation, building the frame starts no Spark job, the
+    // untouched tile still lists 1 of 16 files with its band pushed into
+    // the parquet scan, the plan has no Exchange, and the read starts no
+    // more jobs than it did before the delete
+    val ((tile, tileFi), buildJobs) = tileRead()
+    assert(buildJobs == 0, s"building the frame started $buildJobs Spark jobs")
+    val (tileCount, tileJobs) = jobsDuring(spark.sparkContext)(tile.count())
+    assert(tileCount == 64L)
+    assert(tileFi.lastListed == 1,
+      s"untouched tile must list 1 of 16 files, listed ${tileFi.lastListed}")
+    val tilePlan = tile.queryExecution.executedPlan.toString
+    assert(tilePlan.contains("PushedFilters") &&
+      tilePlan.contains("GreaterThanOrEqual(a,40)"),
+      s"tile band must push into the scan:\n$tilePlan")
+    assert(exchanges(tile) == 0, s"no Exchange expected:\n$tilePlan")
+    assert(tileJobs <= cleanJobs,
+      s"tombstoned read ran $tileJobs jobs, the clean read $cleanJobs")
+    // the explicit band API plans the same way
+    val scanned = Layout.zorderScan(spark, dir, (0L, 15L), (0L, 15L))
+    assert(scanned.count() == 256L - 64)
+    assert(exchanges(scanned) == 0,
+      s"no Exchange expected:\n${scanned.queryExecution.executedPlan}")
   }
 
   test("zorderMirror: replication ships only changed files, replica byte-faithful through maintain/DV-delete/time-travel, repeat no-op") {

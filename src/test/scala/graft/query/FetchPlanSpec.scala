@@ -2,7 +2,7 @@ package graft.query
 
 import graft.SparkSpec
 import graft.engine.{MemGraph, Node, ViewGraph}
-import org.apache.spark.grafttest.ListenerDrain.drain
+import org.apache.spark.grafttest.ListenerDrain.jobsDuring
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,21 +31,7 @@ class FetchPlanSpec extends AnyFunSuite with SparkSpec {
   private def uid(name: String): String =
     g.fetchN("(n)", Seq("n.data.name = :name"), params = Map("name" -> name)).one.get.uid
 
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val result = body
-      drain(spark.sparkContext)
-      (result, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsOf[A](body: => A): (A, Int) = jobsDuring(spark.sparkContext)(body)
 
   private def exchanges(df: DataFrame): Int =
     df.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }.size

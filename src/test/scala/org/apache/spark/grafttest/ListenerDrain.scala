@@ -9,4 +9,22 @@ import org.apache.spark.SparkContext
   * action's events can be counted late). */
 object ListenerDrain {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(30000)
+
+  /** `body`'s result and the Spark jobs it started, counted between two
+    * drains. */
+  def jobsDuring[A](sc: SparkContext)(body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      drain(sc)
+      (result, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }

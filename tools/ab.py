@@ -26,7 +26,10 @@ its pair), then a verdict:
   flat        none of the above
 
 Every run's JSON result is appended to --out (JSON lines) with its side,
-workload, seed and order, so all runs made stay on record.
+workload, seed, order and the host's 1-minute load average when it started,
+so all runs made stay on record. On a shared host whole runs move with the
+load, so the report prints each side's median starting load and marks
+(with "!") the pairs whose two runs started more than 1.0 apart.
 """
 
 import argparse
@@ -70,14 +73,19 @@ def checkout(rev, workdir):
     return sha, d
 
 
+LOAD_GAP = 1.0
+
+
 def run(tree, workload, seed, seconds, trace):
+    load = os.getloadavg()[0]
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
-        return {"error": f"exit {p.returncode}: {p.stderr.strip()[-400:]}"}
+        return {"error": f"exit {p.returncode}: {p.stderr.strip()[-400:]}", "load": load}
     res = json.loads(lines[-1])
+    res["load"] = load
     # "# op <kind> n= 6 p50 73.6 ms max 88.9 ms": each kind's median
     res["kind_p50_ms"] = {m.group(1): float(m.group(2)) for m in
                           (re.match(r"# op (\S+)\s+n=\s*\d+\s+p50\s+([\d.]+) ms", ln)
@@ -127,6 +135,16 @@ def report(results, spec, trace):
                 runs.setdefault(r["seed"], {})[r["side"]] = r["result"]
         seeds = sorted(s for s, p in runs.items() if len(p) == 2)
         print(f"\n== {wl}: {len(seeds)} pairs (seeds {seeds})")
+        loads = {s: (runs[s]["base"].get("load"), runs[s]["change"].get("load")) for s in seeds}
+        known = [s for s in seeds if None not in loads[s]]
+        if known:
+            print("   starting load (1-min average): base median %.2f, change median %.2f"
+                  % (statistics.median(loads[s][0] for s in known),
+                     statistics.median(loads[s][1] for s in known)))
+            print("   per pair (base/change, ! = more than %.1f apart): " % LOAD_GAP + ", ".join(
+                "%d %.1f/%.1f%s" % (s, loads[s][0], loads[s][1],
+                                    "!" if abs(loads[s][0] - loads[s][1]) > LOAD_GAP else "")
+                for s in known))
         share, errored = {}, {}
         for side in ("base", "change"):
             done = [runs[s][side] for s in seeds if "metrics" in runs[s][side]]
