@@ -34,6 +34,14 @@ import scala.jdk.CollectionConverters._
   * the reference's `uid TEXT PRIMARY KEY`, so the node and edge views hold
   * one row per uid ([[uidUnique]]); the FTS views hold one row per term
   * occurrence and reach one row per uid only through `Fts.matchSql`.
+  *
+  * Each table's DataFrame is a driver-held relation built by
+  * `org.apache.spark.sql.graft.LocalFrame`. Catalyst never walks its rows
+  * while it analyses or compares plans; filters and projections over it
+  * fold into new rows on the driver; its scan is a single partition whose
+  * broadcast needs no Spark job. A fetch chain over these views therefore
+  * runs one Spark job of one stage with no shuffle, and a filtered
+  * single-link fetch, or one whose filters match nothing, runs none.
   */
 final class MemGraph(val spark: SparkSession) extends GraphSource {
 

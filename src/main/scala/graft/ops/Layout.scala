@@ -60,14 +60,13 @@ object Layout {
     * within-partition sort, so every written file covers a contiguous,
     * disjoint z range. LayoutSpec pins the resulting spans and the
     * two-sided pruning win over a single-key linear layout. */
-  /** Column names the layout machinery injects with `withColumn` during
-    * writes and live/DV reads. A user column with one of these names would
-    * be silently overwritten and dropped (or mis-anti-joined), so every
-    * data ingestion edge rejects them up front — loud at write time, never
-    * corrupt at read time. */
+  /** Column names the layout machinery injects during writes (`_z`, `_zm`,
+    * `_fid`, `_h`) and vectored deletes (`_fname`, `_pos`). A user column
+    * with one of these names would be silently overwritten and dropped, so
+    * every data ingestion edge rejects them up front — loud at write time,
+    * never corrupt at read time. */
   private[ops] val ReservedCols: Set[String] = Set(
-    "_z", "_zm", "_fid", "_h", "_pos", "_fname", "_live_fname",
-    "_dv_fname", "_dv_pos")
+    "_z", "_zm", "_fid", "_h", "_pos", "_fname")
 
   private[ops] def requireNoReservedCols(df: DataFrame): Unit = {
     val clash = df.columns.filter(c => ReservedCols.contains(c))

@@ -28,8 +28,14 @@ import graft.engine.GraphSource
   *     ([[GraphSource.uidUnique]]) emits no `DISTINCT`/`GROUP BY` at all:
   *     its rows are already unique (an FTS join goes through the
   *     `Fts.matchSql` subquery, one row per uid), so the dedup would only cost a
-  *     shuffle — and without it Catalyst folds a fetch over driver-held
-  *     rows into a local relation that runs no Spark job.
+  *     shuffle — and without it a fetch over driver-held rows folds on the
+  *     driver into rows that are collected without a Spark job.
+  *
+  * Over [[graft.engine.MemGraph]] every view is a driver-held relation
+  * (`org.apache.spark.sql.graft.LocalFrame`): filters and projections fold
+  * into its rows during optimization, a broadcast of it starts no job, and
+  * its scan is one partition, so a chain's dedup needs no shuffle and the
+  * whole fetch runs as one Spark job of one stage.
   */
 object Fetch extends org.apache.spark.internal.Logging {
 

@@ -1653,7 +1653,7 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
     val good = spark.range(256).select(col("id").as("a"), (col("id") % 16).as("b"))
     val dir = java.nio.file.Files.createTempDirectory("graft_zres").toString + "/t"
     Layout.zorderInit(spark, good, dir, "a", "b", nFiles = 2)
-    for (bad <- Seq("_pos", "_fname", "_zm", "_fid", "_z", "_live_fname")) {
+    for (bad <- Seq("_pos", "_fname", "_zm", "_fid", "_z")) {
       val df = good.withColumn(bad, lit("user-data"))
       val e1 = intercept[IllegalArgumentException] {
         Layout.zorderInit(spark, df,
@@ -1683,6 +1683,14 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
     }
     // the guard must not have corrupted the live table
     assert(ZTable.dataFrame(spark, dir).count() == 256L)
+    // a name no read or write injects is the user's: it round-trips
+    val live = good.withColumn("_live_fname", concat(lit("f"), col("a")))
+    val liveDir = java.nio.file.Files.createTempDirectory("graft_zlive").toString + "/t"
+    Layout.zorderInit(spark, live, liveDir, "a", "b", nFiles = 2)
+    val back = ZTable.dataFrame(spark, liveDir)
+    assert(back.columns.contains("_live_fname"))
+    assert(back.select("a", "b", "_live_fname").collect().toSet ==
+      live.select("a", "b", "_live_fname").collect().toSet)
   }
 
   test("manifest-persisted schema: clean reads plan with ZERO footer fetches; evolution falls back; compact heals") {

@@ -2,22 +2,27 @@ package graft.query
 
 import graft.SparkSpec
 import graft.engine.{MemGraph, Node, ViewGraph}
-import org.apache.spark.grafttest.ListenerDrain.jobsDuring
+import org.apache.spark.grafttest.ListenerDrain.{jobsAndStagesDuring, jobsDuring}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.graft.{DriverRelation, DriverRows}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Plan shape of fetches over MemGraph, whose views hold one row per uid:
-  * a single-link fetch plans no dedup and runs no Spark job, a chain still
-  * dedups, a read re-registers only the views whose snapshot changed, and
+/** Plan shape of fetches over MemGraph, whose views hold one row per uid
+  * in driver-held relations: a single-link fetch plans no dedup and runs no
+  * Spark job, a chain dedups in one job of one stage, an empty result runs
+  * no job, a read re-registers only the views whose snapshot changed, and
   * the SQL over any other source is unchanged. */
-class FetchPlanSpec extends AnyFunSuite with SparkSpec {
+class FetchPlanSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHelper {
+
+  private val personNames = Seq("apple pie", "apple apple tart", "pear", "apple apple apple", "plum")
 
   private lazy val g: MemGraph = {
     val g = MemGraph(spark)
     g.resetFts(nodeFields = Seq("name"))
-    val names = Seq("apple pie", "apple apple tart", "pear", "apple apple apple", "plum")
-    val ps = names.zipWithIndex.map { case (n, i) =>
+    val ps = personNames.zipWithIndex.map { case (n, i) =>
       g.node("Person", "name" -> n, "age" -> (20 + 10 * i)).save().updatefts("name" -> n)
     }
     val co = g.node("Company", "name" -> "Acme").save()
@@ -33,8 +38,10 @@ class FetchPlanSpec extends AnyFunSuite with SparkSpec {
 
   private def jobsOf[A](body: => A): (A, Int) = jobsDuring(spark.sparkContext)(body)
 
+  /** Shuffles in the executed plan, looking inside an adaptive plan's
+    * stages once the query has run. */
   private def exchanges(df: DataFrame): Int =
-    df.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }.size
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
 
   test("(n:Person) with a where clause: no Exchange, 0 Spark jobs") {
     val df = Fetch.df(g, Fetch.Args("(n:Person)", Seq("CAST(n.data.age AS INT) >= :lo"),
@@ -121,5 +128,52 @@ class FetchPlanSpec extends AnyFunSuite with SparkSpec {
     val ranked = Fetch.df(vg, Fetch.Args("(n:Person)", order = Some("n_fts.score DESC"),
       params = Map("n_fts" -> "apple"))).collect().map(_.getAs[String]("uid")).toSeq
     assert(ranked == Seq("apple apple apple", "apple apple tart", "apple pie").map(uid))
+  }
+
+  test("2-, 3- and 5-link chains run 1 Spark job of 1 stage with no Exchange") {
+    val co = uid("Acme")
+    val p0 = uid("apple pie")
+    val cases = Seq(
+      Fetch.Args("<(e:WorksAt)- [n]", Seq(s"e.enduid = '$co'")) -> personNames.map(uid).toSet,
+      Fetch.Args("[a] -(e:Knows)> (b)") -> Set(p0),
+      Fetch.Args("[a] -(e:Knows)> (b) -(w:WorksAt)> (c:Company)") -> Set(p0))
+    cases.foreach { case (args, want) =>
+      val df = Fetch.df(g, args)
+      val (rows, jobs, stages) = jobsAndStagesDuring(spark.sparkContext)(df.collect())
+      assert(rows.map(_.getAs[String]("uid")).toSet == want && rows.length == want.size, args.chain)
+      assert(jobs == 1 && stages == 1, s"${args.chain}: $jobs jobs, $stages stages")
+      assert(exchanges(df) == 0, df.queryExecution.executedPlan.toString)
+    }
+  }
+
+  test("empty results and limits run no Spark job") {
+    val loner = g.node("Loner").save()
+    try {
+      val (out, outJobs) = jobsOf(loner.outN())
+      assert(out.size == 0 && outJobs == 0, s"outN of an isolated node ran $outJobs jobs")
+      val (none, noneJobs) = jobsOf(g.fetchN("[a] -(e:Knows)> (b)",
+        Seq("CAST(b.data.age AS INT) > :hi"), params = Map("hi" -> 1000)))
+      assert(none.size == 0 && noneJobs == 0, s"an empty chain ran $noneJobs jobs")
+      val (five, limitJobs) = jobsOf(g.fetchN("(n)", limit = Some(5)))
+      assert(five.size == 5 && limitJobs == 0, s"a limited fetch ran $limitJobs jobs")
+    } finally g.undo()
+  }
+
+  test("a fetch's leaves are driver relations whose expressions are their output only") {
+    val df = Fetch.df(g, Fetch.Args("[a] -(e:Knows)> (b)", params = Map("b_fts" -> "apple")))
+    val leaves = df.queryExecution.analyzed.collectLeaves()
+    assert(leaves.size == 4 && leaves.forall(_.isInstanceOf[DriverRelation]), leaves)
+    leaves.foreach { l =>
+      // no row is an expression or sits in a collection Catalyst flattens
+      assert(l.expressions == l.output, l)
+      assert(l.productIterator.collect { case i: Iterable[_] => i }.toSeq == Seq(l.output))
+      assert(l.productIterator.collect { case r: DriverRows => r }.size == 1)
+    }
+  }
+
+  test("a driver relation estimates its size and rows as a LocalRelation does") {
+    val leaf = g.nodes.queryExecution.analyzed.asInstanceOf[DriverRelation]
+    assert(leaf.computeStats() == LocalRelation(leaf.output, leaf.data.rows).computeStats())
+    assert(leaf.maxRows.contains(leaf.data.rows.length.toLong))
   }
 }

@@ -1,8 +1,10 @@
 package graft.query
 
 import graft.SparkSpec
-import graft.engine.MemGraph
+import graft.engine.{GraphSource, MemGraph, ViewGraph}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** Randomized equivalence (SURVEY §5.2): for random small graphs and random
@@ -121,5 +123,79 @@ class FetchPropertySpec extends AnyFunSuite with SparkSpec {
         assert(monotone, s"round $round '$chain' ORDER $order: ranks $seq not monotone")
       }
     }
+  }
+
+  test("random fetches over MemGraph rows ≡ the same fetches over createDataFrame rows") {
+    // the ViewGraph's frames are Spark's own LocalRelations over the same
+    // rows, so any difference is the driver-row leaf, its folding or its scan
+    val rng = new Random(5150)
+    val words = Vector("red", "blue", "green")
+    def copyOf(df: DataFrame): DataFrame =
+      spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+    def rows(src: GraphSource, args: Fetch.Args): Seq[Seq[Any]] =
+      Fetch.df(src, args).collect().toSeq.map(_.toSeq)
+    // features seen in queries with a non-empty result, so the mix is known to cover them
+    val covered = scala.collection.mutable.Set.empty[String]
+    for (round <- 1 to 4) {
+      val g = MemGraph(spark)
+      g.resetFts(nodeFields = Seq("name"))
+      val ns = (1 to (5 + rng.nextInt(4))).map { _ =>
+        val name = s"${words(rng.nextInt(3))} ${words(rng.nextInt(3))}"
+        g.node(nodeKinds(rng.nextInt(2)), "age" -> rng.nextInt(50), "name" -> name)
+          .save().updatefts("name" -> name)
+      }
+      for (_ <- 1 to (ns.size * 2))
+        g.edge(ns(rng.nextInt(ns.size)), edgeKinds(rng.nextInt(2)), ns(rng.nextInt(ns.size)),
+          "w" -> rng.nextInt(4)).save()
+      val vg = new ViewGraph(spark, copyOf(g.nodes), copyOf(g.edges),
+        Some(copyOf(g.nodeFts)), Some(copyOf(g.edgeFts)), ftsU61 = g.ftsUnicode61)
+
+      for (q <- 1 to 8) {
+        val nLinks = 1 + 2 * rng.nextInt(3)
+        val aliases = (0 until nLinks).map(i => if (i % 2 == 0) s"n$i" else s"e$i")
+        val collectIdx = rng.nextInt(nLinks)
+        val c = aliases(collectIdx)
+        val cIsNode = collectIdx % 2 == 0
+        val other = aliases((collectIdx + 1 + rng.nextInt(nLinks)) % nLinks)
+        val grouped = cIsNode && nLinks > 1 && rng.nextInt(3) == 0
+        val extra = if (grouped) Some(s"COUNT($other.uid)")
+          else if (rng.nextInt(4) == 0) Some(s"CAST($other.data.w AS INT)").filter(_ => other.startsWith("e"))
+          else None
+        val kinds = aliases.indices.map { i =>
+          if (rng.nextBoolean()) ""
+          else s":${if (i % 2 == 0) nodeKinds(rng.nextInt(2)) else edgeKinds(rng.nextInt(2))}"
+        }
+        val rightward = aliases.map(_ => rng.nextBoolean())
+        def chainOf(withExtra: Boolean): String = aliases.indices.map { i =>
+          val spec = aliases(i) + kinds(i) + (if (i == collectIdx && withExtra) ",x" else "")
+          val link = if (i == collectIdx) s"[$spec]" else s"($spec)"
+          if (i % 2 == 0) link else if (rightward(i)) s"-$link>" else s"<$link-"
+        }.mkString(" ")
+        val chain = chainOf(extra.isDefined)
+        val where = if (rng.nextBoolean()) Seq("CAST(n0.data.age AS INT) >= :lo") else Nil
+        val fts = if (rng.nextInt(4) == 0) Map("n0_fts" -> words(rng.nextInt(3))) else Map.empty
+        val params = Map[String, Any]("lo" -> rng.nextInt(50)) ++ fts ++ extra.map("x" -> _)
+        val distinct = rng.nextInt(4) != 0
+        // ordered results must be total orders, so the collected uid breaks ties
+        val order = if (grouped || extra.isDefined || rng.nextBoolean()) None
+          else if (cIsNode && rng.nextBoolean()) Some(s"CAST($c.data.age AS INT) DESC, $c.uid")
+          else if (other.startsWith("n")) Some(s"$other.uid DESC, $c.uid")
+          else Some(s"$c.uid DESC")
+        val args = Fetch.Args(chain, where, order, Option.when(grouped)(s"$c.uid"),
+          order.map(_ => 1 + rng.nextInt(4)), None, count = false, distinct, params)
+        val (got, want) = (rows(g, args), rows(vg, args))
+        val label = s"round $round query $q: $args"
+        if (want.nonEmpty) covered ++= Seq("where" -> where.nonEmpty, "fts" -> fts.nonEmpty,
+          "order+limit" -> order.isDefined, "group" -> grouped, "extra" -> extra.isDefined,
+          "distinct=false" -> !distinct, "chain" -> (nLinks > 1)).collect { case (f, true) => f }
+        if (order.isDefined) assert(got == want, label)
+        else assert(got.map(_.mkString("|")).sorted == want.map(_.mkString("|")).sorted, label)
+        val countArgs = Fetch.Args(chainOf(withExtra = false), where, distinct = distinct,
+          params = params - "x")
+        assert(Fetch.count(g, countArgs) == Fetch.count(vg, countArgs), s"$label: COUNT")
+      }
+    }
+    assert(covered == Set("where", "fts", "order+limit", "group", "extra", "distinct=false", "chain"),
+      covered)
   }
 }

@@ -13,10 +13,22 @@ object ListenerDrain {
   /** `body`'s result and the Spark jobs it started, counted between two
     * drains. */
   def jobsDuring[A](sc: SparkContext)(body: => A): (A, Int) = {
+    val (result, jobs, _) = jobsAndStagesDuring(sc)(body)
+    (result, jobs)
+  }
+
+  /** `body`'s result, the Spark jobs it started and the stages those jobs
+    * submitted (a stage skipped for reuse is not submitted). */
+  def jobsAndStagesDuring[A](sc: SparkContext)(body: => A): (A, Int, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
+      }
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet(); ()
       }
     }
     drain(sc)
@@ -24,7 +36,7 @@ object ListenerDrain {
     try {
       val result = body
       drain(sc)
-      (result, jobs.get())
+      (result, jobs.get(), stages.get())
     } finally sc.removeSparkListener(listener)
   }
 }
