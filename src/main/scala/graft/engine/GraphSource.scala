@@ -3,10 +3,10 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.graft.BoundSql
 import graft.core.Rows
 
 import java.util.concurrent.atomic.AtomicLong
-import scala.collection.mutable
 
 /** A queryable graph: two DataFrames with the fixed node/edge schemas
   * (FIXTURES.md §1) plus optional FTS posting DataFrames
@@ -16,6 +16,12 @@ import scala.collection.mutable
   * the same code path serves the journal-backed mutable graph, a Parquet
   * warehouse, and ad-hoc projections (e.g. the star-schema graph used for
   * oracle queries).
+  *
+  * The four view names below are the relation names of the SQL text that
+  * [[graft.query.Fetch]] emits (its DEBUG contract); none of them is ever
+  * registered in the session catalog. A fetch ([[sql]]) binds each name
+  * its text reads to the plan of the frame [[frameNamed]] gives, so the
+  * source keeps no per-view state and a read runs one SQL execution.
   */
 trait GraphSource {
   def spark: SparkSession
@@ -58,25 +64,23 @@ trait GraphSource {
     * can carry a uid twice. */
   def uidUnique: Boolean = false
 
-  private val registered = mutable.HashMap.empty[String, DataFrame]
+  /** The frame a relation name of this source's SQL stands for: one of
+    * the four view names above, else None. [[graft.query.Fetch]] binds
+    * each name its SQL reads to this frame's plan, so only the accessors
+    * of the names a fetch reads are evaluated. */
+  def frameNamed(name: String): Option[DataFrame] =
+    if (name.equalsIgnoreCase(nodesView)) Some(nodes)
+    else if (name.equalsIgnoreCase(edgesView)) Some(edges)
+    else if (name.equalsIgnoreCase(nodeFtsView)) Some(nodeFts)
+    else if (name.equalsIgnoreCase(edgeFtsView)) Some(edgeFts)
+    else None
 
-  /** (Re-)register temp views for SQL-based query compilation; called per
-    * fetch so mutable sources always expose current state. A registration
-    * runs Spark's view command, about 3.5–4.5 ms per view on a 4-core host
-    * whatever the view's size (the same for MemGraph's 2,750-row node and
-    * 7,500-row edge views), so a view is re-registered only when the
-    * DataFrame instance behind it changed since its last registration. */
-  def registerViews(): Unit = synchronized {
-    def register(df: DataFrame, view: String): Unit =
-      if (!registered.get(view).exists(_ eq df)) {
-        df.createOrReplaceTempView(view)
-        registered(view) = df
-      }
-    register(nodes, nodesView)
-    register(edges, edgesView)
-    register(nodeFts, nodeFtsView)
-    register(edgeFts, edgeFtsView)
-  }
+  /** Spark SQL over this source's data: the raw-SQL escape hatch (the
+    * reference's `Graph.cursor()`, graphydb.py:696-702). `text` reads the
+    * four view names above, bound by plan as a fetch binds them, so the
+    * DEBUG text of a fetch runs here as it stands; other names resolve
+    * through the session catalog. */
+  def sql(text: String): DataFrame = BoundSql(spark, text)(frameNamed)
 }
 
 object GraphSource {

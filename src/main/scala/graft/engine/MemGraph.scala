@@ -242,9 +242,10 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
   def clearChanges(): Unit = { journal.clear(); seqCounter = 0 }
 
   /** Remove one journal row by seq (reference `deletechange`,
-    * graphydb.py:568-570). */
+    * graphydb.py:568-570). Seqs are unique, so searching from the tail,
+    * where recent changes sit, finds the same row. */
   def deleteChange(seq: Long): Unit = {
-    val i = journal.indexWhere(_.seq == seq)
+    val i = journal.lastIndexWhere(_.seq == seq)
     if (i >= 0) journal.remove(i)
   }
 
@@ -301,7 +302,8 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
             out += (("*", ch.uid))
           case (None, None) => throw GraphyDBException("Unknown undo action")
         }
-        journal.remove(journal.indexWhere(_.seq == ch.seq))
+        // the batch is the journal's tail: search from the end
+        journal.remove(journal.lastIndexWhere(_.seq == ch.seq))
       }
     } finally { journaling = true }
     out.toSeq

@@ -175,15 +175,44 @@ final class WarehouseGraph(val spark: SparkSession, val path: String) extends Gr
     * still retained, else CURRENT (documented fallback — see the zsnap
     * note above). */
   private def pinnedZ(dir: String, pin: Option[Long],
-      helpers: String*): DataFrame = {
+      helpers: String*): DataFrame =
+    pinnedScan(dir, pin).drop(helpers: _*)
+
+  /** [[pinnedZ]] with the helper columns kept: the generation memo's own
+    * frame ([[graft.ops.ZTable.dataFrame]]), the same instance for as
+    * long as the table's pinned generation is unchanged. */
+  private def pinnedScan(dir: String, pin: Option[Long]): DataFrame = {
     import graft.ops.Layout
-    val df = pin match {
+    pin match {
       case Some(g) if g >= 0 && Layout.currentGen(dir).isDefined &&
           Layout.retainedGens(dir).contains(g) =>
         graft.ops.ZTable.dataFrameAsOf(spark, dir, g)
       case _ => graft.ops.ZTable.dataFrame(spark, dir)
     }
-    df.drop(helpers: _*)
+  }
+
+  import WarehouseGraph.ZViewKey
+
+  private type ZViewSlot =
+    java.util.concurrent.atomic.AtomicReference[(ZViewKey, ViewGraph)]
+
+  /** The last view [[zView]] built, and the last one [[zViewOf]] built
+    * (time travel), each with its key. */
+  private val lastZView, lastZViewAt: ZViewSlot = new ZViewSlot()
+
+  /** The [[ViewGraph]] over `key`'s frames, helpers dropped: the one held
+    * in `slot` when its key is the same, so reads of an unchanged cut
+    * build no frame and share one source. */
+  private def zViewFor(slot: ZViewSlot, key: ZViewKey): ViewGraph = {
+    val last = slot.get
+    if (last != null && last._1 == key) last._2
+    else {
+      val v = new ViewGraph(spark, key.nodes.drop("_kh"), key.edges.drop("_khs", "_khe"),
+        nodeFtsDf = key.nodeFts.map(_.drop("_tkh")),
+        edgeFtsDf = key.edgeFts.map(_.drop("_tkh")), ftsU61 = key.u61)
+      slot.set(key -> v)
+      v
+    }
   }
 
   private def journalFileNames(): Seq[String] = {
@@ -669,25 +698,23 @@ final class WarehouseGraph(val spark: SparkSession, val path: String) extends Gr
     * last compaction/increment). When [[resetZFts]] has run, the view
     * carries the maintained postings too — `*_fts` MATCH params in Fetch
     * chains work over the mutable warehouse, query terms folded to match
-    * the index's tokenizer. */
+    * the index's tokenizer. While the published cut is unchanged, every
+    * call returns the same view, built from the z-tables' memoized
+    * generation scans. */
   def zView: ViewGraph = {
     // ONE pointer read serves every table — per-accessor reads could
     // straddle a concurrent advance and re-introduce the torn cut
     val pin = readZsnap
-    val n = pinnedZ(s"$path/znodes", pin.map(_.zn), "_kh")
-    val e = pinnedZ(s"$path/zedges", pin.map(_.ze), "_khs", "_khe")
-    if (zFtsEnabled) {
-      val (nf, ef, u61) = zftsConfig
-      new ViewGraph(spark, n, e,
-        nodeFtsDf =
-          if (nf.nonEmpty) Some(pinnedZ(zftsDir, pin.map(_.zf), "_tkh"))
-          else None,
-        edgeFtsDf =
-          if (ef.nonEmpty)
-            Some(pinnedZ(zftseDir, pin.map(_.zfe), "_tkh"))
-          else None,
-        ftsU61 = u61)
-    } else new ViewGraph(spark, n, e)
+    val n = pinnedScan(s"$path/znodes", pin.map(_.zn))
+    val e = pinnedScan(s"$path/zedges", pin.map(_.ze))
+    zViewFor(lastZView,
+      if (zFtsEnabled) {
+        val (nf, ef, u61) = zftsConfig
+        ZViewKey(n, e,
+          if (nf.nonEmpty) Some(pinnedScan(zftsDir, pin.map(_.zf))) else None,
+          if (ef.nonEmpty) Some(pinnedScan(zftseDir, pin.map(_.zfe))) else None,
+          u61)
+      } else ZViewKey(n, e, None, None, u61 = false))
   }
 
   /** GRAPH TIME TRAVEL over the mutable warehouse (r16): the zsnap log
@@ -732,26 +759,25 @@ final class WarehouseGraph(val spark: SparkSession, val path: String) extends Gr
 
   private def zViewOf(at: ZSnap): ViewGraph = {
     import graft.ops.{Layout, ZTable}
-    def asOf(dir: String, gen: Long, helpers: String*): DataFrame = {
+    def asOf(dir: String, gen: Long): DataFrame = {
       require(Layout.currentGen(dir).isDefined &&
         Layout.retainedGens(dir).contains(gen),
         s"generation $gen of $dir is no longer retained — raise " +
           "Layout.setRetention BEFORE the history you need")
-      ZTable.dataFrameAsOf(spark, dir, gen).drop(helpers: _*)
+      ZTable.dataFrameAsOf(spark, dir, gen)
     }
     def ftsAsOf(dir: String, gen: Long): Option[DataFrame] =
       if (gen >= 0 && Layout.currentGen(dir).isDefined &&
         Layout.retainedGens(dir).contains(gen))
-        Some(ZTable.dataFrameAsOf(spark, dir, gen).drop("_tkh"))
+        Some(ZTable.dataFrameAsOf(spark, dir, gen))
       else None
-    val n = asOf(s"$path/znodes", at.zn, "_kh")
-    val e = asOf(s"$path/zedges", at.ze, "_khs", "_khe")
-    if (Files.isRegularFile(zftsMetaPath)) {
-      val (_, _, u61) = zftsConfig
-      new ViewGraph(spark, n, e,
-        nodeFtsDf = ftsAsOf(zftsDir, at.zf),
-        edgeFtsDf = ftsAsOf(zftseDir, at.zfe), ftsU61 = u61)
-    } else new ViewGraph(spark, n, e)
+    val n = asOf(s"$path/znodes", at.zn)
+    val e = asOf(s"$path/zedges", at.ze)
+    zViewFor(lastZViewAt,
+      if (Files.isRegularFile(zftsMetaPath)) {
+        val (_, _, u61) = zftsConfig
+        ZViewKey(n, e, ftsAsOf(zftsDir, at.zf), ftsAsOf(zftseDir, at.zfe), u61)
+      } else ZViewKey(n, e, None, None, u61 = false))
   }
 
   /** Point node lookup over the compacted z-table — the reference's
@@ -827,4 +853,11 @@ object WarehouseGraph {
     * cheap; raise it per table with [[graft.ops.Layout.setRetention]]
     * for deeper time travel. */
   val SnapshotRetention: Int = 16
+
+  /** The z-table frames a view is built from (helpers kept) and its
+    * tokenizer flag. Frames compare by reference, and the generation
+    * memo returns one frame per generation, so equal keys mean the same
+    * cut. */
+  private final case class ZViewKey(nodes: DataFrame, edges: DataFrame,
+      nodeFts: Option[DataFrame], edgeFts: Option[DataFrame], u61: Boolean)
 }

@@ -848,16 +848,69 @@ object Layout {
   /** LIVE read of `man`'s files: [[scanRelation]] filtered by
     * [[liveFilter]] — one relation and one filter, whether or not the
     * generation carries tombstones. */
-  private[ops] def liveScan(spark: SparkSession, path: String, gen: Long,
+  private def buildLiveScan(spark: SparkSession, path: String, gen: Long,
       man: Manifest): (DataFrame, ManifestFileIndex) = {
     val (base, fi) = scanRelation(spark, path, gen, man)
     (liveFilter(spark, path, man).fold(base)(base.filter), fi)
   }
 
-  /** [[liveScan]] of a span subset of generation `gen`. */
+  /** One memoized live scan: built by `spark` from `man`. */
+  private final class MemoScan(val spark: SparkSession, val man: Manifest,
+      val scan: (DataFrame, ManifestFileIndex))
+
+  /** Live scans by table (absolute path) and generation. */
+  private val scanMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[Long, MemoScan]]()
+
+  private def memoKey(path: String): String =
+    java.nio.file.Paths.get(path).toAbsolutePath.normalize.toString
+
+  /** [[buildLiveScan]] of a whole generation, built once per generation:
+    * reads of an unchanged generation reuse its relation, its
+    * [[ManifestFileIndex]] and its DV positions with their broadcast, so
+    * they read no DV and create no broadcast. A generation's files are
+    * immutable, so the memo holds metadata of files, never rows of a
+    * result.
+    *   - Key: the table, the generation and the parsed [[Manifest]]
+    *     value, not the generation number alone: a table deleted and
+    *     re-initialized writes `manifest-0` again at the same path, with
+    *     other files. A scan built by another session is rebuilt.
+    *   - Bound: only generations inside the table's own retention window
+    *     ([[retentionOf]] back from CURRENT) are held; a scan of an older
+    *     generation is built and not kept. Each build drops the table's
+    *     entries that left the window. A dropped entry is only
+    *     unreferenced, never destroyed: a caller may still hold a frame
+    *     over it, and Spark's cleaner frees its broadcast once no frame
+    *     does. */
+  private[ops] def liveScan(spark: SparkSession, path: String, gen: Long,
+      man: Manifest): (DataFrame, ManifestFileIndex) = {
+    val key = memoKey(path)
+    Option(scanMemo.get(key)).flatMap(_.get(gen))
+      .filter(m => (m.spark eq spark) && m.man == man)
+      .map(_.scan)
+      .getOrElse {
+        val scan = buildLiveScan(spark, path, gen, man)
+        val cur = currentGen(path).getOrElse(gen)
+        val oldest = cur - retentionOf(path) + 1
+        def inWindow(g: Long) = g >= oldest && g <= cur
+        scanMemo.compute(key, (_, held) => {
+          val kept = Option(held).getOrElse(Map.empty[Long, MemoScan])
+            .filter { case (g, _) => g != gen && inWindow(g) }
+          if (inWindow(gen)) kept + (gen -> new MemoScan(spark, man, scan)) else kept
+        })
+        scan
+      }
+  }
+
+  /** The generations of `path` whose live scans [[liveScan]] holds. */
+  private[ops] def memoizedGens(path: String): Seq[Long] =
+    Option(scanMemo.get(memoKey(path))).map(_.keys.toSeq.sorted).getOrElse(Nil)
+
+  /** [[buildLiveScan]] of a span subset of generation `gen` (not memoized:
+    * the subset depends on the query). */
   private def spanFilesLive(spark: SparkSession, path: String, gen: Long,
       man: Manifest, spans: Seq[Span]): DataFrame =
-    liveScan(spark, path, gen, man.copy(spans = spans))._1
+    buildLiveScan(spark, path, gen, man.copy(spans = spans))._1
 
   /** Read the CURRENT committed generation (landing rows are invisible
     * until maintained — snapshot semantics; use [[zorderReadWithLanding]]

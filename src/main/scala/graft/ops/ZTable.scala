@@ -40,7 +40,12 @@ object ZTable {
     * scan and prune files, so a read over a tombstoned generation plans
     * like one over a clean generation, and building the DataFrame starts
     * no Spark job. Snapshot semantics: the CURRENT generation at call
-    * time. */
+    * time.
+    *
+    * The scan is memoized per generation ([[Layout.liveScan]]): keyed by
+    * the table, the generation and its parsed manifest, held only while
+    * the generation is inside the table's retention window. A read of an
+    * unchanged generation returns the same DataFrame and reads no DV. */
   def dataFrame(spark: SparkSession, path: String): DataFrame =
     dataFrameWithIndex(spark, path)._1
 
@@ -126,12 +131,17 @@ final class ManifestFileIndex private[ops] (path: String,
   // sidecars are generation-addressed, so the cache can never serve a
   // stale bitset); admission is INDEX-ALIGNED with `statuses`, so each
   // query pays probe ANDs over an array instead of a string-keyed map
-  // lookup per file (84 → 45 ms/query at 100k files, see LayoutProbe)
+  // lookup per file (84 → 45 ms/query at 100k files, see LayoutProbe).
+  // Only a sidecar found is cached: the index outlives one read (the
+  // generation memo of Layout.liveScan), and a sidecar built after the
+  // generation's first read must still prune the reads after it.
   private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[Seq[Any] => Array[Boolean]]]()
+    String, Seq[Any] => Array[Boolean]]()
   private def bloomFor(colName: String): Option[Seq[Any] => Array[Boolean]] =
-    bloomCache.computeIfAbsent(colName,
-      c => Layout.bloomSpanAdmission(path, gen, c, man.spans.map(_.file)))
+    Option(bloomCache.get(colName)).orElse {
+      val found = Layout.bloomSpanAdmission(path, gen, colName, man.spans.map(_.file))
+      found.map(b => bloomCache.computeIfAbsent(colName, _ => b))
+    }
 
   private val statuses: Seq[(Layout.Span, FileStatus)] = man.spans.map { s =>
     val p = root.resolve(s.file)

@@ -4,7 +4,11 @@ import org.apache.spark.sql.DataFrame
 import graft.engine.GraphSource
 
 /** Compiles a chain-DSL fetch into ONE Spark SQL statement over the source's
-  * node/edge temp views, then hands the whole plan to Catalyst.
+  * node/edge view names, then hands the whole plan to Catalyst. The names
+  * are bound to the source's frames by plan ([[GraphSource.sql]]), not
+  * registered as temp views, so a fetch runs one SQL execution and leaves
+  * the session catalog as it was; only the frames the SQL reads are
+  * evaluated.
   *
   * Mirrors the reference's SQL generator (`Graph.fetch`,
   * graphydb.py:809-1017) stage by stage — SELECT (901-916), JOIN walk
@@ -250,10 +254,8 @@ object Fetch extends org.apache.spark.internal.Logging {
     }
 
   /** Lazy DataFrame for the fetch; columns = core cols (+ extras). */
-  def df(src: GraphSource, args: Args): DataFrame = {
-    src.registerViews()
-    src.spark.sql(sql(src, args))
-  }
+  def df(src: GraphSource, args: Args): DataFrame =
+    src.sql(sql(src, args))
 
   /** COUNT(DISTINCT uid) as a Long. With `group` set the reference returns
     * the first group's count (fetchone, graphydb.py:988-990) — a quirk, so

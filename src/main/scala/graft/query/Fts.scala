@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BoundSql
 
 /** Full-text search as an inverted-index posting table + match compiler
   * (SURVEY §7.5). Replaces the reference's SQLite FTS5 virtual tables
@@ -752,39 +753,29 @@ object Fts {
   def deletePostings(current: DataFrame, uids: DataFrame, uidCol: String = "uid"): DataFrame =
     current.join(uids.select(col(uidCol).as("uid")).distinct(), Seq("uid"), "left_anti")
 
-  // monotonic view names (identity hashes can collide between live frames);
-  // each view is dropped as soon as spark.sql's EAGER analysis has resolved
-  // the plan, so match calls leak nothing into the session catalog
-  private val viewCounter = new java.util.concurrent.atomic.AtomicLong(0)
+  /** `sql` over `postings` bound by plan under one fixed relation name
+    * (`org.apache.spark.sql.graft.BoundSql`): no temp view is registered,
+    * so a match leaves the session catalog as it was. */
+  private def overPostings(postings: DataFrame)(sql: String => String): DataFrame =
+    BoundSql(postings.sparkSession, sql(PostingsName))(
+      name => if (name.equalsIgnoreCase(PostingsName)) Some(postings) else None)
 
-  private def withView(postings: DataFrame)(sql: String => String): DataFrame = {
-    val spark = postings.sparkSession
-    val view = s"graft_fts_${viewCounter.incrementAndGet()}"
-    postings.createOrReplaceTempView(view)
-    // Drop via the SESSION catalog, not spark.catalog: the public API's
-    // dropTempView also runs CacheManager.uncacheQuery on the view's plan,
-    // and since a View canonicalizes to its child that same-result-matches
-    // any `.cache()` entry held for the postings DataFrame itself (e.g.
-    // StarGraph's per-kind cache) — silently unpersisting it. The internal
-    // drop only removes the catalog entry.
-    try spark.sql(sql(view))
-    finally spark.sessionState.catalog.dropTempView(view)
-  }
+  private val PostingsName = "graft_fts_postings"
 
   /** DataFrame form of a match: DISTINCT matching uids. `unicode61` folds
     * the query terms to match a `unicode61 = true` postings build. */
   def matchUids(postings: DataFrame, query: String,
       unicode61: Boolean = false): DataFrame =
-    withView(postings)(matchSql(_, query, unicode61)).select("uid")
+    overPostings(postings)(matchSql(_, query, unicode61)).select("uid")
 
   /** DataFrame form with the tf ranking column: (uid, score). */
   def matchScores(postings: DataFrame, query: String): DataFrame =
-    withView(postings)(matchSql(_, query))
+    overPostings(postings)(matchSql(_, query))
 
   /** [[matchScores]] over a `unicode61 = true` postings build: query terms
     * fold through the same diacritic-stripping normalizer the index used. */
   def matchScoresU61(postings: DataFrame, query: String): DataFrame =
-    withView(postings)(matchSql(_, query, unicode61 = true))
+    overPostings(postings)(matchSql(_, query, unicode61 = true))
 
   /** DataFrame form of [[bm25Sql]]: (uid, score). `fieldWeights` = FTS5
     * `bm25(idx, w1, w2…)` per-column weights (unlisted fields weigh 1.0). */
@@ -814,7 +805,7 @@ object Fts {
     val p =
       if (postings.storageLevel != org.apache.spark.storage.StorageLevel.NONE) postings
       else postings.localCheckpoint(eager = true)
-    withView(p)(bm25Sql(_, query, k1, b, roundTo, fieldWeights,
+    overPostings(p)(bm25Sql(_, query, k1, b, roundTo, fieldWeights,
       unicode61))
   }
 }

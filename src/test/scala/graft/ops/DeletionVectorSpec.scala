@@ -142,4 +142,98 @@ class DeletionVectorSpec extends AnyFunSuite with SparkSpec {
       assert(byGen.size > 3, s"seed $seed committed too few generations")
     }
   }
+
+  test("the generation memo: readers equal a plain-Scala model through seeded commits, deletes, bloom builds, time travel and re-inits") {
+    import spark.implicits._
+    val keep = 3
+    var kinds = Set.empty[String] // the step kinds the seeds ran
+    for (seed <- Seq(41L, 42L)) {
+      val rng = new Random(seed)
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_memo$seed").toString + "/t"
+      val all = (for (a <- 0L until 16L; b <- 0L until 16L) yield (a, b, a * 16 + b)).toSet
+      def init(): Unit =
+        Layout.zorderInit(spark, grid(16), dir, "a", "b", nFiles = 4, keepGenerations = keep)
+      init()
+      var live = all
+      val byGen = scala.collection.mutable.Map(Layout.currentGen(dir).get -> live)
+      var bloomGen: Option[Long] = None // the generation whose sidecar on k was built
+      var nextK = 10000L
+      def check(step: String): Unit = {
+        val cur = Layout.currentGen(dir).get
+        val want = live.toSeq.sorted
+        val (df, fi) = ZTable.dataFrameWithIndex(spark, dir)
+        assert(rows(df) == want, s"$step: dataFrame")
+        assert(ZTable.dataFrame(spark, dir) eq df, s"$step: an unchanged generation rebuilt its scan")
+        Layout.retainedGens(dir).filter(byGen.contains).foreach { g =>
+          assert(rows(ZTable.dataFrameAsOf(spark, dir, g)) == byGen(g).toSeq.sorted,
+            s"$step: dataFrameAsOf($g)")
+        }
+        // a point read is exact, and prunes through a sidecar built after
+        // the generation's first read (its index is the memo's)
+        val k = if (live.nonEmpty && rng.nextBoolean()) rng.shuffle(live.toSeq).head._3
+          else rng.nextInt(256).toLong
+        assert(rows(df.filter(col("k") === k)) == want.filter(_._3 == k), s"$step: point read $k")
+        if (bloomGen.contains(cur))
+          assert(fi.lastListed < fi.inputFiles.length,
+            s"$step: the sidecar must prune, listed ${fi.lastListed} of ${fi.inputFiles.length}")
+        val held = Layout.memoizedGens(dir)
+        assert(held.contains(cur) && held.forall(g => g > cur - keep && g <= cur),
+          s"$step: memo holds $held at generation $cur (window $keep)")
+      }
+      check(s"seed $seed init")
+      for (i <- 0 until 10) {
+        val step = rng.nextInt(5) match {
+          case 0 =>
+            val (a, b) = (rng.nextInt(13).toLong, rng.nextInt(13).toLong)
+            Layout.zorderDeleteVectored(spark, dir, (a, a + 3), (b, b + 3))
+            live = live.filterNot { case (x, y, _) => x >= a && x <= a + 3 && y >= b && y <= b + 3 }
+            s"band delete ($a, $b)"
+          case 1 =>
+            val keys = rng.shuffle(live.toSeq.map(_._3)).take(4) :+ 999999L
+            Layout.zorderDeleteVectoredByKey(spark, dir, "k", keys)
+            live = live.filterNot(r => keys.contains(r._3))
+            s"key delete ${keys.mkString(",")}"
+          case 2 =>
+            val add = (0 until 3).map { _ =>
+              nextK += 1
+              (rng.nextInt(16).toLong, rng.nextInt(16).toLong, nextK)
+            }
+            Layout.zorderAppend(add.toDF("a", "b", "k"), dir)
+            Layout.zorderMaintain(spark, dir)
+            live = live ++ add
+            s"append + maintain ${add.mkString(",")}"
+          case 3 =>
+            Layout.zorderBloomBuild(spark, dir, "k")
+            bloomGen = Layout.currentGen(dir)
+            "bloom build"
+          case _ =>
+            graft.engine.WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(dir))
+            init()
+            live = all
+            byGen.clear()
+            bloomGen = None
+            "re-init at the same path"
+        }
+        kinds += step.takeWhile(_ != ' ')
+        byGen(Layout.currentGen(dir).get) = live
+        check(s"seed $seed step $i: $step")
+      }
+    }
+    assert(kinds == Set("band", "key", "append", "bloom", "re-init"), kinds)
+  }
+
+  test("the generation memo holds no more generations than the retention window") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_memowin").toString + "/t"
+    Layout.zorderInit(spark, grid(8), dir, "a", "b", nFiles = 2, keepGenerations = 2)
+    for (i <- 1 to 5) {
+      Layout.zorderDeleteVectoredByKey(spark, dir, "k", Seq(i.toLong))
+      Layout.zorderAppend(Seq((1L, 1L, 1000L + i)).toDF("a", "b", "k"), dir)
+      Layout.zorderMaintain(spark, dir)
+      val cur = Layout.currentGen(dir).get
+      Layout.retainedGens(dir).foreach(g => ZTable.dataFrameAsOf(spark, dir, g).count())
+      assert(Layout.memoizedGens(dir) == Seq(cur - 1, cur), s"after commit $i at generation $cur")
+    }
+    assert(Layout.currentGen(dir).get >= 10L)
+  }
 }

@@ -2,7 +2,7 @@ package graft.query
 
 import graft.SparkSpec
 import graft.engine.{MemGraph, Node, ViewGraph}
-import org.apache.spark.grafttest.ListenerDrain.{jobsAndStagesDuring, jobsDuring}
+import org.apache.spark.grafttest.ListenerDrain.{jobsAndStagesDuring, jobsDuring, sqlExecutionsDuring}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -13,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Plan shape of fetches over MemGraph, whose views hold one row per uid
   * in driver-held relations: a single-link fetch plans no dedup and runs no
   * Spark job, a chain dedups in one job of one stage, an empty result runs
-  * no job, a read re-registers only the views whose snapshot changed, and
-  * the SQL over any other source is unchanged. */
+  * no job, a read binds its views by plan (no temp view, one SQL
+  * execution), and the SQL over any other source is unchanged. */
 class FetchPlanSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHelper {
 
   private val personNames = Seq("apple pie", "apple apple tart", "pear", "apple apple apple", "plum")
@@ -69,23 +69,41 @@ class FetchPlanSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHel
     assert(got == Seq("apple apple apple", "apple apple tart", "apple pie"))
   }
 
-  test("a read after a node-only write re-registers only the nodes view") {
-    val catalog = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.catalog
-    val views = Seq(g.nodesView, g.edgesView, g.nodeFtsView, g.edgeFtsView)
-    def registered = views.map(v => catalog.getRawTempView(v).get)
-    g.fetchN("(n:Person)")
-    val before = registered
+  test("fetches and FTS matches bind by plan: no temp view, and a read after a write runs 1 SQL execution") {
+    def tempViews: Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews
+    // a MemGraph, a ViewGraph and a warehouse zView (with its postings)
+    val vg = new ViewGraph(spark, g.nodes, g.edges, Some(g.nodeFts), Some(g.edgeFts))
+    val dir = java.nio.file.Files.createTempDirectory("graft_fetchbind").toString
+    val wh = new graft.engine.WarehouseGraph(spark, dir)
+    wh.append(g.changesDf)
+    wh.compactZorder(nFiles = 2)
+    wh.resetZFts(Seq("name"))
+    val chain = Fetch.Args("[a:Person] -(e:Knows)> (b)", params = Map("a_fts" -> "apple"))
+    val p0 = uid("apple pie")
+    Seq(g, vg, wh.zView).foreach { src =>
+      assert(Fetch.df(src, chain).collect().map(_.getAs[String]("uid")).toSeq == Seq(p0), src)
+      assert(tempViews == before, s"a fetch over $src left a temp view")
+    }
+    assert(Fts.matchUids(g.nodeFts, "apple").count() == 3L)
+    assert(Fts.matchBm25(g.nodeFts, "apple").count() == 3L)
+    assert(tempViews == before, "an FTS match left a temp view")
+
+    // a write to the nodes, the edges and the node FTS, then a read: its
+    // own query is its only SQL execution (registering the three changed
+    // frames as temp views would run three more)
     val p = g.getuid(uid("plum")).get
     p("age") = 61
-    p.save()
-    assert(g.fetchN("(n:Person)", Seq("CAST(n.data.age AS INT) = 61")).size == 1)
-    val after = registered
-    assert(!(after.head eq before.head), "nodes view must be re-registered")
-    views.indices.tail.foreach { i =>
-      assert(after(i) eq before(i), s"${views(i)} must stay registered as it was")
-    }
-    g.undo()
+    p.save().updatefts("name" -> "plum") // the same text: postings unchanged
+    g.edge(p.uid, "Knows", p.uid).save()
+    try {
+      val (hit, executions) = sqlExecutionsDuring(spark.sparkContext)(
+        g.fetchN("(n:Person)", Seq("CAST(n.data.age AS INT) = 61")).size)
+      assert(hit == 1 && executions == 1, s"$hit rows, $executions SQL executions")
+    } finally { g.undo(); g.undo() }
+    assert(g.getuid(uid("plum")).get("age") == 60 &&
+      Fetch.df(g, Fetch.Args("<(e:Knows)-")).count() == 2L)
   }
 
   test("chains of two or more links still dedup, over parallel edges too") {

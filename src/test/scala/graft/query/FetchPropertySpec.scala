@@ -125,77 +125,131 @@ class FetchPropertySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  private val words = Vector("red", "blue", "green")
+
+  /** A random MemGraph with node FTS over `name`. */
+  private def randomGraph(rng: Random): MemGraph = {
+    val g = MemGraph(spark)
+    g.resetFts(nodeFields = Seq("name"))
+    val ns = (1 to (5 + rng.nextInt(4))).map { _ =>
+      val name = s"${words(rng.nextInt(3))} ${words(rng.nextInt(3))}"
+      g.node(nodeKinds(rng.nextInt(2)), "age" -> rng.nextInt(50), "name" -> name)
+        .save().updatefts("name" -> name)
+    }
+    for (_ <- 1 to (ns.size * 2))
+      g.edge(ns(rng.nextInt(ns.size)), edgeKinds(rng.nextInt(2)), ns(rng.nextInt(ns.size)),
+        "w" -> rng.nextInt(4)).save()
+    g
+  }
+
+  /** A random fetch: 1, 3 or 5 links with random kinds and directions, and
+    * at random a where clause, an FTS match, a group with a `COUNT` extra
+    * or a per-row extra, `distinct = false`, and a total order with a
+    * limit. Also the features it uses, by name. */
+  private def randomFetch(rng: Random): (Fetch.Args, Set[String]) = {
+    val nLinks = 1 + 2 * rng.nextInt(3)
+    val aliases = (0 until nLinks).map(i => if (i % 2 == 0) s"n$i" else s"e$i")
+    val collectIdx = rng.nextInt(nLinks)
+    val c = aliases(collectIdx)
+    val cIsNode = collectIdx % 2 == 0
+    val other = aliases((collectIdx + 1 + rng.nextInt(nLinks)) % nLinks)
+    val grouped = cIsNode && nLinks > 1 && rng.nextInt(3) == 0
+    val extra = if (grouped) Some(s"COUNT($other.uid)")
+      else if (rng.nextInt(4) == 0) Some(s"CAST($other.data.w AS INT)").filter(_ => other.startsWith("e"))
+      else None
+    val kinds = aliases.indices.map { i =>
+      if (rng.nextBoolean()) ""
+      else s":${if (i % 2 == 0) nodeKinds(rng.nextInt(2)) else edgeKinds(rng.nextInt(2))}"
+    }
+    val rightward = aliases.map(_ => rng.nextBoolean())
+    val chain = aliases.indices.map { i =>
+      val spec = aliases(i) + kinds(i) + (if (i == collectIdx && extra.isDefined) ",x" else "")
+      val link = if (i == collectIdx) s"[$spec]" else s"($spec)"
+      if (i % 2 == 0) link else if (rightward(i)) s"-$link>" else s"<$link-"
+    }.mkString(" ")
+    val where = if (rng.nextBoolean()) Seq("CAST(n0.data.age AS INT) >= :lo") else Nil
+    val fts = if (rng.nextInt(4) == 0) Map("n0_fts" -> words(rng.nextInt(3))) else Map.empty
+    val params = Map[String, Any]("lo" -> rng.nextInt(50)) ++ fts ++ extra.map("x" -> _)
+    val distinct = rng.nextInt(4) != 0
+    // ordered results must be total orders, so the collected uid breaks ties
+    val order = if (grouped || extra.isDefined || rng.nextBoolean()) None
+      else if (cIsNode && rng.nextBoolean()) Some(s"CAST($c.data.age AS INT) DESC, $c.uid")
+      else if (other.startsWith("n")) Some(s"$other.uid DESC, $c.uid")
+      else Some(s"$c.uid DESC")
+    val args = Fetch.Args(chain, where, order, Option.when(grouped)(s"$c.uid"),
+      order.map(_ => 1 + rng.nextInt(4)), None, count = false, distinct, params)
+    val features = Seq("where" -> where.nonEmpty, "fts" -> fts.nonEmpty,
+      "order+limit" -> order.isDefined, "group" -> grouped, "extra" -> extra.isDefined,
+      "distinct=false" -> !distinct, "chain" -> (nLinks > 1),
+      "a source read twice" -> (nLinks > 2)).collect { case (f, true) => f }.toSet
+    (args, features)
+  }
+
+  private def rowsOf(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq)
+
+  /** Exact sequence when ordered, multiset otherwise. */
+  private def assertSameRows(got: Seq[Seq[Any]], want: Seq[Seq[Any]], args: Fetch.Args,
+      label: String): Unit =
+    if (args.order.isDefined) assert(got == want, label)
+    else assert(got.map(_.mkString("|")).sorted == want.map(_.mkString("|")).sorted, label)
+
   test("random fetches over MemGraph rows ≡ the same fetches over createDataFrame rows") {
     // the ViewGraph's frames are Spark's own LocalRelations over the same
     // rows, so any difference is the driver-row leaf, its folding or its scan
     val rng = new Random(5150)
-    val words = Vector("red", "blue", "green")
     def copyOf(df: DataFrame): DataFrame =
       spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
-    def rows(src: GraphSource, args: Fetch.Args): Seq[Seq[Any]] =
-      Fetch.df(src, args).collect().toSeq.map(_.toSeq)
     // features seen in queries with a non-empty result, so the mix is known to cover them
     val covered = scala.collection.mutable.Set.empty[String]
     for (round <- 1 to 4) {
-      val g = MemGraph(spark)
-      g.resetFts(nodeFields = Seq("name"))
-      val ns = (1 to (5 + rng.nextInt(4))).map { _ =>
-        val name = s"${words(rng.nextInt(3))} ${words(rng.nextInt(3))}"
-        g.node(nodeKinds(rng.nextInt(2)), "age" -> rng.nextInt(50), "name" -> name)
-          .save().updatefts("name" -> name)
-      }
-      for (_ <- 1 to (ns.size * 2))
-        g.edge(ns(rng.nextInt(ns.size)), edgeKinds(rng.nextInt(2)), ns(rng.nextInt(ns.size)),
-          "w" -> rng.nextInt(4)).save()
+      val g = randomGraph(rng)
       val vg = new ViewGraph(spark, copyOf(g.nodes), copyOf(g.edges),
         Some(copyOf(g.nodeFts)), Some(copyOf(g.edgeFts)), ftsU61 = g.ftsUnicode61)
 
       for (q <- 1 to 8) {
-        val nLinks = 1 + 2 * rng.nextInt(3)
-        val aliases = (0 until nLinks).map(i => if (i % 2 == 0) s"n$i" else s"e$i")
-        val collectIdx = rng.nextInt(nLinks)
-        val c = aliases(collectIdx)
-        val cIsNode = collectIdx % 2 == 0
-        val other = aliases((collectIdx + 1 + rng.nextInt(nLinks)) % nLinks)
-        val grouped = cIsNode && nLinks > 1 && rng.nextInt(3) == 0
-        val extra = if (grouped) Some(s"COUNT($other.uid)")
-          else if (rng.nextInt(4) == 0) Some(s"CAST($other.data.w AS INT)").filter(_ => other.startsWith("e"))
-          else None
-        val kinds = aliases.indices.map { i =>
-          if (rng.nextBoolean()) ""
-          else s":${if (i % 2 == 0) nodeKinds(rng.nextInt(2)) else edgeKinds(rng.nextInt(2))}"
-        }
-        val rightward = aliases.map(_ => rng.nextBoolean())
-        def chainOf(withExtra: Boolean): String = aliases.indices.map { i =>
-          val spec = aliases(i) + kinds(i) + (if (i == collectIdx && withExtra) ",x" else "")
-          val link = if (i == collectIdx) s"[$spec]" else s"($spec)"
-          if (i % 2 == 0) link else if (rightward(i)) s"-$link>" else s"<$link-"
-        }.mkString(" ")
-        val chain = chainOf(extra.isDefined)
-        val where = if (rng.nextBoolean()) Seq("CAST(n0.data.age AS INT) >= :lo") else Nil
-        val fts = if (rng.nextInt(4) == 0) Map("n0_fts" -> words(rng.nextInt(3))) else Map.empty
-        val params = Map[String, Any]("lo" -> rng.nextInt(50)) ++ fts ++ extra.map("x" -> _)
-        val distinct = rng.nextInt(4) != 0
-        // ordered results must be total orders, so the collected uid breaks ties
-        val order = if (grouped || extra.isDefined || rng.nextBoolean()) None
-          else if (cIsNode && rng.nextBoolean()) Some(s"CAST($c.data.age AS INT) DESC, $c.uid")
-          else if (other.startsWith("n")) Some(s"$other.uid DESC, $c.uid")
-          else Some(s"$c.uid DESC")
-        val args = Fetch.Args(chain, where, order, Option.when(grouped)(s"$c.uid"),
-          order.map(_ => 1 + rng.nextInt(4)), None, count = false, distinct, params)
-        val (got, want) = (rows(g, args), rows(vg, args))
+        val (args, features) = randomFetch(rng)
+        val (got, want) = (rowsOf(Fetch.df(g, args)), rowsOf(Fetch.df(vg, args)))
         val label = s"round $round query $q: $args"
-        if (want.nonEmpty) covered ++= Seq("where" -> where.nonEmpty, "fts" -> fts.nonEmpty,
-          "order+limit" -> order.isDefined, "group" -> grouped, "extra" -> extra.isDefined,
-          "distinct=false" -> !distinct, "chain" -> (nLinks > 1)).collect { case (f, true) => f }
-        if (order.isDefined) assert(got == want, label)
-        else assert(got.map(_.mkString("|")).sorted == want.map(_.mkString("|")).sorted, label)
-        val countArgs = Fetch.Args(chainOf(withExtra = false), where, distinct = distinct,
-          params = params - "x")
+        if (want.nonEmpty) covered ++= features - "a source read twice"
+        assertSameRows(got, want, args, label)
+        val countArgs = Fetch.Args(args.chain.replace(",x", ""), args.where,
+          distinct = args.distinct, params = args.params - "x")
         assert(Fetch.count(g, countArgs) == Fetch.count(vg, countArgs), s"$label: COUNT")
       }
     }
     assert(covered == Set("where", "fts", "order+limit", "group", "extra", "distinct=false", "chain"),
       covered)
+  }
+
+  test("random fetches bound by plan ≡ the same Fetch.sql text over registered temp views") {
+    // Fetch.df binds the SQL's view names to the source's frames by plan;
+    // spark.sql resolves the same names through temp views of those frames
+    val rng = new Random(6262)
+    val covered = scala.collection.mutable.Set.empty[String]
+    def overTempViews(src: GraphSource, sql: String): Seq[Seq[Any]] = {
+      val views = Seq(src.nodesView -> src.nodes, src.edgesView -> src.edges,
+        src.nodeFtsView -> src.nodeFts, src.edgeFtsView -> src.edgeFts)
+      views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+      try rowsOf(spark.sql(sql))
+      finally views.foreach { case (name, _) => spark.catalog.dropTempView(name) }
+    }
+    for (round <- 1 to 4) {
+      val g = randomGraph(rng)
+      val vg = new ViewGraph(spark, g.nodes, g.edges, Some(g.nodeFts), Some(g.edgeFts),
+        ftsU61 = g.ftsUnicode61)
+      for (q <- 1 to 8; src <- Seq(g, vg)) {
+        val (args, features) = randomFetch(rng)
+        val label = s"round $round query $q over $src: $args"
+        val want = overTempViews(src, Fetch.sql(src, args))
+        if (want.nonEmpty) covered ++= features
+        assertSameRows(rowsOf(Fetch.df(src, args)), want, args, label)
+        val countArgs = Fetch.Args(args.chain.replace(",x", ""), args.where, count = true,
+          distinct = args.distinct, params = args.params - "x")
+        assert(Seq(Fetch.count(src, countArgs)) == overTempViews(src, Fetch.sql(src, countArgs)).head,
+          s"$label: COUNT")
+      }
+    }
+    assert(covered == Set("where", "fts", "order+limit", "group", "extra", "distinct=false",
+      "chain", "a source read twice"), covered)
   }
 }

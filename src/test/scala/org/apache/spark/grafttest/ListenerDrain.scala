@@ -39,4 +39,25 @@ object ListenerDrain {
       (result, jobs.get(), stages.get())
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `body`'s result and the SQL executions it started
+    * (`SparkListenerSQLExecutionStart` events, a temp-view command
+    * included), counted between two drains. */
+  def sqlExecutionsDuring[A](sc: SparkContext)(body: => A): (A, Int) = {
+    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          executions.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      drain(sc)
+      (result, executions.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }

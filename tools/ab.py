@@ -12,7 +12,9 @@ workload it prints each side's failed share of operations and errored runs,
 then for every metric each side's median and quartiles, the change/base
 ratio of the medians, and the pairs the change won out of every pair run
 (ties count for neither side; a run that errored or lacks the metric loses
-its pair), then a verdict:
+its pair), then a verdict. Per operation kind it prints the median of the
+runs' p50s on each side, their ratio and the pairs whose change run had the
+lower p50 (out of the pairs where both runs report the kind). The verdicts:
 
   gain        the change won at least 9 of every 10 pairs (at least 10 run),
               its median beats the base median by more than the base runs'
@@ -180,11 +182,16 @@ def report(results, spec, trace):
         kinds = sorted(set.intersection(*[kinds_of(runs[s][side]) for s in kseeds
                                           for side in ("base", "change")])) if kseeds else []
         if kinds:
-            print("   per-kind median of the runs' p50 (ms): kind, base, change, ratio")
+            print("   per-kind median of the runs' p50 (ms): kind, base, change, ratio,"
+                  " pairs the change won (lower p50)")
         for k in kinds:
-            mb = statistics.median(runs[s]["base"]["kind_p50_ms"][k] for s in kseeds)
-            mc = statistics.median(runs[s]["change"]["kind_p50_ms"][k] for s in kseeds)
-            print(f"     {k:16} {mb:9.1f} {mc:9.1f} {mc / mb:7.3f}")
+            pairs = [(runs[s]["base"]["kind_p50_ms"][k], runs[s]["change"]["kind_p50_ms"][k])
+                     for s in kseeds]
+            mb = statistics.median(b for b, _ in pairs)
+            mc = statistics.median(c for _, c in pairs)
+            wins = sum(1 for b, c in pairs if c < b)
+            ratio = "%7.3f" % (mc / mb) if mb else "      -"
+            print(f"     {k:16} {mb:9.1f} {mc:9.1f} {ratio} {wins:>3}/{len(pairs)}")
 
 
 def main():
