@@ -186,7 +186,7 @@ final class WarehouseGraph(val spark: SparkSession, val path: String) extends Gr
     pin match {
       case Some(g) if g >= 0 && Layout.currentGen(dir).isDefined &&
           Layout.retainedGens(dir).contains(g) =>
-        graft.ops.ZTable.dataFrameAsOf(spark, dir, g)
+        graft.ops.Layout.zorderReadAsOf(spark, dir, g)
       case _ => graft.ops.ZTable.dataFrame(spark, dir)
     }
   }
@@ -414,7 +414,7 @@ final class WarehouseGraph(val spark: SparkSession, val path: String) extends Gr
     * re-tag, takedown sweep), uids stay DISTRIBUTED end to end: readback
     * becomes a semi-join of the z-scans against the distinct tail keys
     * and the deletes semi-join the same frame
-    * ([[graft.ops.Layout.zorderDeleteVectoredByKeyStr]]'s DataFrame
+    * ([[graft.ops.Layout.zorderDeleteVectoredByKey]]'s DataFrame
     * overload) — driver memory stays flat no matter how large the
     * restatement, and no IN-list of that size ever enters a plan.
     *
@@ -511,11 +511,11 @@ final class WarehouseGraph(val spark: SparkSession, val path: String) extends Gr
       // against both tables is exact — absent keys are no-ops
       collected match {
         case Some(keys) =>
-          Layout.zorderDeleteVectoredByKeyStr(spark, zn, "uid", keys)
-          Layout.zorderDeleteVectoredByKeyStr(spark, ze, "uid", keys)
+          Layout.zorderDeleteVectoredByKey(spark, zn, "uid", keys)
+          Layout.zorderDeleteVectoredByKey(spark, ze, "uid", keys)
         case None =>
-          Layout.zorderDeleteVectoredByKeyStr(spark, zn, "uid", touchedDf)
-          Layout.zorderDeleteVectoredByKeyStr(spark, ze, "uid", touchedDf)
+          Layout.zorderDeleteVectoredByKey(spark, zn, "uid", touchedDf)
+          Layout.zorderDeleteVectoredByKey(spark, ze, "uid", touchedDf)
       }
       if (nN > 0) { Layout.zorderAppend(newN, zn); Layout.zorderMaintain(spark, zn) }
       if (nE > 0) { Layout.zorderAppend(newE, ze); Layout.zorderMaintain(spark, ze) }
@@ -554,9 +554,9 @@ final class WarehouseGraph(val spark: SparkSession, val path: String) extends Gr
             fs: Seq[String]): Unit = {
           collected match {
             case Some(keys) =>
-              Layout.zorderDeleteVectoredByKeyStr(spark, dir, "uid", keys)
+              Layout.zorderDeleteVectoredByKey(spark, dir, "uid", keys)
             case None =>
-              Layout.zorderDeleteVectoredByKeyStr(spark, dir, "uid",
+              Layout.zorderDeleteVectoredByKey(spark, dir, "uid",
                 touchedDf)
           }
           val (docs, f2t) = zftsDocs(survivors, fs)
@@ -758,18 +758,18 @@ final class WarehouseGraph(val spark: SparkSession, val path: String) extends Gr
   }
 
   private def zViewOf(at: ZSnap): ViewGraph = {
-    import graft.ops.{Layout, ZTable}
+    import graft.ops.Layout
     def asOf(dir: String, gen: Long): DataFrame = {
       require(Layout.currentGen(dir).isDefined &&
         Layout.retainedGens(dir).contains(gen),
         s"generation $gen of $dir is no longer retained — raise " +
           "Layout.setRetention BEFORE the history you need")
-      ZTable.dataFrameAsOf(spark, dir, gen)
+      Layout.zorderReadAsOf(spark, dir, gen)
     }
     def ftsAsOf(dir: String, gen: Long): Option[DataFrame] =
       if (gen >= 0 && Layout.currentGen(dir).isDefined &&
         Layout.retainedGens(dir).contains(gen))
-        Some(ZTable.dataFrameAsOf(spark, dir, gen))
+        Some(Layout.zorderReadAsOf(spark, dir, gen))
       else None
     val n = asOf(s"$path/znodes", at.zn)
     val e = asOf(s"$path/zedges", at.ze)

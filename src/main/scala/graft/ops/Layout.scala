@@ -380,31 +380,16 @@ object Layout {
       java.nio.file.Files.isRegularFile(manifestPath(path, g)))
   }
 
-  /** TIME TRAVEL: read a RETAINED generation exactly as committed. */
+  /** TIME TRAVEL: read a RETAINED generation exactly as committed — the
+    * same relation, planner pruning and DV application as [[zorderRead]],
+    * planned from that generation's manifest. */
   def zorderReadAsOf(spark: SparkSession, path: String, gen: Long): DataFrame = {
-    require(java.nio.file.Files.isRegularFile(manifestPath(path, gen)),
+    val kept = retainedGens(path)
+    require(kept.contains(gen),
       s"generation $gen of $path is not retained (window: " +
-        s"${retainedGens(path).mkString(", ")}) — raise keepGenerations " +
+        s"${kept.mkString(", ")}) — raise keepGenerations " +
         "BEFORE the commits you want to travel to")
     liveScan(spark, path, gen, readManifest(path, gen))._1
-  }
-
-  /** [[zorderScan]] against a RETAINED generation: the same driver-side
-    * span pruning, planned from that generation's manifest — band queries
-    * over a snapshot prune exactly like queries over CURRENT. */
-  def zorderScanAsOf(spark: SparkSession, path: String, gen: Long,
-      aRange: (Long, Long), bRange: (Long, Long)): DataFrame = {
-    require(java.nio.file.Files.isRegularFile(manifestPath(path, gen)),
-      s"generation $gen of $path is not retained")
-    val man = readManifest(path, gen)
-    val hit = man.spans.filter(s =>
-      s.aMin <= aRange._2 && s.aMax >= aRange._1 &&
-      s.bMin <= bRange._2 && s.bMax >= bRange._1)
-    val base =
-      if (hit.isEmpty) spanFiles(spark, path, gen, man, man.spans).limit(0)
-      else spanFilesLive(spark, path, gen, man, hit)
-    base.filter(col(man.colA).between(aRange._1, aRange._2) &&
-      col(man.colB).between(bRange._1, bRange._2))
   }
 
   /** Operator-facing table census, all from manifests (never a data
@@ -536,7 +521,7 @@ object Layout {
             (p(i).toLong, p(i + 1).toLong)),
           nulls = (statStart until p.length by stride).map(i =>
             if (v >= 3) p(i + 2).toLong else -1L)) // pre-v3: honest unknown
-      }.sortBy(_.zLo),
+      }.sortBy(_.zLo).toVector, // indexed: verbs address spans by position
       mixedSchema = meta.get("mixed").contains("1"),
       dv = meta.get("dv"),
       statCols = meta.get("statcols").map(_.split(",").toSeq).getOrElse(Nil),
@@ -759,6 +744,17 @@ object Layout {
     (gen, readManifest(path, gen))
   }
 
+  /** The opening of every rewrite verb, under the caller's table lock:
+    * roll back crashed append intents, heal crash debris, then return the
+    * committed generation and its manifest. */
+  private def recoverCurrent(path: String): (Long, Manifest) = {
+    val cur = currentGen(path).getOrElse(
+      throw new IllegalStateException(s"no zorderInit at $path"))
+    rollbackStaleAppendIntents(path)
+    heal(path, cur)
+    (cur, readManifest(path, cur))
+  }
+
   /** PHYSICAL scan (tombstones not applied) of `man`'s files — the
     * relation every z-table read plans over: a [[ManifestFileIndex]], so
     * the planner's filters prune files by span, and no LIST or footer
@@ -931,9 +927,7 @@ object Layout {
   def zorderScan(spark: SparkSession, path: String,
       aRange: (Long, Long), bRange: (Long, Long)): DataFrame = {
     val (gen, man) = currentManifest(path)
-    val hit = man.spans.filter(s =>
-      s.aMin <= aRange._2 && s.aMax >= aRange._1 &&
-      s.bMin <= bRange._2 && s.bMax >= bRange._1)
+    val hit = bandHits(man.spans, aRange, bRange).map(man.spans)
     val base =
       if (hit.isEmpty) spanFiles(spark, path, gen, man, man.spans).limit(0)
       else spanFilesLive(spark, path, gen, man, hit)
@@ -946,10 +940,17 @@ object Layout {
   def zorderScanFiles(path: String, aRange: (Long, Long),
       bRange: (Long, Long)): (Int, Int) = {
     val (_, man) = currentManifest(path)
-    (man.spans.count(s =>
-      s.aMin <= aRange._2 && s.aMax >= aRange._1 &&
-      s.bMin <= bRange._2 && s.bMax >= bRange._1), man.spans.size)
+    (bandHits(man.spans, aRange, bRange).size, man.spans.size)
   }
+
+  /** Indexes of the spans intersecting BOTH bands — the conjunctive
+    * necessary condition every band scan, count and delete prunes by. */
+  private def bandHits(spans: Seq[Span], aRange: (Long, Long),
+      bRange: (Long, Long)): Seq[Int] =
+    spans.zipWithIndex.collect {
+      case (s, i) if s.aMin <= aRange._2 && s.aMax >= aRange._1 &&
+        s.bMin <= bRange._2 && s.bMax >= bRange._1 => i
+    }
 
   /** CURRENT generation plus any unmaintained landing rows — the
     * read-your-appends view (landing files are unclustered, so scans over
@@ -1169,7 +1170,7 @@ object Layout {
       schemaJson = schemaNext))
     // bloom sidecars CARRY across every rewrite commit: carried files'
     // bitsets stay exact (immutable content), rewritten files' NEW names
-    // are simply absent — and absent always opens ([[bloomAdmits]]), so
+    // are simply absent — and absent always opens ([[bloomSpanAdmission]]), so
     // untouched files keep their pruning with zero rescan while a
     // later incremental [[zorderBloomBuild]] fills the gaps
     carryBloomSidecars(path, cur, cur + 1)
@@ -1320,7 +1321,7 @@ object Layout {
 
   /** Probe/spec seam: commit a hand-built manifest as generation `gen`
     * (manifest write + CURRENT flip, no data validation). Lets
-    * [[LayoutProbe]] measure driver-side span pruning against a synthetic
+    * LayoutProbe measure driver-side span pruning against a synthetic
     * 100k-file manifest without writing 100k parquet files. */
   private[ops] def commitManifestUnsafe(path: String, gen: Long,
       m: Manifest): Unit = {
@@ -1343,35 +1344,44 @@ object Layout {
     * untouched (run [[zorderMaintain]] first if the delete must cover
     * them). Returns (rowsDeleted, filesRewrittenOrDropped, filesCarried). */
   def zorderDelete(spark: SparkSession, path: String, aRange: (Long, Long),
-      bRange: (Long, Long)): (Long, Int, Int) = withTableLock(path) {
-    val cur = currentGen(path).getOrElse(
-      throw new IllegalStateException(s"no zorderInit at $path"))
-    rollbackStaleAppendIntents(path)
-    heal(path, cur)
-    val man = readManifest(path, cur)
+      bRange: (Long, Long)): (Long, Int, Int) =
+    cowDelete(spark, path, (_, man) => bandHits(man.spans, aRange, bRange),
+      (man, _) => col(man.colA).between(aRange._1, aRange._2) &&
+        col(man.colB).between(bRange._1, bRange._2), "deleted")
+
+  /** Shared copy-on-write delete: `candIdxOf` (given the committed
+    * generation and its manifest) cuts the candidate files, ONE counting
+    * pass over them finds the files whose rows actually match `predOf`
+    * (given the manifest and the candidate scan) — candidates admit false
+    * positives, and this is what makes a repeat delete an exact no-op
+    * instead of a blind rewrite — and only those files rewrite, under
+    * the commit prefix `tag`. Returns (rowsDeleted,
+    * filesRewrittenOrDropped, filesCarried). */
+  private def cowDelete(spark: SparkSession, path: String,
+      candIdxOf: (Long, Manifest) => Seq[Int],
+      predOf: (Manifest, DataFrame) => Column,
+      tag: String): (Long, Int, Int) = withTableLock(path) {
+    val (cur, man) = recoverCurrent(path)
     val spans = man.spans
-    val pred = col(man.colA).between(aRange._1, aRange._2) &&
-      col(man.colB).between(bRange._1, bRange._2)
-    val hitIdx = spans.zipWithIndex.collect {
-      case (s, i) if s.aMin <= aRange._2 && s.aMax >= aRange._1 &&
-        s.bMin <= bRange._2 && s.bMax >= bRange._1 => i
-    }
-    if (hitIdx.isEmpty) return (0L, 0, spans.size)
+    val candIdx = candIdxOf(cur, man)
+    if (candIdx.isEmpty) return (0L, 0, spans.size)
+    graft.functions.GraftExtensions.register(spark)
     val z = zValue(scale16(col(man.colA), man.aLo, man.aHi),
       scale16(col(man.colB), man.bLo, man.bHi))
-    val matched = readWithFid(spark, path, cur, man, hitIdx, z)
-      .filter(pred).groupBy("_fid").agg(count(lit(1)))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // ≤ hit files
-    val affected = hitIdx.filter(matched.contains).sorted
+    val cand = readWithFid(spark, path, cur, man, candIdx, z)
+    val pred = predOf(man, cand)
+    val matched = cand.filter(pred).groupBy("_fid").agg(count(lit(1)))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // ≤ candidates
+    val affected = candIdx.filter(matched.contains).sorted
     if (affected.isEmpty) return (0L, 0, spans.size)
     val nDeleted = matched.values.sum
     // the rewrite pass reads ONLY the files with actual matches (the
-    // counting pass read the wider span-hit set once). NULL-key rows make
+    // counting pass read the wider candidate set once). NULL-key rows make
     // `pred` NULL, not false — coalesce keeps them, or they would vanish
     // from the rewritten files without ever counting as deleted.
     val survivors = readWithFid(spark, path, cur, man, affected, z)
       .filter(!coalesce(pred, lit(false)))
-    commitRewrite(spark, path, cur, man, affected, survivors, "deleted",
+    commitRewrite(spark, path, cur, man, affected, survivors, tag,
       requireFilePerFid = false, consumed = Seq.empty)
     (nDeleted, affected.length, spans.size - affected.length)
   }
@@ -1394,11 +1404,7 @@ object Layout {
   def zorderUpsert(spark: SparkSession, df: DataFrame,
       path: String): (Long, Long, Int) = withTableLock(path) {
     requireNoReservedCols(df)
-    val cur = currentGen(path).getOrElse(
-      throw new IllegalStateException(s"no zorderInit at $path"))
-    rollbackStaleAppendIntents(path)
-    heal(path, cur)
-    val man = readManifest(path, cur)
+    val (cur, man) = recoverCurrent(path)
     val spans = man.spans
     graft.functions.GraftExtensions.register(spark)
     import spark.implicits._
@@ -1714,8 +1720,9 @@ object Layout {
 
   /** Driver twin of the build's `xxhash64(key, seed)` — the SAME Catalyst
     * expression evaluated on literals, so probe positions match the built
-    * bitsets bit-for-bit by construction. */
-  private[ops] def probePositions(v: Long, bits: Int, hashes: Int): Seq[Int] = {
+    * bitsets bit-for-bit by construction: a `Long` for a long-domain
+    * sidecar, a `String` for a `domain = "str"` one. */
+  private[ops] def probePositions(v: Any, bits: Int, hashes: Int): Seq[Int] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     (0 until hashes).map { i =>
       val h = XxHash64(Seq(Literal(v), Literal(i.toLong)), 42L)
@@ -1724,28 +1731,13 @@ object Layout {
     }
   }
 
-  /** [[probePositions]]' STRING-domain twin — the same Catalyst XxHash64
-    * over a string literal, matching a `domain = "str"` sidecar's build
-    * expression bit-for-bit. */
-  private[ops] def probePositionsStr(v: String, bits: Int,
-      hashes: Int): Seq[Int] = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    (0 until hashes).map { i =>
-      val h = XxHash64(Seq(Literal(v), Literal(i.toLong)), 42L)
-        .eval(null).asInstanceOf[Long]
-      java.lang.Math.floorMod(h, bits.toLong).toInt
-    }
-  }
-
-  /** Probe positions for an arbitrary planner value against a sidecar's
-    * domain — None when the value can't convert in that domain (the
-    * caller must then admit EVERYTHING: pruning on the convertible
-    * subset of an IN-list would false-prune files holding the others). */
+  /** Probe positions for an arbitrary key value against a sidecar's
+    * domain — None when the value can't convert in that domain. */
   private def probeFor(b: BloomSidecar, v: Any): Option[Seq[Int]] =
     (b.domain, v) match {
       case ("str", u: org.apache.spark.unsafe.types.UTF8String) =>
-        Some(probePositionsStr(u.toString, b.bits, b.hashes))
-      case ("str", s: String) => Some(probePositionsStr(s, b.bits, b.hashes))
+        Some(probePositions(u.toString, b.bits, b.hashes))
+      case ("str", s: String) => Some(probePositions(s, b.bits, b.hashes))
       case ("long", other) =>
         SpanDomains.anyLong(other).map(probePositions(_, b.bits, b.hashes))
       case _ => None
@@ -1753,18 +1745,6 @@ object Layout {
 
   private def bloomMightContain(ws: Map[Int, Long], pos: Seq[Int]): Boolean =
     pos.forall(p => (ws.getOrElse(p / 64, 0L) & (1L << (p % 64))) != 0L)
-
-  /** Whether the sidecar admits `file` for a probe. A file ABSENT from
-    * the sidecar must be OPENED (true) — absent means "not yet indexed"
-    * (e.g. a sidecar carried across a DV commit, or an incremental
-    * refresh that hasn't run), and pruning it would be a false negative.
-    * An explicit EMPTY entry (an all-null-key file) still prunes. */
-  private def bloomAdmits(b: BloomSidecar, file: String,
-      pos: Seq[Int]): Boolean =
-    b.words.get(file) match {
-      case None => true
-      case Some(ws) => bloomMightContain(ws, pos)
-    }
 
   /** Bloom sizing for a MAINTAINED table (r16 — the graphdecades probe
     * caught the default 2^16 bits saturating at warehouse row counts:
@@ -1905,113 +1885,95 @@ object Layout {
     (toScan.size, carried.size)
   }
 
-  /** Planner seam for [[graft.ops.ZTable]]'s FileIndex: parse the
-    * generation's bloom sidecar over `keyCol` ONCE and return a
-    * values→file admission predicate, or None when no usable sidecar
-    * exists (no pruning — never wrong). The index caches the result for
-    * its lifetime, so the TSV parse amortizes across every query planned
-    * against that generation. Admission is may-contain: absent files
-    * open, explicit empty entries (all-null-key files) prune, and the
-    * planner's residual filter absorbs bloom false positives. */
-  private[ops] def bloomFilePredicate(path: String, gen: Long,
-      keyCol: String): Option[Seq[Long] => (String => Boolean)] =
-    readBloom(path, gen, keyCol).filter(_.domain == "long") // long probes only
-      .map { b => (values: Seq[Long]) =>
-        val probes = values.distinct.map(v => probePositions(v, b.bits, b.hashes))
-        (file: String) => probes.exists(p => bloomAdmits(b, file, p))
-      }
-
-  /** [[bloomFilePredicate]]'s index-aligned form: resolve `files` →
-    * bitsets ONCE (the per-file string-keyed map lookup measured as the
-    * dominant cost at 100k files — 84 ms/query vs 9 ms for span
-    * listing), so each query pays only the probe ANDs over a positional
-    * array. Files absent from the sidecar resolve to always-admit. */
+  /** The ONE bloom candidate step, for [[graft.ops.ZTable]]'s FileIndex
+    * and the explicit key verbs alike: parse the generation's sidecar over
+    * `keyCol` and resolve `files` → bitsets ONCE (the per-file
+    * string-keyed map lookup measured as the dominant cost at 100k files
+    * — 84 ms/query vs 9 ms for span listing), so each probe pays only the
+    * ANDs over a positional array. None when no complete sidecar exists;
+    * the returned admission is None when any value does not convert in
+    * the sidecar's recorded domain (pruning on the convertible subset
+    * would false-prune files holding the others). Admission is
+    * may-contain: a file ABSENT from the sidecar is admitted (absent
+    * means "not yet indexed", e.g. a sidecar carried across a DV commit),
+    * an explicit EMPTY entry (an all-null-key file) prunes, and an empty
+    * value list admits no file. */
   private[ops] def bloomSpanAdmission(path: String, gen: Long,
       keyCol: String,
-      files: Seq[String]): Option[Seq[Any] => Array[Boolean]] =
+      files: Seq[String]): Option[Seq[Any] => Option[Array[Boolean]]] =
     readBloom(path, gen, keyCol).map { b =>
       val wordsByFile: Array[Option[Map[Int, Long]]] =
         files.iterator.map(f => b.words.get(f)).toArray
       (values: Seq[Any]) => {
         val converted = values.distinct.map(v => probeFor(b, v))
-        // any value the sidecar's domain can't hash ⇒ admit EVERYTHING
-        // (pruning on the convertible subset would false-prune files
-        // holding the unconvertible values)
-        if (values.isEmpty || converted.exists(_.isEmpty))
-          Array.fill(wordsByFile.length)(true)
-        else {
+        Option.when(converted.forall(_.isDefined)) {
           val probes = converted.flatten
           wordsByFile.map {
-            case None => true // absent = not yet indexed: must open
+            case None => probes.nonEmpty // absent = not yet indexed: must open
             case Some(ws) => probes.exists(p => bloomMightContain(ws, p))
           }
         }
       }
     }
 
-  /** Which files a [[zorderPointLookup]] would open: (open, total,
-    * bloomUsed). `bloomUsed = false` means no sidecar exists for the
-    * CURRENT generation + column — the lookup then falls back to every
-    * file (correct, unpruned; run [[zorderBloomBuild]] after commits to
-    * keep lookups pruned). */
-  def zorderLookupFiles(path: String, keyCol: String,
-      values: Seq[Long]): (Int, Int, Boolean) =
-    lookupFilesAny(path, keyCol, values, "long")
-
-  /** [[zorderLookupFiles]] for a STRING-keyed sidecar. */
-  def zorderLookupFilesStr(path: String, keyCol: String,
-      values: Seq[String]): (Int, Int, Boolean) =
-    lookupFilesAny(path, keyCol, values, "str")
-
-  private def lookupFilesAny(path: String, keyCol: String,
-      values: Seq[Any], wantDom: String): (Int, Int, Boolean) = {
-    val (cur, man) = currentManifest(path)
-    // a sidecar in the WRONG domain is the same as no sidecar: probing
-    // long positions against string-hashed bitsets (or vice versa) would
-    // false-prune — fall back to every file instead
-    readBloom(path, cur, keyCol).filter(_.domain == wantDom) match {
-      case None => (man.spans.size, man.spans.size, false)
-      case Some(b) =>
-        val probes = values.distinct.flatMap(v => probeFor(b, v))
-        (man.spans.count(s => probes.exists(p =>
-          bloomAdmits(b, s.file, p))),
-          man.spans.size, true)
+  /** Candidate span indexes of generation `gen` for `keyCol IN values`:
+    * the files [[bloomSpanAdmission]] admits (bloomUsed = true), or every
+    * file (bloomUsed = false) when it has no answer. An empty value list
+    * has no candidate either way. */
+  private def keyCandidates(path: String, gen: Long, man: Manifest,
+      keyCol: String, values: Seq[Any]): (Seq[Int], Boolean) =
+    bloomSpanAdmission(path, gen, keyCol, man.spans.map(_.file))
+      .flatMap(_(values)) match {
+      case Some(admit) => (man.spans.indices.filter(admit), true)
+      case None => (if (values.isEmpty) Seq.empty else man.spans.indices, false)
     }
+
+  /** Whether `keyCol` is a string column of `scan` — the verbs' domain
+    * rule for residual predicates and semi-join keys (any other type
+    * compares in the long domain). Read from the scan's schema: no footer
+    * read and no Spark job. */
+  private def isStringKey(scan: DataFrame, keyCol: String): Boolean =
+    scan.schema.fields.exists(f => f.name.equalsIgnoreCase(keyCol) &&
+      f.dataType == org.apache.spark.sql.types.StringType)
+
+  /** `keyCol IN values` in the column's own domain (see [[isStringKey]]).
+    * String keys compare as strings: a raw non-string value would make
+    * Spark's coercion cast the COLUMN to the value's type instead. */
+  private def keyIn(scan: DataFrame, keyCol: String, values: Seq[Any]): Column =
+    if (isStringKey(scan, keyCol))
+      col(keyCol).isin(values.map {
+        case v: String => v
+        case v => lit(v).cast("string")
+      }: _*)
+    else col(keyCol).cast("long").isin(values: _*)
+
+  /** Which files a [[zorderPointLookup]] would open: (open, total,
+    * bloomUsed). `bloomUsed = false` means the CURRENT generation has no
+    * complete sidecar for the column, or a value does not convert in its
+    * domain — the lookup then falls back to every file (correct,
+    * unpruned; run [[zorderBloomBuild]] after commits to keep lookups
+    * pruned). */
+  def zorderLookupFiles(path: String, keyCol: String,
+      values: Seq[Any]): (Int, Int, Boolean) = {
+    val (cur, man) = currentManifest(path)
+    val (cand, used) = keyCandidates(path, cur, man, keyCol, values)
+    (cand.size, man.spans.size, used)
   }
 
   /** Point lookup by bloom sidecar: rows of the CURRENT generation whose
-    * `keyCol` is one of `values`, opening only files whose bitset admits
-    * at least one probe (no false negatives — the residual IN filter
-    * handles bloom false positives). Without a current-generation sidecar
-    * (or with one in the wrong hash domain) the lookup still answers,
-    * unpruned. */
+    * `keyCol` is one of `values` (integral keys, or strings — doc ids,
+    * URLs, business keys — against a string column), opening only the
+    * files [[zorderLookupFiles]] counts (no false negatives — the residual
+    * IN filter handles bloom false positives). Without a usable sidecar
+    * the lookup still answers, unpruned. */
   def zorderPointLookup(spark: SparkSession, path: String, keyCol: String,
-      values: Seq[Long]): DataFrame =
-    pointLookupAny(spark, path, keyCol, values, "long",
-      col(keyCol).cast("long").isin(values: _*))
-
-  /** [[zorderPointLookup]] for a STRING key — the doc-id/URL/business-key
-    * shape a training-data pipeline probes with (r15). */
-  def zorderPointLookupStr(spark: SparkSession, path: String, keyCol: String,
-      values: Seq[String]): DataFrame =
-    pointLookupAny(spark, path, keyCol, values, "str",
-      col(keyCol).isin(values: _*))
-
-  private def pointLookupAny(spark: SparkSession, path: String,
-      keyCol: String, values: Seq[Any], wantDom: String,
-      residual: Column): DataFrame = {
+      values: Seq[Any]): DataFrame = {
     val (gen, man) = currentManifest(path)
-    val hit = readBloom(path, gen, keyCol).filter(_.domain == wantDom) match {
-      case None => man.spans
-      case Some(b) =>
-        val probes = values.distinct.flatMap(v => probeFor(b, v))
-        man.spans.filter(s => probes.exists(p =>
-          bloomAdmits(b, s.file, p)))
-    }
+    val (cand, _) = keyCandidates(path, gen, man, keyCol, values)
     val base =
-      if (hit.isEmpty) spanFiles(spark, path, gen, man, man.spans).limit(0)
-      else spanFilesLive(spark, path, gen, man, hit)
-    base.filter(residual)
+      if (cand.isEmpty) spanFiles(spark, path, gen, man, man.spans).limit(0)
+      else spanFilesLive(spark, path, gen, man, cand.map(man.spans))
+    base.filter(keyIn(base, keyCol, values))
   }
 
   // -------------------------------------- metadata-only band aggregates
@@ -2039,9 +2001,7 @@ object Layout {
 
   private def splitCovered(spans: Seq[Span], aRange: (Long, Long),
       bRange: (Long, Long)): (Seq[Span], Seq[Span]) = {
-    val touched = spans.filter(s =>
-      s.aMin <= aRange._2 && s.aMax >= aRange._1 &&
-      s.bMin <= bRange._2 && s.bMax >= bRange._1)
+    val touched = bandHits(spans, aRange, bRange).map(spans)
     touched.partition(s =>
       s.aMin >= aRange._1 && s.aMax <= aRange._2 &&
       s.bMin >= bRange._1 && s.bMax <= bRange._2)
@@ -2085,51 +2045,22 @@ object Layout {
 
   /** Keyed DELETE on a NON-layout column (the GDPR/takedown shape:
     * `DELETE WHERE key IN (...)` by document id, order key, user id —
-    * values the z-spans know nothing about): candidate files come from
-    * the bloom sidecar when one exists for the CURRENT generation
-    * (no false negatives — a file the bloom rejects provably holds no
-    * probe key), else every file; ONE pruned counting pass finds files
-    * with actual matches, only those rewrite (z-sorted — span tightness
-    * survives), fully-emptied files drop from the manifest. Same commit
-    * discipline, lock, and heal as every rewrite here. NOTE: the bloom
-    * sidecar is generation-addressed, so the new generation needs a
-    * [[zorderBloomBuild]] refresh (incremental — only the rewritten
-    * files rescan) before the next pruned lookup. Returns (rowsDeleted,
-    * filesRewrittenOrDropped, filesCarried). */
+    * values the z-spans know nothing about), integral or string keys
+    * alike: candidate files are the ones [[zorderLookupFiles]] counts (the
+    * bloom sidecar's admission when the CURRENT generation has a usable
+    * one — no false negatives — else every file); ONE pruned counting
+    * pass finds files with actual matches, only those rewrite (z-sorted —
+    * span tightness survives), fully-emptied files drop from the
+    * manifest. Same commit discipline, lock, and heal as every rewrite
+    * here. NOTE: the bloom sidecar is generation-addressed, so the new
+    * generation needs a [[zorderBloomBuild]] refresh (incremental — only
+    * the rewritten files rescan) before the next pruned lookup. Returns
+    * (rowsDeleted, filesRewrittenOrDropped, filesCarried). */
   def zorderDeleteByKey(spark: SparkSession, path: String, keyCol: String,
-      values: Seq[Long]): (Long, Int, Int) = withTableLock(path) {
-    val cur = currentGen(path).getOrElse(
-      throw new IllegalStateException(s"no zorderInit at $path"))
-    rollbackStaleAppendIntents(path)
-    heal(path, cur)
-    val man = readManifest(path, cur)
-    val spans = man.spans
-    // wrong-domain sidecars never narrow (probing long positions against
-    // string-hashed bitsets would false-prune)
-    val candIdx = readBloom(path, cur, keyCol).filter(_.domain == "long") match {
-      case None => spans.indices.toSeq
-      case Some(b) =>
-        val probes = values.distinct.map(v => probePositions(v, b.bits, b.hashes))
-        spans.indices.filter(i => probes.exists(p =>
-          bloomAdmits(b, spans(i).file, p)))
-    }
-    if (candIdx.isEmpty) return (0L, 0, spans.size)
-    graft.functions.GraftExtensions.register(spark)
-    val z = zValue(scale16(col(man.colA), man.aLo, man.aHi),
-      scale16(col(man.colB), man.bLo, man.bHi))
-    val pred = col(keyCol).cast("long").isin(values: _*)
-    val matched = readWithFid(spark, path, cur, man, candIdx, z)
-      .filter(pred).groupBy("_fid").agg(count(lit(1)))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val affected = candIdx.filter(matched.contains).sorted
-    if (affected.isEmpty) return (0L, 0, spans.size)
-    val nDeleted = matched.values.sum
-    val survivors = readWithFid(spark, path, cur, man, affected, z)
-      .filter(!coalesce(pred, lit(false))) // NULL keys never match: kept
-    commitRewrite(spark, path, cur, man, affected, survivors, "keydel",
-      requireFilePerFid = false, consumed = Seq.empty)
-    (nDeleted, affected.length, spans.size - affected.length)
-  }
+      values: Seq[Any]): (Long, Int, Int) =
+    cowDelete(spark, path,
+      (cur, man) => keyCandidates(path, cur, man, keyCol, values)._1,
+      (_, scan) => keyIn(scan, keyCol, values), "keydel")
 
   // ------------------------------------- deletion vectors (merge-on-read)
   //
@@ -2174,29 +2105,27 @@ object Layout {
     graft.engine.WarehouseMeta.deleteRecursively(staging)
   }
 
-  /** [[dvDelete]] with a plain Column predicate — the shape every
-    * driver-keyed caller uses. */
+  /** [[dvDeleteMatched]] with a plain Column predicate (given the
+    * manifest and the candidate scan) — the shape every driver-keyed
+    * caller uses. */
   private def dvDelete(spark: SparkSession, path: String,
-      candIdxOf: Manifest => Seq[Int],
-      predOf: Manifest => Column): (Long, Int) =
+      candIdxOf: (Long, Manifest) => Seq[Int],
+      predOf: (Manifest, DataFrame) => Column): (Long, Int) =
     dvDeleteMatched(spark, path, candIdxOf,
-      (man, scan) => scan.filter(coalesce(predOf(man), lit(false))))
+      (man, scan) => scan.filter(coalesce(predOf(man, scan), lit(false))))
 
   /** Shared merge-on-read delete: tombstone live rows of the candidate
-    * files that `matchOf` keeps (given the candidate scan with `_fname`/
-    * `_pos` identity columns, return the doomed rows — a filter for
-    * literal predicates, a semi-join for DISTRIBUTED key sets), touching
-    * NO data file. Returns (rowsDeleted, filesTombstoned). */
+    * files (`candIdxOf`, given the committed generation and its manifest)
+    * that `matchOf` keeps (given the candidate scan with `_fname`/`_pos`
+    * identity columns, return the doomed rows — a filter for literal
+    * predicates, a semi-join for DISTRIBUTED key sets), touching NO data
+    * file. Returns (rowsDeleted, filesTombstoned). */
   private def dvDeleteMatched(spark: SparkSession, path: String,
-      candIdxOf: Manifest => Seq[Int],
+      candIdxOf: (Long, Manifest) => Seq[Int],
       matchOf: (Manifest, DataFrame) => DataFrame): (Long, Int) = withTableLock(path) {
-    val cur = currentGen(path).getOrElse(
-      throw new IllegalStateException(s"no zorderInit at $path"))
-    rollbackStaleAppendIntents(path)
-    heal(path, cur)
-    val man = readManifest(path, cur)
+    val (cur, man) = recoverCurrent(path)
     val spans = man.spans
-    val candIdx = candIdxOf(man)
+    val candIdx = candIdxOf(cur, man)
     if (candIdx.isEmpty) return (0L, 0)
     val root = java.nio.file.Paths.get(path).toAbsolutePath
     // LIVE candidate read with per-row file identity + position: the live
@@ -2249,7 +2178,7 @@ object Layout {
     // files' entries become unreachable names — harmless). Without this,
     // the sidecar ages out with the old generation and the takedown
     // loop's SECOND batch would scan every candidate file. Safe because
-    // a file ABSENT from a sidecar is always opened ([[bloomAdmits]]).
+    // a file ABSENT from a sidecar is always opened ([[bloomSpanAdmission]]).
     carryBloomSidecars(path, cur, cur + 1)
     writeAtomic(currentPtr(path), (cur + 1).toString)
     heal(path, cur + 1)
@@ -2314,94 +2243,45 @@ object Layout {
     * (rowsDeleted, filesTombstoned). */
   def zorderDeleteVectored(spark: SparkSession, path: String,
       aRange: (Long, Long), bRange: (Long, Long)): (Long, Int) =
-    dvDelete(spark, path,
-      man => man.spans.zipWithIndex.collect {
-        case (s, i) if s.aMin <= aRange._2 && s.aMax >= aRange._1 &&
-          s.bMin <= bRange._2 && s.bMax >= bRange._1 => i
-      },
-      man => col(man.colA).between(aRange._1, aRange._2) &&
+    dvDelete(spark, path, (_, man) => bandHits(man.spans, aRange, bRange),
+      (man, _) => col(man.colA).between(aRange._1, aRange._2) &&
         col(man.colB).between(bRange._1, bRange._2))
 
   /** Merge-on-read keyed DELETE on a NON-layout column — the vectored
-    * twin of [[zorderDeleteByKey]]: candidates bloom-pruned when the
-    * CURRENT generation has a sidecar for `keyCol` (no false negatives),
-    * matches tombstoned, zero data files touched. The GDPR/takedown
-    * two-step: this call makes the rows unreadable NOW;
-    * [[zorderDvMaterialize]] erases them physically on the operator's
-    * cadence. Returns (rowsDeleted, filesTombstoned). */
+    * twin of [[zorderDeleteByKey]], integral or string keys alike (the
+    * takedown-by-id/URL shape): the same candidate files, matches
+    * tombstoned, zero data files touched. The GDPR/takedown two-step:
+    * this call makes the rows unreadable NOW; [[zorderDvMaterialize]]
+    * erases them physically on the operator's cadence. Repeat is an exact
+    * no-op. Returns (rowsDeleted, filesTombstoned). */
   def zorderDeleteVectoredByKey(spark: SparkSession, path: String,
-      keyCol: String, values: Seq[Long]): (Long, Int) =
+      keyCol: String, values: Seq[Any]): (Long, Int) =
     dvDelete(spark, path,
-      man => readBloom(path, currentGen(path).get, keyCol)
-          .filter(_.domain == "long") match { // wrong domain never narrows
-        case None => man.spans.indices.toSeq
-        case Some(b) =>
-          val probes = values.distinct.map(v =>
-            probePositions(v, b.bits, b.hashes))
-          man.spans.indices.filter(i => probes.exists(p =>
-            bloomAdmits(b, man.spans(i).file, p)))
-      },
-      _ => col(keyCol).cast("long").isin(values: _*))
-
-  /** [[zorderDeleteVectoredByKey]] for a STRING key (r15) — the
-    * takedown-by-URL/doc-id shape: candidates narrow through a
-    * STRING-domain bloom sidecar when the CURRENT generation has one
-    * (no false negatives), matches tombstone, zero data files touched,
-    * repeat is an exact no-op. Returns (rowsDeleted, filesTombstoned). */
-  def zorderDeleteVectoredByKeyStr(spark: SparkSession, path: String,
-      keyCol: String, values: Seq[String]): (Long, Int) =
-    dvDelete(spark, path,
-      man => readBloom(path, currentGen(path).get, keyCol)
-          .filter(_.domain == "str") match { // wrong domain never narrows
-        case None => man.spans.indices.toSeq
-        case Some(b) =>
-          val probes = values.distinct.map(v =>
-            probePositionsStr(v, b.bits, b.hashes))
-          man.spans.indices.filter(i => probes.exists(p =>
-            bloomAdmits(b, man.spans(i).file, p)))
-      },
-      _ => col(keyCol).isin(values: _*))
+      (cur, man) => keyCandidates(path, cur, man, keyCol, values)._1,
+      (_, scan) => keyIn(scan, keyCol, values))
 
   /** [[zorderDeleteVectoredByKey]] with a DISTRIBUTED key set — the
-    * shape a large CDC poll needs: `keys` is a single-column DataFrame of
-    * long key values that never lands on the driver; doomed rows resolve
-    * through one semi-join of the candidate scan against it. No bloom
-    * narrowing (bitset probes need driver-side values), so every file
-    * scans — the right trade exactly when the key set is too big to
-    * collect, because churn that size touches most files anyway. NULL
-    * keys in `keys` match nothing (join equality), mirroring the
-    * driver-keyed twin. Returns (rowsDeleted, filesTombstoned). */
+    * shape a large CDC poll or a bulk journal restatement (mass re-tag,
+    * takedown sweep) needs: `keys` is a single-column DataFrame of key
+    * values that never lands on the driver; doomed rows resolve through
+    * one semi-join of the candidate scan against it, both sides in the
+    * key column's domain (see [[isStringKey]]). No bloom narrowing (bitset
+    * probes need driver-side values), so every file scans — the right
+    * trade exactly when the key set is too big to collect, because churn
+    * that size touches most files anyway. NULL keys in `keys` match
+    * nothing (join equality), mirroring the driver-keyed twin. Returns
+    * (rowsDeleted, filesTombstoned). */
   def zorderDeleteVectoredByKey(spark: SparkSession, path: String,
       keyCol: String, keys: DataFrame): (Long, Int) = {
     require(keys.columns.length == 1,
       s"keys must be a single-column DataFrame, got ${keys.columns.length}")
-    val k = keys.select(col(keys.columns.head).cast("long").as("_del_key"))
     dvDeleteMatched(spark, path,
-      man => man.spans.indices.toSeq,
-      (_, scan) => scan.join(k,
-        scan(keyCol).cast("long") === k("_del_key"), "left_semi"))
-  }
-
-  /** [[zorderDeleteVectoredByKeyStr]] with a DISTRIBUTED key set — the
-    * string twin of the DataFrame-keys overload above, and the shape a
-    * bulk journal restatement needs (mass re-tag, takedown sweep):
-    * `keys` is a single-column DataFrame of string key values that never
-    * lands on the driver; doomed rows resolve through one semi-join of
-    * the candidate scan against it. No bloom narrowing (bitset probes
-    * need driver-side values), so every file scans — the right trade
-    * exactly when the key set is too big to collect, because churn that
-    * size touches most files anyway. NULL keys match nothing (join
-    * equality). Returns (rowsDeleted, filesTombstoned). */
-  def zorderDeleteVectoredByKeyStr(spark: SparkSession, path: String,
-      keyCol: String, keys: DataFrame): (Long, Int) = {
-    require(keys.columns.length == 1,
-      s"keys must be a single-column DataFrame, got ${keys.columns.length}")
-    val k = keys.select(
-      col(keys.columns.head).cast("string").as("_del_key"))
-    dvDeleteMatched(spark, path,
-      man => man.spans.indices.toSeq,
-      (_, scan) => scan.join(k,
-        scan(keyCol).cast("string") === k("_del_key"), "left_semi"))
+      (_, man) => man.spans.indices,
+      (_, scan) => {
+        val dom = if (isStringKey(scan, keyCol)) "string" else "long"
+        val k = keys.select(col(keys.columns.head).cast(dom).as("_del_key"))
+        scan.join(k, scan(keyCol).cast(dom) === k("_del_key"), "left_semi")
+      })
   }
 
   /** PHYSICAL purge of every tombstone: rewrite exactly the files with
@@ -2412,11 +2292,7 @@ object Layout {
     * rowsPurged); (0, 0) when the table has no tombstones. */
   def zorderDvMaterialize(spark: SparkSession, path: String): (Int, Long) =
     withTableLock(path) {
-      val cur = currentGen(path).getOrElse(
-        throw new IllegalStateException(s"no zorderInit at $path"))
-      rollbackStaleAppendIntents(path)
-      heal(path, cur)
-      val man = readManifest(path, cur)
+      val (cur, man) = recoverCurrent(path)
       val affected = man.spans.zipWithIndex.collect {
         case (s, i) if s.dvRows > 0 => i
       }
@@ -2563,11 +2439,7 @@ object Layout {
   def zorderCompactSmall(spark: SparkSession, path: String,
       targetRows: Long): (Int, Int, Int) = withTableLock(path) {
     require(targetRows >= 1, "need targetRows >= 1")
-    val cur = currentGen(path).getOrElse(
-      throw new IllegalStateException(s"no zorderInit at $path"))
-    rollbackStaleAppendIntents(path)
-    heal(path, cur)
-    val man = readManifest(path, cur)
+    val (cur, man) = recoverCurrent(path)
     val spans = man.spans // sorted by zLo
     // greedy run packing: consecutive small files fold into a group until
     // the group reaches targetRows; singleton groups carry unchanged

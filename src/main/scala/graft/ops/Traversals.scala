@@ -70,15 +70,12 @@ object Traversals {
     * all — see BucketingSpec's zero-shuffle hop-join assert over the
     * bucketed warehouse ([[graft.StarWarehouse]]). */
   def kHop(g: GraphSource, seeds: DataFrame, hops: Int, directed: Boolean = false,
-      broadcastFrontierRows: Long = 1000000L,
-      persistEdges: Boolean = true): DataFrame = {
+      broadcastFrontierRows: Long = 1000000L): DataFrame = {
     if (hops <= 0) return g.nodes.limit(0) // don't pay the edge compaction
-    val e0 = g.edges.select("startuid", "enduid")
-    val e =
-      if (persistEdges) e0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else e0
+    val e = g.edges.select("startuid", "enduid")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (persistEdges) e.count() // eager fill: every hop reads the compacted pair list
+      e.count() // eager fill: every hop reads the compacted pair list
       var visited = seeds.select("uid").localCheckpoint(true)
       var frontier = visited
       var nFrontier = visited.count()
@@ -110,7 +107,7 @@ object Traversals {
       }
       // reached = union of disjoint frontiers: distinct-free semi-join
       g.nodes.join(reached, Seq("uid"), "left_semi")
-    } finally if (persistEdges) e.unpersist(false) // result lineage only references the frontiers
+    } finally e.unpersist(false) // result lineage only references the frontiers
   }
 
   /** uid → dense VertexId dictionary for the GraphX bridge. Eagerly

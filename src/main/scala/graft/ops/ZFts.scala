@@ -92,10 +92,10 @@ object ZFts {
       if (nTouched == 0L) return (0L, 0L)
       val nRows = fresh.count()
       if (nTouched <= collectThreshold)
-        Layout.zorderDeleteVectoredByKeyStr(spark, path, "uid",
+        Layout.zorderDeleteVectoredByKey(spark, path, "uid",
           uids.collect().map(_.getString(0)).toSeq)
       else
-        Layout.zorderDeleteVectoredByKeyStr(spark, path, "uid", uids)
+        Layout.zorderDeleteVectoredByKey(spark, path, "uid", uids)
       if (nRows > 0) {
         Layout.zorderAppend(fresh, path)
         Layout.zorderMaintain(spark, path)
@@ -134,12 +134,12 @@ object ZFts {
     * (postingRowsDeleted, filesTombstoned). */
   def deletefts(spark: SparkSession, path: String,
       uids: Seq[String]): (Long, Int) =
-    Layout.zorderDeleteVectoredByKeyStr(spark, path, "uid", uids)
+    Layout.zorderDeleteVectoredByKey(spark, path, "uid", uids)
 
   /** [[deletefts]] with a DISTRIBUTED uid set (bulk takedown shape). */
   def deletefts(spark: SparkSession, path: String,
       uids: DataFrame): (Long, Int) =
-    Layout.zorderDeleteVectoredByKeyStr(spark, path, "uid", uids)
+    Layout.zorderDeleteVectoredByKey(spark, path, "uid", uids)
 
   /** MATCH through the maintained postings: (uid, score). Term-literal
     * predicates in the compiled match SQL prune the listing through the

@@ -45,19 +45,10 @@ object ZTable {
     * The scan is memoized per generation ([[Layout.liveScan]]): keyed by
     * the table, the generation and its parsed manifest, held only while
     * the generation is inside the table's retention window. A read of an
-    * unchanged generation returns the same DataFrame and reads no DV. */
+    * unchanged generation returns the same DataFrame and reads no DV.
+    * [[Layout.zorderReadAsOf]] is the same read of a RETAINED generation. */
   def dataFrame(spark: SparkSession, path: String): DataFrame =
     dataFrameWithIndex(spark, path)._1
-
-  /** [[dataFrame]] against a RETAINED generation — planner-integrated
-    * TIME TRAVEL: the same FileIndex pruning, DV application, and SQL
-    * composability, planned from that generation's manifest. */
-  def dataFrameAsOf(spark: SparkSession, path: String, gen: Long): DataFrame = {
-    require(Layout.retainedGens(path).contains(gen),
-      s"generation $gen of $path is not retained (window: " +
-        s"${Layout.retainedGens(path).mkString(", ")})")
-    Layout.liveScan(spark, path, gen, Layout.readManifest(path, gen))._1
-  }
 
   /** [[dataFrame]] plus its [[ManifestFileIndex]], for callers auditing
     * what a predicate prunes ([[ManifestFileIndex.prunedCount]]). */
@@ -136,8 +127,9 @@ final class ManifestFileIndex private[ops] (path: String,
   // generation memo of Layout.liveScan), and a sidecar built after the
   // generation's first read must still prune the reads after it.
   private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[Any] => Array[Boolean]]()
-  private def bloomFor(colName: String): Option[Seq[Any] => Array[Boolean]] =
+    String, Seq[Any] => Option[Array[Boolean]]]()
+  private def bloomFor(
+      colName: String): Option[Seq[Any] => Option[Array[Boolean]]] =
     Option(bloomCache.get(colName)).orElse {
       val found = Layout.bloomSpanAdmission(path, gen, colName, man.spans.map(_.file))
       found.map(b => bloomCache.computeIfAbsent(colName, _ => b))
@@ -242,7 +234,7 @@ final class ManifestFileIndex private[ops] (path: String,
     // and the planner's residual filter keep the result exact.
     val bloomConjuncts: Seq[Array[Boolean]] =
       pointValues(dataFilters).flatMap { case (colName, values) =>
-        bloomFor(colName).map(mk => mk(values))
+        bloomFor(colName).flatMap(mk => mk(values)) // None: no conjunct
       }
     // disjunctive trees (r14): Catalyst hands a top-level OR to listFiles
     // as one expression, which the conjunctive boundsFor path can't use —
@@ -382,10 +374,10 @@ final class ManifestFileIndex private[ops] (path: String,
     * the shapes a bloom sidecar can prune on: `k = v`, `v = k`,
     * `k IN (…)`, and the optimizer's `InSet` form. Values pass RAW
     * (boxed integrals / UTF8String) — [[Layout.bloomSpanAdmission]]
-    * converts them in the sidecar's recorded hash domain and admits
-    * everything on any mismatch. One entry per predicate (conjunctive);
-    * a predicate with any non-literal piece contributes nothing (no
-    * pruning, never wrong). */
+    * converts them in the sidecar's recorded hash domain and gives no
+    * admission (no pruning) on any mismatch. One entry per predicate
+    * (conjunctive); a predicate with any non-literal piece contributes
+    * nothing (no pruning, never wrong). */
   private def pointValues(
       filters: Seq[Expression]): Seq[(String, Seq[Any])] = {
     def ok(a: Attribute): Boolean =

@@ -201,7 +201,7 @@ class BucketingSpec extends AnyFunSuite with SparkSpec {
     // simulate the increment killed between its append and its maintain:
     // touched uid tombstoned, fresh copy sitting in landing/, NO marker
     // advance — the exact at-least-once window the fold-first seam closes
-    graft.ops.Layout.zorderDeleteVectoredByKeyStr(spark, s"$dir/znodes",
+    graft.ops.Layout.zorderDeleteVectoredByKey(spark, s"$dir/znodes",
       "uid", Seq(ns(5).uid))
     graft.ops.Layout.zorderAppend(
       wh.nodes.filter(col("uid") === ns(5).uid)
@@ -240,9 +240,9 @@ class BucketingSpec extends AnyFunSuite with SparkSpec {
     // half-applied state
     val touched = wh.journal.filter(col("seq") > seq0)
       .select("uid").distinct().collect().map(_.getString(0)).toSeq
-    graft.ops.Layout.zorderDeleteVectoredByKeyStr(spark, s"$dir/znodes",
+    graft.ops.Layout.zorderDeleteVectoredByKey(spark, s"$dir/znodes",
       "uid", touched)
-    graft.ops.Layout.zorderDeleteVectoredByKeyStr(spark, s"$dir/zedges",
+    graft.ops.Layout.zorderDeleteVectoredByKey(spark, s"$dir/zedges",
       "uid", touched)
     // reader isolation: the pinned cut still serves the full pre-churn
     // graph even though the CURRENT generation lost the touched rows
@@ -500,9 +500,9 @@ class BucketingSpec extends AnyFunSuite with SparkSpec {
         val touched = wh.journal.filter(col("seq") > seq0)
           .select("uid").distinct().collect().map(_.getString(0)).toSeq
         if (touched.nonEmpty) {
-          graft.ops.Layout.zorderDeleteVectoredByKeyStr(spark,
+          graft.ops.Layout.zorderDeleteVectoredByKey(spark,
             s"$dir/znodes", "uid", touched)
-          graft.ops.Layout.zorderDeleteVectoredByKeyStr(spark,
+          graft.ops.Layout.zorderDeleteVectoredByKey(spark,
             s"$dir/zedges", "uid", touched)
         }
       }

@@ -106,8 +106,8 @@ class DeletionVectorSpec extends AnyFunSuite with SparkSpec {
             a >= aLo && a <= aLo + 8 && b >= bLo && b <= bLo + 8 },
           s"$step: zorderScan from ($aLo, $bLo)")
         Layout.retainedGens(dir).filter(byGen.contains).foreach { g =>
-          assert(rows(ZTable.dataFrameAsOf(spark, dir, g)) == byGen(g).toSeq.sorted,
-            s"$step: dataFrameAsOf($g)")
+          assert(rows(Layout.zorderReadAsOf(spark, dir, g)) == byGen(g).toSeq.sorted,
+            s"$step: zorderReadAsOf($g)")
         }
       }
       for (i <- 0 until 8) {
@@ -165,8 +165,8 @@ class DeletionVectorSpec extends AnyFunSuite with SparkSpec {
         assert(rows(df) == want, s"$step: dataFrame")
         assert(ZTable.dataFrame(spark, dir) eq df, s"$step: an unchanged generation rebuilt its scan")
         Layout.retainedGens(dir).filter(byGen.contains).foreach { g =>
-          assert(rows(ZTable.dataFrameAsOf(spark, dir, g)) == byGen(g).toSeq.sorted,
-            s"$step: dataFrameAsOf($g)")
+          assert(rows(Layout.zorderReadAsOf(spark, dir, g)) == byGen(g).toSeq.sorted,
+            s"$step: zorderReadAsOf($g)")
         }
         // a point read is exact, and prunes through a sidecar built after
         // the generation's first read (its index is the memo's)
@@ -231,7 +231,7 @@ class DeletionVectorSpec extends AnyFunSuite with SparkSpec {
       Layout.zorderAppend(Seq((1L, 1L, 1000L + i)).toDF("a", "b", "k"), dir)
       Layout.zorderMaintain(spark, dir)
       val cur = Layout.currentGen(dir).get
-      Layout.retainedGens(dir).foreach(g => ZTable.dataFrameAsOf(spark, dir, g).count())
+      Layout.retainedGens(dir).foreach(g => Layout.zorderReadAsOf(spark, dir, g).count())
       assert(Layout.memoizedGens(dir) == Seq(cur - 1, cur), s"after commit $i at generation $cur")
     }
     assert(Layout.currentGen(dir).get >= 10L)

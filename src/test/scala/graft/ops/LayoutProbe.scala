@@ -21,7 +21,7 @@ import java.util.Locale
   *      chain is structurally impossible there (a 100k-branch codegen
   *      method); [[graft.functions.SearchSorted]] is O(log F) per row.
   *
-  * Run: `sbt "runMain graft.ops.LayoutProbe"`. One JSON line per
+  * Run: `sbt "Test/runMain graft.ops.LayoutProbe"`. One JSON line per
   * measurement; results land in BASELINE.md §Round-13.
   */
 object LayoutProbe {
@@ -250,7 +250,7 @@ object LayoutProbe {
     * lengths in the manifest → ZERO filesystem calls for nonexistent
     * files — exactly the object-store property the format exists for)
     * and measure the listFiles call FileSourceScanExec makes per query.
-    * Standalone: `sbt "runMain graft.ops.LayoutProbe ztable100k"`. */
+    * Standalone: `sbt "Test/runMain graft.ops.LayoutProbe ztable100k"`. */
   private[ops] def runZTable100k(): Unit = {
     import org.apache.spark.sql.catalyst.expressions.{And => CAnd,
       AttributeReference, GreaterThanOrEqual => CGte, LessThanOrEqual => CLte,

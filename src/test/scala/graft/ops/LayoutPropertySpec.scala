@@ -400,4 +400,92 @@ class LayoutPropertySpec extends AnyFunSuite with SparkSpec {
       assertDataEqualsManifests(dir, "no-rename primary")
     } finally Layout.Store.noRename = false
   }
+
+  test("key verbs, integral and string keys, with and without a bloom sidecar: rows match a plain model, explicit lookups open exactly the planner's files, empty key lists open nothing (seeded)") {
+    import spark.implicits._
+    for (round <- 0 until 2; withBloom <- Seq(false, true)) {
+      val seed = 1800L + round
+      val rng = new Random(seed * 2 + (if (withBloom) 1 else 0))
+      val label = s"seed $seed, bloom $withBloom"
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_zkey$round")
+        .toString + "/t"
+      // k: unique integral ids in shuffled order (decorrelated from the
+      // layout, so only a bitset can prune them); s: a string key, null
+      // on some rows (a NULL key never matches and never deletes)
+      val n = 300 + rng.nextInt(300)
+      val ids = rng.shuffle((0 until n).map(i => 1000L + 7L * i))
+      val rows = ids.zipWithIndex.map { case (k, i) =>
+        val s = if (rng.nextInt(20) == 0) None else Some(s"u-${k * 31 % 9973}-$k")
+        (i.toLong / 16, i.toLong % 16, k, s)
+      }
+      Layout.zorderInit(spark, rows.toDF("a", "b", "k", "s"), dir, "a", "b",
+        nFiles = 4 + rng.nextInt(3))
+      if (withBloom) {
+        Layout.zorderBloomBuild(spark, dir, "k")
+        Layout.zorderBloomBuild(spark, dir, "s")
+      }
+      var live: Map[Long, Option[String]] = rows.map(r => r._3 -> r._4).toMap
+      def model(keyCol: String, vs: Seq[Any]): Set[Long] = live.collect {
+        case (k, s) if (if (keyCol == "k") vs.contains(k) else s.exists(vs.contains)) => k
+      }.toSet
+      def keysOf(df: org.apache.spark.sql.DataFrame): Set[Long] =
+        df.select("k").collect().map(_.getLong(0)).toSet
+      def probes(keyCol: String): Seq[Any] = {
+        val present = rng.shuffle(live.toSeq).take(1 + rng.nextInt(4))
+        val hit = if (keyCol == "k") present.map(_._1) else present.flatMap(_._2)
+        val miss = if (keyCol == "k") Seq(-5L, 999999L) else Seq("u-absent")
+        rng.shuffle(hit ++ miss.take(rng.nextInt(2) + 1))
+      }
+      def checkLookups(step: String): Unit =
+        for (keyCol <- Seq("k", "s")) {
+          val vs = probes(keyCol)
+          val (open, total, used) = Layout.zorderLookupFiles(dir, keyCol, vs)
+          assert(used == withBloom, s"$label $step $keyCol: bloomUsed")
+          assert(withBloom || open == total, s"$label $step $keyCol: unpruned")
+          val want = model(keyCol, vs)
+          assert(keysOf(Layout.zorderPointLookup(spark, dir, keyCol, vs)) == want,
+            s"$label $step $keyCol: point lookup of $vs")
+          // the planner's listing for the same IN-list: one admission
+          val (df, fi) = ZTable.dataFrameWithIndex(spark, dir)
+          assert(keysOf(df.filter(col(keyCol).isin(vs: _*))) == want,
+            s"$label $step $keyCol: planner read of $vs")
+          assert(fi.lastListed == open,
+            s"$label $step $keyCol: explicit opens $open, planner lists " +
+              s"${fi.lastListed} of $total for $vs")
+          assert(Layout.zorderLookupFiles(dir, keyCol, Seq.empty)._1 == 0,
+            s"$label $step $keyCol: an empty key list opens no file")
+          assert(Layout.zorderPointLookup(spark, dir, keyCol, Seq.empty)
+            .isEmpty)
+        }
+      def checkDelete(step: String, keyCol: String, vs: Seq[Any],
+          run: () => Long): Unit = {
+        val doomed = model(keyCol, vs)
+        assert(run() == doomed.size.toLong, s"$label $step: rows deleted")
+        live --= doomed
+        assert(run() == 0L, s"$label $step: repeat must be an exact no-op")
+        assert(keysOf(Layout.zorderRead(spark, dir)) == live.keySet,
+          s"$label $step: table after deleting $vs")
+      }
+      checkLookups("init")
+      val (cowCol, dvCol, dfCol) =
+        if (round % 2 == 0) ("k", "s", "k") else ("s", "k", "s")
+      val cowKeys = probes(cowCol)
+      checkDelete("copy-on-write", cowCol, cowKeys,
+        () => Layout.zorderDeleteByKey(spark, dir, cowCol, cowKeys)._1)
+      assert(Layout.zorderDeleteByKey(spark, dir, cowCol, Seq.empty)._2 == 0)
+      checkLookups("after copy-on-write")
+      val dvKeys = probes(dvCol)
+      checkDelete("vectored", dvCol, dvKeys,
+        () => Layout.zorderDeleteVectoredByKey(spark, dir, dvCol, dvKeys)._1)
+      assert(Layout.zorderDeleteVectoredByKey(spark, dir, dvCol, Seq.empty)
+        == ((0L, 0)))
+      val dfKeys = probes(dfCol)
+      val keyFrame =
+        if (dfCol == "k") dfKeys.map(_.asInstanceOf[Long]).toDF("x")
+        else dfKeys.map(_.asInstanceOf[String]).toDF("x")
+      checkDelete("vectored, distributed keys", dfCol, dfKeys,
+        () => Layout.zorderDeleteVectoredByKey(spark, dir, dfCol, keyFrame)._1)
+      checkLookups("after vectored")
+    }
+  }
 }

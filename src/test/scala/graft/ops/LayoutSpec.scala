@@ -429,12 +429,6 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
       Layout.readManifest(dir, g).spans.map(_.file))
     assert(refs.size > refs.distinct.size, "snapshots share carried files")
 
-    // snapshot scans prune from the retained manifest like CURRENT scans
-    val asofScan = Layout.zorderScanAsOf(spark, dir, 1L, (0L, 15L), (0L, 15L))
-    val asofWant = Layout.zorderReadAsOf(spark, dir, 1L)
-      .filter(col("a").between(0, 15) && col("b").between(0, 15))
-    assert(asofScan.count() == asofWant.count() &&
-      asofScan.except(asofWant).count() == 0, "as-of scan ≡ as-of filter")
     // the manifest-only census is truthful per generation
     val stats = Layout.zorderStats(spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getBoolean(1), r.getLong(3))).toMap
@@ -1479,12 +1473,12 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
     val (deleted, _) = Layout.zorderDeleteVectored(spark, dir, (4L, 11L), (4L, 11L))
     assert(deleted == 64L)
     assert(ZTable.dataFrame(spark, dir).count() == 4096L - 64)
-    val asOf = ZTable.dataFrameAsOf(spark, dir, 0L)
+    val asOf = Layout.zorderReadAsOf(spark, dir, 0L)
     assert(asOf.count() == 4096L)
     assert(asOf.filter(col("a").between(4, 11) && col("b").between(4, 11))
       .count() == 64L, "time travel must still see the vector-deleted rows")
     val bad = intercept[IllegalArgumentException] {
-      ZTable.dataFrameAsOf(spark, dir, 99L)
+      Layout.zorderReadAsOf(spark, dir, 99L)
     }
     assert(bad.getMessage.contains("not retained"))
   }
@@ -2200,9 +2194,9 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
     def ref(i: Long): String = "doc-" + f"$i%06d".reverse
     val probes = Seq(ref(7), ref(901), ref(1777), "doc-absent")
     // explicit API: pruned file census + exact rows
-    val (open, total, used) = Layout.zorderLookupFilesStr(dir, "doc_id", probes)
+    val (open, total, used) = Layout.zorderLookupFiles(dir, "doc_id", probes)
     assert(used && open < total, s"string bloom must prune: $open/$total")
-    val got = Layout.zorderPointLookupStr(spark, dir, "doc_id", probes)
+    val got = Layout.zorderPointLookup(spark, dir, "doc_id", probes)
       .select("k").collect().map(_.getLong(0)).toSet
     assert(got == Set(7L, 901L, 1777L))
     // the LONG-probe APIs see a wrong-domain sidecar as NO sidecar
@@ -2230,17 +2224,41 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
     // tombstoning on the string key itself, repeat an exact no-op
     val doomed = Seq(ref(7), ref(1777), "doc-never-existed")
     val (openD, totalD, usedD) =
-      Layout.zorderLookupFilesStr(dir, "doc_id", doomed)
+      Layout.zorderLookupFiles(dir, "doc_id", doomed)
     assert(usedD && openD < totalD)
     val (nDel, fTomb) =
-      Layout.zorderDeleteVectoredByKeyStr(spark, dir, "doc_id", doomed)
+      Layout.zorderDeleteVectoredByKey(spark, dir, "doc_id", doomed)
     assert(nDel == 2L && fTomb >= 1 && fTomb <= openD,
       s"string takedown must be bloom-bounded: $nDel rows, $fTomb <= $openD files")
     assert(Layout.zorderRead(spark, dir)
       .filter(col("doc_id").isin(doomed: _*)).count() == 0L)
-    assert(Layout.zorderDeleteVectoredByKeyStr(spark, dir, "doc_id", doomed)
+    assert(Layout.zorderDeleteVectoredByKey(spark, dir, "doc_id", doomed)
       == ((0L, 0)), "repeat string takedown must be an exact no-op")
     assert(Layout.zorderRead(spark, dir).count() == 2048L - 3L) // 901 + 2 strings
+    // COPY-ON-WRITE string-key delete: the same bloom-bounded candidates,
+    // exact rows gone, repeat an exact no-op
+    val cowDoomed = Seq(ref(42), ref(1500), "doc-never-existed")
+    val (openC, totalC, usedC) =
+      Layout.zorderLookupFiles(dir, "doc_id", cowDoomed)
+    assert(usedC && openC < totalC)
+    val (nCow, fRew, fCarried) =
+      Layout.zorderDeleteByKey(spark, dir, "doc_id", cowDoomed)
+    assert(nCow == 2L && fRew >= 1 && fRew <= openC && fCarried >= 1,
+      s"string copy-on-write delete must be bloom-bounded: $nCow rows, " +
+        s"$fRew <= $openC files")
+    assert(Layout.zorderRead(spark, dir)
+      .filter(col("k").isin(42L, 1500L)).count() == 0L)
+    assert(Layout.zorderDeleteByKey(spark, dir, "doc_id", cowDoomed)._1 == 0L,
+      "repeat string copy-on-write delete must be an exact no-op")
+    assert(Layout.zorderRead(spark, dir).count() == 2048L - 5L)
+    // an IN-list mixing a value the string domain can't hash: no
+    // pruning (pruning on the rest would drop the files holding it),
+    // every file opens, the rows stay exact
+    val mixed = Seq(ref(5), ref(900), 77L)
+    val (openM, totalM, usedM) = Layout.zorderLookupFiles(dir, "doc_id", mixed)
+    assert(!usedM && openM == totalM)
+    assert(Layout.zorderPointLookup(spark, dir, "doc_id", mixed)
+      .select("k").collect().map(_.getLong(0)).toSet == Set(5L, 900L))
   }
 
   test("manifest v3: string stats prune in the planner via the prefix embedding; null counters prune IsNull/IsNotNull; v2 manifests still parse (r15)") {
