@@ -121,13 +121,19 @@ object Bench {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  /** Default to every host core: r1-4 baselines were recorded at local[32]
-    * and a silent fall-back to local[4] (the old default) makes every
-    * number 4-8× worse and blows the pass budgets. */
-  private def defaultCpus: String = Runtime.getRuntime.availableProcessors().toString
+  /** `$SPARK_GRAFT_CPUS`, else every host core: r1-4 baselines were
+    * recorded at local[32] and a silent fall-back to local[4] (the old
+    * default) makes every number 4-8× worse and blows the pass budgets. */
+  def defaultCpus: String =
+    env("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
 
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
+  /** The session every main-scope main runs (Bench, Verify, StageAudit,
+    * CodegenAudit, Probe, ScaleProbe, IngestProbe, Demo), so the plans an
+    * audit or probe captures are the plans the bench runs. `warehouseDir`
+    * is the one static conf a main may need to differ in. */
+  def buildSession(cpus: String = defaultCpus,
+      warehouseDir: Option[String] = None): SparkSession = {
+    val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -148,7 +154,7 @@ object Bench {
       // Sized to hold every stage of every query with headroom. Read once
       // at CodeGenerator static init, hence set before any query runs.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = warehouseDir.fold(b)(b.config("spark.sql.warehouse.dir", _)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -332,7 +338,7 @@ object Bench {
 
   private def childMain(): Unit = {
     val firstPass = env("SPARK_GRAFT_BENCH_PASS", "1").toInt
-    val spark = buildSession(env("SPARK_GRAFT_CPUS", defaultCpus))
+    val spark = buildSession()
     runAll(spark, firstPass, (_, _, _) => ())
     spark.stop()
     // leaked watchdog threads are daemon, but a cancelled-but-stuck Spark
@@ -469,7 +475,7 @@ object Bench {
         (!forkWorks || times.synchronized(times.valuesIterator.forall(_.forall(_.isNaN)))) &&
         deadline - System.nanoTime() > 60L * 1000000000L) {
       ranInProcess = true
-      val spark = buildSession(env("SPARK_GRAFT_CPUS", defaultCpus))
+      val spark = buildSession()
       runAll(spark, firstIncompletePass, record) // runPass already emits lines
       spark.stop()
     }
@@ -529,7 +535,7 @@ object Bench {
       System.err.println(s"[bench] BENCHLOG write failed: $e")
     }
     println(s"""{"metric":"per_rep","unit":"sec","times":$perRep,"sf":"$sfDir","reps":$reps}""")
-    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"forked":$forkedActual,"warmed":$warmedActual,"warmup_queries_done":${pass0Done.get()},"cpus":"${env("SPARK_GRAFT_CPUS", defaultCpus)}","query_timeout_sec":$queryTimeoutSec}""")
+    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"forked":$forkedActual,"warmed":$warmedActual,"warmup_queries_done":${pass0Done.get()},"cpus":"$defaultCpus","query_timeout_sec":$queryTimeoutSec}""")
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       println(s"""{"metric":"medians_${i + 1}of${chunks.size}","unit":"sec","queries":${medJson(chunk)},"sf":"$sfDir","reps":$reps}""")
     }

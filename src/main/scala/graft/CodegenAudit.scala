@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 
@@ -16,8 +15,8 @@ import org.apache.spark.sql.execution.WholeStageCodegenExec
   * (Bench's fresh-JVM passes). This prints the data that separates them;
   * findings recorded in PLANS.md §codegen-degradation.
   *
-  * AQE is disabled for the audit so the static plan exposes its
-  * WholeStageCodegenExec nodes without executing anything.
+  * The audit runs the Bench session (AQE off), so the static plan exposes
+  * its WholeStageCodegenExec nodes without executing anything.
   *
   * Usage: runMain graft.CodegenAudit [sfDir] [queryName ...] (default: the
   * round-5 degraders q01/g14/g15 + neighbors q04/q12). */
@@ -28,13 +27,7 @@ object CodegenAudit {
       if (args.length > 1) args.toSeq.drop(1)
       else Seq("q01_pricing_summary", "g14_iif_band", "g15_fts_anchor",
         "q04_region_revenue", "q12_window_topk_per_cust")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.buildSession()
     val hugeLimit = spark.conf.get("spark.sql.codegen.hugeMethodLimit")
     println(s"[codegen] hugeMethodLimit=$hugeLimit jitHugeMethod=8000")
     for (name <- names) {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.engine.{MemGraph, ViewGraph}
 import graft.query.Fetch
@@ -11,11 +10,7 @@ import graft.query.Fetch
   * Run: `sbt "runMain graft.Demo"`. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.buildSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     // -- the reference docstring example graph ------------------------------
@@ -99,7 +94,7 @@ object Demo {
     val seed = g.nodes.filter(col("uid") === bob.uid)
     println("  bothN(bob) = " + graft.ops.Traversals.bothN(g, seed).count())
     println("  2-hop(bob) = " + graft.ops.Traversals.kHop(g, seed, 2).count())
-    println("  pregel reach(bob) = " + graft.ops.Traversals.connectedReach(spark, g, bob.uid).count())
+    println("  pregel reach(bob) = " + graft.ops.Analytics.hopDistances(spark, g, bob.uid).count())
 
     println("== streaming: journal tail of the warehouse ==")
     val g3 = graft.engine.MemGraph(spark)

@@ -1,19 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratch main: time one named query repeatedly and print its plan.
-  * Usage: runMain graft.Probe <queryName> [sfDir] [reps] */
+  * Usage: runMain graft.Probe <queryName> [sfDir] [reps] [explain], on
+  * `local[$SPARK_GRAFT_CPUS]` (default: the host's core count). */
 object Probe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the Bench session (AQE off): the plans a probe prints are the plans
+    // Bench runs
+    val spark = Bench.buildSession()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1).count() // warm the session
     for (i <- 1 to reps) {

@@ -37,20 +37,8 @@ object ScaleProbe {
 
   private def r4(v: Double): String = String.format(Locale.ROOT, "%.4f", Double.box(v))
 
-  private def session(): SparkSession = {
-    val cpus = Runtime.getRuntime.availableProcessors().toString
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.warehouse.dir", s"$genRoot/warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession =
+    Bench.buildSession(warehouseDir = Some(s"$genRoot/warehouse"))
 
   // --------------------------------------------------------------- generate
 

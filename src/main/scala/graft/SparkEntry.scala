@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.WarehouseMeta
 import graft.query.{Fetch, Fts}
 import graft.ops.{Dedup, Events, Layout, Quality, Sampling, Similarity, TextAnalysis}
 
@@ -106,35 +107,31 @@ object SparkEntry {
 
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
 
-  /** Once-per-(session, dir) durable-layout builder memo with tMemo's
-    * liveness guard: identityHashCode is not unique and can be reused
-    * after GC, so each entry keeps the session reference and an `eq`
-    * mismatch re-runs the builder — safe because every builder is a
-    * durable-ensure (re-running against existing files is metadata-only). */
-  private def memoizedLayout(memo: scala.collection.concurrent.TrieMap[String, (SparkSession, String)],
-      s: SparkSession, d: String)(build: => String): String = {
-    val key = s"${System.identityHashCode(s)}#$d"
-    memo.get(key) match {
-      case Some((sess, v)) if sess eq s => v
-      case _ =>
-        val v = build
-        memo.put(key, (s, v))
-        v
+  /** A durable fixture at its warehouse location, built by
+    * [[WarehouseMeta.ensureFixture]] once per source state and memoized by
+    * [[WarehouseMeta.memoFixture]] once per (session, dir): `src` is the
+    * file or dir the fingerprint lists and `tag` names the recipe; `exists`
+    * checks the location (a committed z-table generation unless the
+    * fixture says otherwise), which is deleted before a rebuild. Returns
+    * the location. */
+  private def fixtureAt(s: SparkSession, d: String, prefix: String, src: String,
+      tag: String, exists: String => Boolean = p => Layout.currentGen(p).isDefined)(
+      build: String => Unit): String =
+    WarehouseMeta.memoFixture(s, prefix, d) { name =>
+      val loc = WarehouseMeta.tableLocation(s, name)
+      WarehouseMeta.ensureFixture(s, name, WarehouseMeta.fingerprint(src, tag),
+        exists(loc.toString), Seq(loc))(build(loc.toString))
+      loc.toString
     }
-  }
-  private def layoutMemo = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, String)]
+  private val isDir: String => Boolean =
+    p => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p))
 
   /** Memoized persisted vector index over `embeddings` (bits=4, the s07
     * configuration) — same durable ensure discipline as [[dedupStoreFor]]. */
-  private val vectorIndexMemo = layoutMemo
   private def vectorIndexFor(s: SparkSession, d: String): String =
-    memoizedLayout(vectorIndexMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_vecindex_" + WarehouseMeta.md5Hex(d).take(12)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/embeddings.parquet") + "#bits4")
-      Similarity.ensureVectorIndex(s, t(s, d, "embeddings"),
-        "vec_id", "embedding", name, fp, bits = 4)
+    WarehouseMeta.memoFixture(s, "graft_vecindex_", d) { name =>
+      Similarity.ensureVectorIndex(s, t(s, d, "embeddings"), "vec_id", "embedding",
+        name, WarehouseMeta.fingerprint(s"$d/embeddings.parquet", "#bits4"), bits = 4)
       name
     }
 
@@ -143,149 +140,75 @@ object SparkEntry {
     * half (bucket-local insertInto), tombstone-delete {1, 8} and COMPACT
     * them away, then tombstone {2, 13} and leave them UNcompacted so the
     * query path exercises the tombstone anti-join. The mutation sequence
-    * is flagged in a sidecar keyed by the build fingerprint, so re-runs
-    * (bench warm passes, later JVMs) never double-append; a changed
-    * corpus fingerprint rebuilds and re-applies. */
-  private val vectorLifecycleMemo = layoutMemo
+    * is flagged apply-once (`${name}_life`, keyed by the build fingerprint,
+    * whose lock is distinct from the index's own), so re-runs (bench warm
+    * passes, later JVMs) never double-append; a changed corpus fingerprint
+    * rebuilds and re-applies. */
   private def vectorIndexLifecycleFor(s: SparkSession, d: String): String =
-    memoizedLayout(vectorLifecycleMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_veclife_" + WarehouseMeta.md5Hex(d).take(12)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/embeddings.parquet") + "#life#bits4")
+    WarehouseMeta.memoFixture(s, "graft_veclife_", d) { name =>
+      val fp = WarehouseMeta.fingerprint(s"$d/embeddings.parquet", "#life#bits4")
       val emb = t(s, d, "embeddings")
-      // One OUTER lock (distinct lock file from ensure's inner one) makes
-      // build + mutation sequence atomic across processes: a second JVM
-      // blocks here, then sees the applied flag and skips.
-      WarehouseMeta.withBuildLock(s, s"${name}_life") {
-        def ensure() = Similarity.ensureVectorIndex(s,
-          emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", name, fp,
-          bits = 4)
-        val built = ensure()
-        val flag = s"${name}_life.tsv"
-        val applied = WarehouseMeta.readSidecar(s, flag)
-          .exists(_.get("applied").contains(fp))
-        if (built || !applied) {
-          if (!built) {
-            // index exists but the mutation flag is absent: a previous run
-            // crashed mid-sequence, and the APPEND step is not idempotent
-            // (re-running it would duplicate the odd half). Rebuild from a
-            // clean base, then apply once.
-            s.sql(s"DROP TABLE IF EXISTS ${name}_vlsh")
-            WarehouseMeta.deleteRecursively(
-              WarehouseMeta.tableLocation(s, s"${name}_vlsh"))
-            ensure()
-          }
-          Similarity.appendVectorIndex(s,
-            emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", name)
-          Similarity.deleteFromVectorIndex(s, name, Seq(1L, 8L))
-          Similarity.compactVectorIndex(s, name)
-          Similarity.deleteFromVectorIndex(s, name, Seq(2L, 13L))
-          WarehouseMeta.writeSidecar(s, flag, Map("applied" -> fp))
+      def ensure() = Similarity.ensureVectorIndex(s,
+        emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", name, fp,
+        bits = 4)
+      var built = false
+      WarehouseMeta.ensureFixture(s, name, fp, { built = ensure(); !built },
+          applyOnce = true) {
+        if (!built) {
+          // index exists but the mutation flag is absent: a previous run
+          // crashed mid-sequence, and the APPEND step is not idempotent
+          // (re-running it would duplicate the odd half). Rebuild from a
+          // clean base, then apply once.
+          s.sql(s"DROP TABLE IF EXISTS ${name}_vlsh")
+          WarehouseMeta.deleteRecursively(
+            WarehouseMeta.tableLocation(s, s"${name}_vlsh"))
+          ensure()
         }
+        Similarity.appendVectorIndex(s,
+          emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", name)
+        Similarity.deleteFromVectorIndex(s, name, Seq(1L, 8L))
+        Similarity.compactVectorIndex(s, name)
+        Similarity.deleteFromVectorIndex(s, name, Seq(2L, 13L))
       }
       name
     }
 
   /** Memoized date-partitioned events lake for e05 (Events.writeDateLake
-    * under the warehouse dir, sidecar-fingerprinted like every durable
-    * layout here): built once per corpus state, reread with partition
-    * pruning by every later session. */
-  private val eventsLakeMemo = layoutMemo
+    * under the warehouse dir): built once per corpus state, reread with
+    * partition pruning by every later session. */
   private def eventsLakeFor(s: SparkSession, d: String): String =
-    memoizedLayout(eventsLakeMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_eventslake_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/events.parquet") + "#dtlake")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          java.nio.file.Files.isDirectory(path)
-        if (!ok) {
-          graft.ops.Events.writeDateLake(t(s, d, "events"), path.toString)
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path.toString
+    fixtureAt(s, d, "graft_eventslake_", s"$d/events.parquet", "#dtlake", isDir) { path =>
+      graft.ops.Events.writeDateLake(t(s, d, "events"), path)
     }
 
   /** Memoized synthetic WARC crawl for p04 ([[graft.sources.WarcFile
     * .syntheticWarcCorpus]] over documents — real ISO 28500 framing,
     * content the oracle can re-derive): built once per corpus state;
     * every later session re-parses the same bytes. */
-  private val warcMemo = layoutMemo
   private def warcCorpusFor(s: SparkSession, d: String): String =
-    memoizedLayout(warcMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_warc_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/documents.parquet") + "#warc4")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          java.nio.file.Files.isDirectory(path)
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(path)
-          graft.sources.WarcFile.syntheticWarcCorpus(s, t(s, d, "documents"),
-            "doc_id", "text", path.toString, nFiles = 4)
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path.toString
+    fixtureAt(s, d, "graft_warc_", s"$d/documents.parquet", "#warc4", isDir) { path =>
+      graft.sources.WarcFile.syntheticWarcCorpus(s, t(s, d, "documents"),
+        "doc_id", "text", path, nFiles = 4)
     }
 
   /** Memoized Z-ordered lineitem rewrite for w23 (Layout.zorderWrite on
-    * the Morton curve of (l_orderkey, l_suppkey), sidecar-fingerprinted
-    * like every durable layout here): rewritten once per corpus state,
-    * then every later scan prunes on footer min/max spans that are tight
-    * on BOTH keys. */
-  private val zorderLineitemMemo = layoutMemo
+    * the Morton curve of (l_orderkey, l_suppkey)): rewritten once per
+    * corpus state, then every later scan prunes on footer min/max spans
+    * that are tight on BOTH keys. */
   private def zorderLineitemFor(s: SparkSession, d: String): String =
-    memoizedLayout(zorderLineitemMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_zorder_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#z16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          java.nio.file.Files.isDirectory(path)
-        if (!ok) {
-          Layout.zorderWrite(t(s, d, "lineitem"), path.toString,
-            "l_orderkey", "l_suppkey", nFiles = 16)
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path.toString
+    fixtureAt(s, d, "graft_zorder_", s"$d/lineitem.parquet", "#z16", isDir) { path =>
+      Layout.zorderWrite(t(s, d, "lineitem"), path,
+        "l_orderkey", "l_suppkey", nFiles = 16)
     }
 
   /** Memoized 3-key Morton rewrite for w29 — lineitem clustered on
     * z3(l_orderkey, l_suppkey, l_partkey); 64 files (three keys share the
     * tile budget, so the file count sits well above the per-key fan-out —
     * Layout.zValue3's documented operating point). */
-  private val zorder3Memo = layoutMemo
   private def zorder3LineitemFor(s: SparkSession, d: String): String =
-    memoizedLayout(zorder3Memo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_z3_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#z3x64")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          java.nio.file.Files.isDirectory(path)
-        if (!ok) {
-          Layout.zorderWrite3(t(s, d, "lineitem"), path.toString,
-            "l_orderkey", "l_suppkey", "l_partkey", nFiles = 64)
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path.toString
+    fixtureAt(s, d, "graft_z3_", s"$d/lineitem.parquet", "#z3x64", isDir) { path =>
+      Layout.zorderWrite3(t(s, d, "lineitem"), path,
+        "l_orderkey", "l_suppkey", "l_partkey", nFiles = 64)
     }
 
   /** Memoized 3-key HILBERT rewrite for w31 — [[zorder3LineitemFor]] with
@@ -293,48 +216,18 @@ object SparkEntry {
     * behind it measured Morton3 touching 0.50 of files on its weakest
     * axis where the Hilbert3 layout touches 0.33 (LayoutSpec pins the
     * comparison on a controlled grid). */
-  private val hilbert3Memo = layoutMemo
   private def hilbert3LineitemFor(s: SparkSession, d: String): String =
-    memoizedLayout(hilbert3Memo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_h3_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#h3x64")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          java.nio.file.Files.isDirectory(path)
-        if (!ok) {
-          Layout.hilbertWrite3(t(s, d, "lineitem"), path.toString,
-            "l_orderkey", "l_suppkey", "l_partkey", nFiles = 64)
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path.toString
+    fixtureAt(s, d, "graft_h3_", s"$d/lineitem.parquet", "#h3x64", isDir) { path =>
+      Layout.hilbertWrite3(t(s, d, "lineitem"), path,
+        "l_orderkey", "l_suppkey", "l_partkey", nFiles = 64)
     }
 
   /** Memoized Hilbert-curve lineitem rewrite for w28 — [[zorderLineitemFor]]
     * with the no-jumps curve (the codegen'd hilbert_index expression). */
-  private val hilbertLineitemMemo = layoutMemo
   private def hilbertLineitemFor(s: SparkSession, d: String): String =
-    memoizedLayout(hilbertLineitemMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_hilbert_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#h16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          java.nio.file.Files.isDirectory(path)
-        if (!ok) {
-          Layout.hilbertWrite(t(s, d, "lineitem"), path.toString,
-            "l_orderkey", "l_suppkey", nFiles = 16)
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path.toString
+    fixtureAt(s, d, "graft_hilbert_", s"$d/lineitem.parquet", "#h16", isDir) { path =>
+      Layout.hilbertWrite(t(s, d, "lineitem"), path,
+        "l_orderkey", "l_suppkey", nFiles = 16)
     }
 
   /** Memoized MAINTAINED z-order table for w26: init from the low ~90% of
@@ -343,35 +236,19 @@ object SparkEntry {
     * carried over as manifest rows (incrementality engaged, not a silent full
     * rewrite: the tail appends clamp to the curve's edge and route to the
     * last tiles only) and that a second maintain is an exact no-op. */
-  private val zmaintMemo = layoutMemo
   private def zorderMaintainedFor(s: SparkSession, d: String): String =
-    memoizedLayout(zmaintMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w26_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zmaint16m")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          val cut = li.agg(max("l_orderkey")).collect()(0).getLong(0) * 9 / 10
-          Layout.zorderInit(s, li.filter(col("l_orderkey") <= cut), path,
-            "l_orderkey", "l_suppkey", nFiles = 16)
-          Layout.zorderAppend(li.filter(col("l_orderkey") > cut), path)
-          val (merged, rewritten, linked) = Layout.zorderMaintain(s, path)
-          require(merged > 0, "the tail append must hold rows")
-          require(linked >= 1 && rewritten >= 1,
-            s"maintain must be incremental: rewrote $rewritten, linked $linked")
-          require(Layout.zorderMaintain(s, path) == ((0L, 0, 0)),
-            "second maintain over a clean table must be an exact no-op")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w26_", s"$d/lineitem.parquet", "#zmaint16m") { path =>
+      val li = t(s, d, "lineitem")
+      val cut = li.agg(max("l_orderkey")).collect()(0).getLong(0) * 9 / 10
+      Layout.zorderInit(s, li.filter(col("l_orderkey") <= cut), path,
+        "l_orderkey", "l_suppkey", nFiles = 16)
+      Layout.zorderAppend(li.filter(col("l_orderkey") > cut), path)
+      val (merged, rewritten, linked) = Layout.zorderMaintain(s, path)
+      require(merged > 0, "the tail append must hold rows")
+      require(linked >= 1 && rewritten >= 1,
+        s"maintain must be incremental: rewrote $rewritten, linked $linked")
+      require(Layout.zorderMaintain(s, path) == ((0L, 0, 0)),
+        "second maintain over a clean table must be an exact no-op")
     }
 
   /** Memoized STREAM-SINK maintained table for w30: init on the low 80%
@@ -381,42 +258,26 @@ object SparkEntry {
     * with a cadence maintain between them — including a committed-replay
     * no-op proof on the seam — so the oracle hash-checks the END STATE of
     * the streamed lakehouse lifecycle, not just its spec pins. */
-  private val zsinkMemo = layoutMemo
   private def zorderStreamSinkFor(s: SparkSession, d: String): String =
-    memoizedLayout(zsinkMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w30_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zsink16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          val hi = li.agg(max("l_orderkey")).collect()(0).getLong(0)
-          val (cut0, cut1) = (hi * 8 / 10, hi * 9 / 10)
-          Layout.zorderInit(s, li.filter(col("l_orderkey") <= cut0), path,
-            "l_orderkey", "l_suppkey", nFiles = 16)
-          val b0 = li.filter(col("l_orderkey") > cut0 && col("l_orderkey") <= cut1)
-          val b1 = li.filter(col("l_orderkey") > cut1)
-          require(Layout.zorderAppendBatch(s, b0, path, 0L) > 0,
-            "batch 0 must land rows")
-          require(Layout.zorderMaintain(s, path)._1 > 0,
-            "cadence maintain folds batch 0")
-          require(Layout.zorderAppendBatch(s, b1, path, 1L) > 0,
-            "batch 1 must land rows")
-          require(Layout.zorderAppendBatch(s, b1, path, 1L) == -1L,
-            "committed-batch replay must no-op")
-          val (m, _, carried) = Layout.zorderMaintain(s, path)
-          require(m > 0 && carried >= 1,
-            s"final maintain must fold batch 1 incrementally (carried $carried)")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w30_", s"$d/lineitem.parquet", "#zsink16") { path =>
+      val li = t(s, d, "lineitem")
+      val hi = li.agg(max("l_orderkey")).collect()(0).getLong(0)
+      val (cut0, cut1) = (hi * 8 / 10, hi * 9 / 10)
+      Layout.zorderInit(s, li.filter(col("l_orderkey") <= cut0), path,
+        "l_orderkey", "l_suppkey", nFiles = 16)
+      val b0 = li.filter(col("l_orderkey") > cut0 && col("l_orderkey") <= cut1)
+      val b1 = li.filter(col("l_orderkey") > cut1)
+      require(Layout.zorderAppendBatch(s, b0, path, 0L) > 0,
+        "batch 0 must land rows")
+      require(Layout.zorderMaintain(s, path)._1 > 0,
+        "cadence maintain folds batch 0")
+      require(Layout.zorderAppendBatch(s, b1, path, 1L) > 0,
+        "batch 1 must land rows")
+      require(Layout.zorderAppendBatch(s, b1, path, 1L) == -1L,
+        "committed-batch replay must no-op")
+      val (m, _, carried) = Layout.zorderMaintain(s, path)
+      require(m > 0 && carried >= 1,
+        s"final maintain must fold batch 1 incrementally (carried $carried)")
     }
 
   /** Memoized TAKEDOWN-LOOP table for w46: the streaming takedown shape
@@ -428,41 +289,25 @@ object SparkEntry {
     * log at all), then the cadence materialize erasing every tombstone
     * physically. The oracle hash-checks the end state against the
     * NOT-IN twin. */
-  private val ztdownLoopMemo = layoutMemo
   private def takedownLoopFor(s: SparkSession, d: String): String =
-    memoizedLayout(ztdownLoopMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w46_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#ztdown16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          Layout.zorderInit(s, li, path, "l_orderkey", "l_suppkey", nFiles = 16)
-          Layout.zorderBloomBuild(s, path, "l_partkey", shards = 4)
-          val batch0 = Seq(1L, 2L, 3L)
-          val batch1 = Seq(4L, 5L)
-          val (d0, t0) = Layout.zorderDeleteVectoredByKey(s, path, "l_partkey", batch0)
-          require(d0 > 0 && t0 >= 1, "batch 0 must tombstone rows")
-          require(Layout.zorderDeleteVectoredByKey(s, path, "l_partkey", batch0)
-            == ((0L, 0)),
-            "a REPLAYED takedown batch must be an exact no-op — the " +
-              "loop's exactly-once guarantee")
-          val (d1, _) = Layout.zorderDeleteVectoredByKey(s, path, "l_partkey", batch1)
-          require(d1 > 0, "batch 1 must tombstone rows")
-          val (_, purged) = Layout.zorderDvMaterialize(s, path)
-          require(purged == d0 + d1,
-            s"cadence materialize must purge every tombstone: $purged vs ${d0 + d1}")
-          require(Layout.currentSpans(path).forall(_.dvRows == 0))
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w46_", s"$d/lineitem.parquet", "#ztdown16") { path =>
+      val li = t(s, d, "lineitem")
+      Layout.zorderInit(s, li, path, "l_orderkey", "l_suppkey", nFiles = 16)
+      Layout.zorderBloomBuild(s, path, "l_partkey", shards = 4)
+      val batch0 = Seq(1L, 2L, 3L)
+      val batch1 = Seq(4L, 5L)
+      val (d0, t0) = Layout.zorderDeleteVectoredByKey(s, path, "l_partkey", batch0)
+      require(d0 > 0 && t0 >= 1, "batch 0 must tombstone rows")
+      require(Layout.zorderDeleteVectoredByKey(s, path, "l_partkey", batch0)
+        == ((0L, 0)),
+        "a REPLAYED takedown batch must be an exact no-op — the " +
+          "loop's exactly-once guarantee")
+      val (d1, _) = Layout.zorderDeleteVectoredByKey(s, path, "l_partkey", batch1)
+      require(d1 > 0, "batch 1 must tombstone rows")
+      val (_, purged) = Layout.zorderDvMaterialize(s, path)
+      require(purged == d0 + d1,
+        s"cadence materialize must purge every tombstone: $purged vs ${d0 + d1}")
+      require(Layout.currentSpans(path).forall(_.dvRows == 0))
     }
 
   /** Memoized DELETED table for w32: init, one span-pruned zorderDelete
@@ -470,36 +315,20 @@ object SparkEntry {
     * (rewritten < file count) and a repeat delete to be an exact no-op —
     * then the oracle hash-checks the remaining table against the raw
     * NOT-band twin. */
-  private val zdelMemo = layoutMemo
   private def zorderDeletedFor(s: SparkSession, d: String): String =
-    memoizedLayout(zdelMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w32_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zdel16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
-          val (ma, mb) = (mx.getLong(0), mx.getLong(1))
-          Layout.zorderInit(s, li, path, "l_orderkey", "l_suppkey", nFiles = 16)
-          val (aBand, bBand) = ((ma / 4, ma / 2), (mb * 2 / 5, mb / 2))
-          val (del, rewritten, carried) = Layout.zorderDelete(s, path, aBand, bBand)
-          require(del > 0, "the band must hold rows")
-          require(rewritten >= 1 && carried >= 1,
-            s"delete must be span-pruned: rewrote $rewritten, carried $carried")
-          require(Layout.zorderDelete(s, path, aBand, bBand) ==
-            ((0L, 0, rewritten + carried)),
-            "repeat delete over the same band must be an exact no-op")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w32_", s"$d/lineitem.parquet", "#zdel16") { path =>
+      val li = t(s, d, "lineitem")
+      val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
+      val (ma, mb) = (mx.getLong(0), mx.getLong(1))
+      Layout.zorderInit(s, li, path, "l_orderkey", "l_suppkey", nFiles = 16)
+      val (aBand, bBand) = ((ma / 4, ma / 2), (mb * 2 / 5, mb / 2))
+      val (del, rewritten, carried) = Layout.zorderDelete(s, path, aBand, bBand)
+      require(del > 0, "the band must hold rows")
+      require(rewritten >= 1 && carried >= 1,
+        s"delete must be span-pruned: rewrote $rewritten, carried $carried")
+      require(Layout.zorderDelete(s, path, aBand, bBand) ==
+        ((0L, 0, rewritten + carried)),
+        "repeat delete over the same band must be an exact no-op")
     }
 
   /** Memoized VECTOR-DELETED table for w41: init on lineitem, one
@@ -510,38 +339,22 @@ object SparkEntry {
     * deletion vector permanently, so the oracle row hash-checks the
     * DV-applying live read against the raw NOT-band twin — together with
     * w32 this pins copy-on-write ≡ merge-on-read on real data. */
-  private val zdvMemo = layoutMemo
   private def zorderDvDeletedFor(s: SparkSession, d: String): String =
-    memoizedLayout(zdvMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w41_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zdv16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
-          val (ma, mb) = (mx.getLong(0), mx.getLong(1))
-          Layout.zorderInit(s, li, path, "l_orderkey", "l_suppkey", nFiles = 16)
-          val before = layoutDataFiles(path)
-          val (aBand, bBand) = ((ma / 4, ma / 2), (mb * 2 / 5, mb / 2))
-          val (del, tomb) = Layout.zorderDeleteVectored(s, path, aBand, bBand)
-          require(del > 0, "the band must hold rows")
-          require(tomb >= 1 && tomb < 16,
-            s"vectored delete must be span-pruned: tombstoned $tomb of 16")
-          require(layoutDataFiles(path) == before,
-            "a merge-on-read delete must not touch any data file")
-          require(Layout.zorderDeleteVectored(s, path, aBand, bBand) == ((0L, 0)),
-            "repeat vectored delete over the same band must be an exact no-op")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w41_", s"$d/lineitem.parquet", "#zdv16") { path =>
+      val li = t(s, d, "lineitem")
+      val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
+      val (ma, mb) = (mx.getLong(0), mx.getLong(1))
+      Layout.zorderInit(s, li, path, "l_orderkey", "l_suppkey", nFiles = 16)
+      val before = layoutDataFiles(path)
+      val (aBand, bBand) = ((ma / 4, ma / 2), (mb * 2 / 5, mb / 2))
+      val (del, tomb) = Layout.zorderDeleteVectored(s, path, aBand, bBand)
+      require(del > 0, "the band must hold rows")
+      require(tomb >= 1 && tomb < 16,
+        s"vectored delete must be span-pruned: tombstoned $tomb of 16")
+      require(layoutDataFiles(path) == before,
+        "a merge-on-read delete must not touch any data file")
+      require(Layout.zorderDeleteVectored(s, path, aBand, bBand) == ((0L, 0)),
+        "repeat vectored delete over the same band must be an exact no-op")
     }
 
   /** Memoized REPLICA for w44: [[Layout.zorderMirror]] of the w41 table
@@ -551,36 +364,21 @@ object SparkEntry {
     * primary's generation; the oracle then hash-checks the REPLICA's live
     * read against the primary's twin — replication must be byte-faithful
     * including merge-on-read state. Re-syncs from scratch when the
-    * primary was rebuilt (signature mismatch). */
-  private val zmirrorMemo = layoutMemo
-  private def zorderMirroredFor(s: SparkSession, d: String): String =
-    memoizedLayout(zmirrorMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val primary = zorderDvDeletedFor(s, d)
-      val name = "graft_w44_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zdv16#mirror")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          // a stale replica of a REBUILT primary must not incrementally
-          // sync (manifest numbers would collide across unrelated tables)
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val (files, mans) = Layout.zorderMirror(primary, path)
-          require(files >= 1 && mans >= 1,
-            s"first sync must ship the table: $files files, $mans manifests")
-          require(Layout.zorderMirror(primary, path) == ((0, 0)),
-            "repeat sync must be an exact no-op")
-          require(Layout.currentGen(path) == Layout.currentGen(primary),
-            "replica must sit at the primary's generation")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    * primary was rebuilt (signature mismatch): a stale replica of a
+    * REBUILT primary must not incrementally sync (manifest numbers would
+    * collide across unrelated tables). */
+  private def zorderMirroredFor(s: SparkSession, d: String): String = {
+    val primary = zorderDvDeletedFor(s, d)
+    fixtureAt(s, d, "graft_w44_", s"$d/lineitem.parquet", "#zdv16#mirror") { path =>
+      val (files, mans) = Layout.zorderMirror(primary, path)
+      require(files >= 1 && mans >= 1,
+        s"first sync must ship the table: $files files, $mans manifests")
+      require(Layout.zorderMirror(primary, path) == ((0, 0)),
+        "repeat sync must be an exact no-op")
+      require(Layout.currentGen(path) == Layout.currentGen(primary),
+        "replica must sit at the primary's generation")
     }
+  }
 
   /** Memoized STAT-COLUMN table for w45: events z-ordered on
     * (event_id, user_id) with `ts` declared a MANIFEST STAT COLUMN —
@@ -590,33 +388,17 @@ object SparkEntry {
     * layout key. The builder requires the stat pruning to engage on a
     * mid-range band via both audits (manifest count + the planner's own
     * listing through ZTable). */
-  private val zstatMemo = layoutMemo
   private def zorderEventsStatsFor(s: SparkSession, d: String): String =
-    memoizedLayout(zstatMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w45_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/events.parquet") + "#zstat32")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val ev = events(s, d)
-            .select("event_id", "user_id", "ts", "event_type", "value")
-          Layout.zorderInit(s, ev, path, "event_id", "user_id", nFiles = 32,
-            statCols = Seq("ts"))
-          val (sec1, sec2) = w45Band(s, path)
-          val (hit, total) = Layout.zorderStatFiles(path, "ts",
-            (sec1 * 1000000L, sec2 * 1000000L)) // manifest stats are micros
-          require(hit > 0 && hit < total,
-            s"ts stats must prune the band: $hit/$total files")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w45_", s"$d/events.parquet", "#zstat32") { path =>
+      val ev = events(s, d)
+        .select("event_id", "user_id", "ts", "event_type", "value")
+      Layout.zorderInit(s, ev, path, "event_id", "user_id", nFiles = 32,
+        statCols = Seq("ts"))
+      val (sec1, sec2) = w45Band(s, path)
+      val (hit, total) = Layout.zorderStatFiles(path, "ts",
+        (sec1 * 1000000L, sec2 * 1000000L)) // manifest stats are micros
+      require(hit > 0 && hit < total,
+        s"ts stats must prune the band: $hit/$total files")
     }
 
   /** The w45 time band in WHOLE SECONDS (floor), 30%–45% of the observed
@@ -653,43 +435,27 @@ object SparkEntry {
     * by mtime), the deletion vector to be GC'd, and a repeat materialize
     * to be a no-op; the oracle then hash-checks the DV-free table against
     * the same NOT-band twin. */
-  private val zdvmatMemo = layoutMemo
   private def zorderDvPurgedFor(s: SparkSession, d: String): String =
-    memoizedLayout(zdvmatMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w42_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zdvmat16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
-          val (ma, mb) = (mx.getLong(0), mx.getLong(1))
-          Layout.zorderInit(s, li, path, "l_orderkey", "l_suppkey", nFiles = 16)
-          val (aBand, bBand) = ((ma / 4, ma / 2), (mb * 2 / 5, mb / 2))
-          val (del, tomb) = Layout.zorderDeleteVectored(s, path, aBand, bBand)
-          require(del > 0 && tomb >= 1)
-          val before = layoutDataFiles(path)
-          val (rewritten, purged) = Layout.zorderDvMaterialize(s, path)
-          require(rewritten == tomb && purged == del,
-            s"purge must rewrite exactly the tombstoned files: $rewritten/$tomb, $purged/$del")
-          val after = layoutDataFiles(path)
-          val carriedUnchanged = before.keySet & after.keySet
-          require(carriedUnchanged.forall(f => before(f) == after(f)),
-            "carried files must be byte-untouched by the purge")
-          require(Layout.zorderDvMaterialize(s, path) == ((0, 0L)),
-            "repeat materialize must be a no-op")
-          require(Layout.currentSpans(path).forall(_.dvRows == 0),
-            "no tombstone survives the purge")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w42_", s"$d/lineitem.parquet", "#zdvmat16") { path =>
+      val li = t(s, d, "lineitem")
+      val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
+      val (ma, mb) = (mx.getLong(0), mx.getLong(1))
+      Layout.zorderInit(s, li, path, "l_orderkey", "l_suppkey", nFiles = 16)
+      val (aBand, bBand) = ((ma / 4, ma / 2), (mb * 2 / 5, mb / 2))
+      val (del, tomb) = Layout.zorderDeleteVectored(s, path, aBand, bBand)
+      require(del > 0 && tomb >= 1)
+      val before = layoutDataFiles(path)
+      val (rewritten, purged) = Layout.zorderDvMaterialize(s, path)
+      require(rewritten == tomb && purged == del,
+        s"purge must rewrite exactly the tombstoned files: $rewritten/$tomb, $purged/$del")
+      val after = layoutDataFiles(path)
+      val carriedUnchanged = before.keySet & after.keySet
+      require(carriedUnchanged.forall(f => before(f) == after(f)),
+        "carried files must be byte-untouched by the purge")
+      require(Layout.zorderDvMaterialize(s, path) == ((0, 0L)),
+        "repeat materialize must be a no-op")
+      require(Layout.currentSpans(path).forall(_.dvRows == 0),
+        "no tombstone survives the purge")
     }
 
   /** Memoized RETAINED-GENERATIONS table for w33: init with a 2-snapshot
@@ -697,32 +463,16 @@ object SparkEntry {
     * maintain — then the oracle reads generation 0 AS OF (time travel on
     * the maintained table) and hash-checks it against the low-90% twin,
     * proving retained snapshots stay byte-faithful across later commits. */
-  private val zasofMemo = layoutMemo
   private def zorderRetainedFor(s: SparkSession, d: String): String =
-    memoizedLayout(zasofMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w33_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zasof2")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          val cut = li.agg(max("l_orderkey")).collect()(0).getLong(0) * 9 / 10
-          Layout.zorderInit(s, li.filter(col("l_orderkey") <= cut), path,
-            "l_orderkey", "l_suppkey", nFiles = 16, keepGenerations = 2)
-          Layout.zorderAppend(li.filter(col("l_orderkey") > cut), path)
-          require(Layout.zorderMaintain(s, path)._1 > 0)
-          require(Layout.retainedGens(path) == Seq(0L, 1L),
-            "both snapshots must be retained")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w33_", s"$d/lineitem.parquet", "#zasof2") { path =>
+      val li = t(s, d, "lineitem")
+      val cut = li.agg(max("l_orderkey")).collect()(0).getLong(0) * 9 / 10
+      Layout.zorderInit(s, li.filter(col("l_orderkey") <= cut), path,
+        "l_orderkey", "l_suppkey", nFiles = 16, keepGenerations = 2)
+      Layout.zorderAppend(li.filter(col("l_orderkey") > cut), path)
+      require(Layout.zorderMaintain(s, path)._1 > 0)
+      require(Layout.retainedGens(path) == Seq(0L, 1L),
+        "both snapshots must be retained")
     }
 
   /** Memoized CHANGE-FEED table for w35: init on the low-90% orderkey
@@ -731,37 +481,21 @@ object SparkEntry {
     * 0→2 change feed must surface the tail as inserts and the band as
     * deletes, nothing else, even though the rewrites carried thousands of
     * untouched rows through churned files. */
-  private val zcdcMemo = layoutMemo
   private def zorderChangedFor(s: SparkSession, d: String): String =
-    memoizedLayout(zcdcMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w35_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zcdc16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
-          val (ma, mb) = (mx.getLong(0), mx.getLong(1))
-          Layout.zorderInit(s, li.filter(col("l_orderkey") <= ma * 9 / 10),
-            path, "l_orderkey", "l_suppkey", nFiles = 16, keepGenerations = 4)
-          Layout.zorderAppend(li.filter(col("l_orderkey") > ma * 9 / 10), path)
-          require(Layout.zorderMaintain(s, path)._1 > 0,
-            "the tail append must fold rows")
-          val (del, _, _) = Layout.zorderDelete(s, path,
-            (ma / 4, ma / 2), (mb * 2 / 5, mb / 2))
-          require(del > 0, "the band must hold rows")
-          require(Layout.retainedGens(path) == Seq(0L, 1L, 2L),
-            "all three snapshots must be retained for the feed")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w35_", s"$d/lineitem.parquet", "#zcdc16") { path =>
+      val li = t(s, d, "lineitem")
+      val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
+      val (ma, mb) = (mx.getLong(0), mx.getLong(1))
+      Layout.zorderInit(s, li.filter(col("l_orderkey") <= ma * 9 / 10),
+        path, "l_orderkey", "l_suppkey", nFiles = 16, keepGenerations = 4)
+      Layout.zorderAppend(li.filter(col("l_orderkey") > ma * 9 / 10), path)
+      require(Layout.zorderMaintain(s, path)._1 > 0,
+        "the tail append must fold rows")
+      val (del, _, _) = Layout.zorderDelete(s, path,
+        (ma / 4, ma / 2), (mb * 2 / 5, mb / 2))
+      require(del > 0, "the band must hold rows")
+      require(Layout.retainedGens(path) == Seq(0L, 1L, 2L),
+        "all three snapshots must be retained for the feed")
     }
 
   /** Memoized SCHEMA-EVOLVED table for w38: init on the low-90% orderkey
@@ -769,35 +503,19 @@ object SparkEntry {
     * AN ADDED l_bonus column (quantity × 2) and maintain — the generation
     * goes mixed, reads reconcile by name (old rows null-fill l_bonus),
     * and the builder REQUIRES the mixed flag engaged. */
-  private val zevoMemo = layoutMemo
   private def zorderEvolvedFor(s: SparkSession, d: String): String =
-    memoizedLayout(zevoMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w38_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zevo16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          val cut = li.agg(max("l_orderkey")).collect()(0).getLong(0) * 9 / 10
-          Layout.zorderInit(s, li.filter(col("l_orderkey") <= cut), path,
-            "l_orderkey", "l_suppkey", nFiles = 16)
-          Layout.zorderAppend(li.filter(col("l_orderkey") > cut)
-            .withColumn("l_bonus", col("l_quantity") * 2), path)
-          require(Layout.zorderMaintain(s, path)._1 > 0,
-            "the evolved tail must fold rows")
-          require(Layout.zorderStats(s, path).count() >= 1 &&
-            Layout.zorderRead(s, path).columns.contains("l_bonus"),
-            "the evolved column must be visible through the committed read")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w38_", s"$d/lineitem.parquet", "#zevo16") { path =>
+      val li = t(s, d, "lineitem")
+      val cut = li.agg(max("l_orderkey")).collect()(0).getLong(0) * 9 / 10
+      Layout.zorderInit(s, li.filter(col("l_orderkey") <= cut), path,
+        "l_orderkey", "l_suppkey", nFiles = 16)
+      Layout.zorderAppend(li.filter(col("l_orderkey") > cut)
+        .withColumn("l_bonus", col("l_quantity") * 2), path)
+      require(Layout.zorderMaintain(s, path)._1 > 0,
+        "the evolved tail must fold rows")
+      require(Layout.zorderStats(s, path).count() >= 1 &&
+        Layout.zorderRead(s, path).columns.contains("l_bonus"),
+        "the evolved column must be visible through the committed read")
     }
 
   /** Memoized BIN-PACKED table for w40: 64-file init, a two-sided band
@@ -805,39 +523,23 @@ object SparkEntry {
     * whole), then ONE [[Layout.zorderCompactSmall]] at the mean file
     * size merges the z-adjacent remnants — the builder REQUIRES groups
     * formed, big files carried, and a repeat no-op. */
-  private val zbinMemo = layoutMemo
   private def zorderBinpackedFor(s: SparkSession, d: String): String =
-    memoizedLayout(zbinMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w40_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zbin64")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
-          val (ma, mb) = (mx.getLong(0), mx.getLong(1))
-          Layout.zorderInit(s, li, path, "l_orderkey", "l_suppkey", nFiles = 64)
-          require(Layout.zorderDelete(s, path,
-            (ma / 8, ma * 3 / 8), (mb / 8, mb * 3 / 8))._1 > 0)
-          val spans = Layout.currentSpans(path)
-          val mean = spans.map(_.rows).sum / spans.size
-          val (groups, mergedIn, carried) =
-            Layout.zorderCompactSmall(s, path, mean)
-          require(groups >= 1 && mergedIn >= 2,
-            s"bin-packing must engage: $groups groups / $mergedIn files")
-          require(carried >= 1, "adequately-sized files must carry")
-          require(Layout.zorderCompactSmall(s, path, mean)._1 == 0,
-            "repeat bin-pack at the same target must be a no-op")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w40_", s"$d/lineitem.parquet", "#zbin64") { path =>
+      val li = t(s, d, "lineitem")
+      val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
+      val (ma, mb) = (mx.getLong(0), mx.getLong(1))
+      Layout.zorderInit(s, li, path, "l_orderkey", "l_suppkey", nFiles = 64)
+      require(Layout.zorderDelete(s, path,
+        (ma / 8, ma * 3 / 8), (mb / 8, mb * 3 / 8))._1 > 0)
+      val spans = Layout.currentSpans(path)
+      val mean = spans.map(_.rows).sum / spans.size
+      val (groups, mergedIn, carried) =
+        Layout.zorderCompactSmall(s, path, mean)
+      require(groups >= 1 && mergedIn >= 2,
+        s"bin-packing must engage: $groups groups / $mergedIn files")
+      require(carried >= 1, "adequately-sized files must carry")
+      require(Layout.zorderCompactSmall(s, path, mean)._1 == 0,
+        "repeat bin-pack at the same target must be a no-op")
     }
 
   /** Memoized TAKEDOWN table for w39: the w36 shape (orders clustered on
@@ -846,41 +548,25 @@ object SparkEntry {
     * the builder REQUIRES the rewrite set bloom-bounded and the repeat a
     * no-op, so the oracle's NOT-IN twin passes only if exactly those
     * rows vanished. */
-  private val ztakedownMemo = layoutMemo
   private def zorderTakedownFor(s: SparkSession, d: String): String =
-    memoizedLayout(ztakedownMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w39_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/orders.parquet") + "#ztake16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val orders = t(s, d, "orders")
-          Layout.zorderInit(s, orders, path, "o_custkey", "o_totalprice",
-            nFiles = 16)
-          Layout.zorderBloomBuild(s, path, "o_orderkey", bits = 1 << 16,
-            hashes = 5)
-          val mo = orders.agg(max("o_orderkey")).collect()(0).getLong(0)
-          val doomed = Seq(mo / 7, mo / 3, mo / 2 + 1)
-          val (open, total, used) =
-            Layout.zorderLookupFiles(path, "o_orderkey", doomed)
-          require(used && open < total, s"bloom must prune: $open/$total")
-          val (del, rew, car) =
-            Layout.zorderDeleteByKey(s, path, "o_orderkey", doomed)
-          require(del == 3L, s"three unique orderkeys must vanish: $del")
-          require(rew <= open && car >= 1,
-            s"the rewrite set must be bloom-bounded: $rew <= $open, carried $car")
-          require(Layout.zorderDeleteByKey(s, path, "o_orderkey", doomed)._1 == 0L,
-            "repeat takedown must be a no-op")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w39_", s"$d/orders.parquet", "#ztake16") { path =>
+      val orders = t(s, d, "orders")
+      Layout.zorderInit(s, orders, path, "o_custkey", "o_totalprice",
+        nFiles = 16)
+      Layout.zorderBloomBuild(s, path, "o_orderkey", bits = 1 << 16,
+        hashes = 5)
+      val mo = orders.agg(max("o_orderkey")).collect()(0).getLong(0)
+      val doomed = Seq(mo / 7, mo / 3, mo / 2 + 1)
+      val (open, total, used) =
+        Layout.zorderLookupFiles(path, "o_orderkey", doomed)
+      require(used && open < total, s"bloom must prune: $open/$total")
+      val (del, rew, car) =
+        Layout.zorderDeleteByKey(s, path, "o_orderkey", doomed)
+      require(del == 3L, s"three unique orderkeys must vanish: $del")
+      require(rew <= open && car >= 1,
+        s"the rewrite set must be bloom-bounded: $rew <= $open, carried $car")
+      require(Layout.zorderDeleteByKey(s, path, "o_orderkey", doomed)._1 == 0L,
+        "repeat takedown must be a no-op")
     }
 
   /** Memoized CDC FOLLOWER pair for w51: a primary initialized on the
@@ -893,74 +579,59 @@ object SparkEntry {
     * replayed tick through a fresh checkpoint proven a cursor-stasis
     * no-op. The follower's final state must equal lineitem minus the
     * band, byte-faithful, which the w51 oracle checks directly. */
-  private val zcdcfMemo = layoutMemo
   private def zorderCdcFollowerFor(s: SparkSession, d: String): String =
-    memoizedLayout(zcdcfMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w51_" + WarehouseMeta.md5Hex(d).take(12)
-      val root = WarehouseMeta.tableLocation(s, name)
+    fixtureAt(s, d, "graft_w51_", s"$d/lineitem.parquet", "#zcdcf16",
+        root => Layout.currentGen(s"$root/fol").isDefined) { root =>
+      import scala.jdk.CollectionConverters._
       val pri = s"$root/pri"; val fol = s"$root/fol"
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zcdcf16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(fol).isDefined
-        if (!ok) {
-          import scala.jdk.CollectionConverters._
-          WarehouseMeta.deleteRecursively(root)
-          val li0 = t(s, d, "lineitem")
-          val li = li0.withColumn("l_rowid",
-            xxhash64(li0.columns.map(col): _*))
-          val uq = li.agg(count(lit(1)), countDistinct(col("l_rowid")))
-            .collect()(0)
-          require(uq.getLong(0) == uq.getLong(1),
-            "l_rowid (xxhash64 of the full row) must be unique — the CDC " +
-              "apply key contract")
-          val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
-          val (ma, mb) = (mx.getLong(0), mx.getLong(1))
-          Layout.zorderInit(s, li.filter(col("l_orderkey") <= ma * 9 / 10),
-            pri, "l_orderkey", "l_suppkey", nFiles = 16, keepGenerations = 8)
-          Layout.zorderCdcSeed(s, pri, fol, nFiles = 16)
-          Layout.zorderAppend(li.filter(col("l_orderkey") > ma * 9 / 10), pri)
-          require(Layout.zorderMaintain(s, pri)._1 > 0,
-            "the tail append must fold rows")
-          require(Layout.zorderDelete(s, pri,
-            (ma / 4, ma / 2), (mb * 2 / 5, mb / 2))._1 > 0,
-            "the band must hold rows")
-          // ONE ticker batch drives the follower through both commits
-          val ticks = java.nio.file.Paths.get(s"$root/ticks")
-          java.nio.file.Files.createDirectories(ticks)
-          locally {
-            import s.implicits._
-            val stage = java.nio.file.Paths.get(s"$root/tick_stage")
-            Seq(1L).toDF("t").coalesce(1).write.mode("overwrite")
-              .parquet(stage.toString)
-            val part = java.nio.file.Files.list(stage).iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet")).next()
-            java.nio.file.Files.move(part, ticks.resolve("t0.parquet")); ()
-          }
-          val tickSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("t",
-              org.apache.spark.sql.types.LongType)))
-          def runTicks(ckpt: String): Unit =
-            graft.streaming.EventStreams.cdcFollowStream(
-              s.readStream.schema(tickSchema).parquet(ticks.toString),
-              pri, fol, "l_rowid", ckpt).awaitTermination()
-          runTicks(s"$root/ckpt")
-          def cursor(): Long = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(fol, "cdc-cursor")), "UTF-8").trim.toLong
-          require(cursor() == 2L,
-            s"the poll must reach the primary's current generation: ${cursor()}")
-          // a REPLAYED tick (fresh checkpoint re-delivers t0) must be a
-          // cursor-stasis no-op — exactly-once rides the cursor protocol
-          runTicks(s"$root/ckpt_replay")
-          require(cursor() == 2L, "a replayed tick must not move the cursor")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
+      val li0 = t(s, d, "lineitem")
+      val li = li0.withColumn("l_rowid",
+        xxhash64(li0.columns.map(col): _*))
+      val uq = li.agg(count(lit(1)), countDistinct(col("l_rowid")))
+        .collect()(0)
+      require(uq.getLong(0) == uq.getLong(1),
+        "l_rowid (xxhash64 of the full row) must be unique — the CDC " +
+          "apply key contract")
+      val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
+      val (ma, mb) = (mx.getLong(0), mx.getLong(1))
+      Layout.zorderInit(s, li.filter(col("l_orderkey") <= ma * 9 / 10),
+        pri, "l_orderkey", "l_suppkey", nFiles = 16, keepGenerations = 8)
+      Layout.zorderCdcSeed(s, pri, fol, nFiles = 16)
+      Layout.zorderAppend(li.filter(col("l_orderkey") > ma * 9 / 10), pri)
+      require(Layout.zorderMaintain(s, pri)._1 > 0,
+        "the tail append must fold rows")
+      require(Layout.zorderDelete(s, pri,
+        (ma / 4, ma / 2), (mb * 2 / 5, mb / 2))._1 > 0,
+        "the band must hold rows")
+      // ONE ticker batch drives the follower through both commits
+      val ticks = java.nio.file.Paths.get(s"$root/ticks")
+      java.nio.file.Files.createDirectories(ticks)
+      locally {
+        import s.implicits._
+        val stage = java.nio.file.Paths.get(s"$root/tick_stage")
+        Seq(1L).toDF("t").coalesce(1).write.mode("overwrite")
+          .parquet(stage.toString)
+        val part = java.nio.file.Files.list(stage).iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet")).next()
+        java.nio.file.Files.move(part, ticks.resolve("t0.parquet")); ()
       }
-      fol
-    }
+      val tickSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("t",
+          org.apache.spark.sql.types.LongType)))
+      def runTicks(ckpt: String): Unit =
+        graft.streaming.EventStreams.cdcFollowStream(
+          s.readStream.schema(tickSchema).parquet(ticks.toString),
+          pri, fol, "l_rowid", ckpt).awaitTermination()
+      runTicks(s"$root/ckpt")
+      def cursor(): Long = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(fol, "cdc-cursor")), "UTF-8").trim.toLong
+      require(cursor() == 2L,
+        s"the poll must reach the primary's current generation: ${cursor()}")
+      // a REPLAYED tick (fresh checkpoint re-delivers t0) must be a
+      // cursor-stasis no-op — exactly-once rides the cursor protocol
+      runTicks(s"$root/ckpt_replay")
+      require(cursor() == 2L, "a replayed tick must not move the cursor")
+    } + "/fol"
 
   /** Memoized STREAMED journal→z mutable graph warehouse for w54 (r16 —
     * the maintenance cadence the reference runs implicitly on every
@@ -981,88 +652,74 @@ object SparkEntry {
     * exactly-once seam) and the final z-state must equal the journal
     * fold exactly — both REQUIREd here; the w54 oracle then counts every
     * surviving kind from the raw tables. */
-  private val zgsMemo = layoutMemo
   private def zGraphStreamFor(s: SparkSession, d: String): String =
-    memoizedLayout(zgsMemo, s, d) {
-      import graft.engine.{Journal, WarehouseGraph, WarehouseMeta}
-      val name = "graft_w54_" + WarehouseMeta.md5Hex(d).take(12)
-      val root = WarehouseMeta.tableLocation(s, name).toString
+    fixtureAt(s, d, "graft_w54_", d, "#zgs16b", root =>
+        Seq("znodes", "zedges", "zfts")
+          .forall(z => Layout.currentGen(s"$root/wh/$z").isDefined)) { root =>
+      import graft.engine.{Journal, WarehouseGraph}
       val wpath = s"$root/wh"
-      val fp = WarehouseMeta.md5Hex(WarehouseMeta.sourceSignature(d) + "#zgs16b")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(s"$wpath/znodes").isDefined &&
-          Layout.currentGen(s"$wpath/zedges").isDefined &&
-          Layout.currentGen(s"$wpath/zfts").isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(root))
-          val g = StarGraph.build(s, d)
-          val nodes = g.nodes
-          val edges = g.edges.filter(col("kind") =!= "Contains")
-          val key = substring_index(col("uid"), ":", -1).cast("long")
-          val wh = new WarehouseGraph(s, wpath)
-          wh.append(Journal.snapshotAsChanges(
-            nodes.filter(col("kind") =!= "orders"),
-            edges.filter(col("kind") =!= "PlacedBy"), startSeq = 1L))
-          wh.compactZorder(nFiles = 16)
-          // graph FTS over the mutable warehouse (g22): part names index
-          // into the maintained postings z-table; every later increment
-          // (including the streamed ones below) keeps it fresh
-          wh.resetZFts(Seq("p_name"))
-          // arrival 1: the orders wave — a create doc per orders node and
-          // per PlacedBy edge (the bulk-restatement shape)
-          wh.append(Journal.snapshotAsChanges(
-            nodes.filter(col("kind") === "orders"),
-            edges.filter(col("kind") === "PlacedBy"),
-            startSeq = wh.maxSeq + 1))
-          // arrival 2: full-image REMOVE docs (delete = remove every key
-          // of the image, the fold's own delete rule) + a modify wave
-          // whose add doc merges a new prop over the region images
-          val doomedN = nodes.filter(col("kind") === "supplier" && key % 7 === 0)
-          val startKey = substring_index(col("startuid"), ":", -1).cast("long")
-          val doomedE = edges.filter(col("kind") === "SuppNation" &&
-            startKey % 7 === 0)
-          val del = Journal.snapshotAsChanges(doomedN, doomedE,
-              startSeq = wh.maxSeq + 1)
-            .select(col("seq"), col("uid"),
-              lit(null).cast("string").as("add"), col("add").as("remove"),
-              col("time"), col("rev"), col("batch"))
-          val mod = Journal.snapshotAsChanges(
-            nodes.filter(col("kind") === "region")
-              .withColumn("props", lit("""{"tag":"probed"}""")),
-            edges.limit(0), startSeq = wh.maxSeq + 1)
-          wh.append(del.unionByName(mod))
-          def run(ckpt: String): Unit =
-            graft.streaming.EventStreams.journalCompactStream(
-              graft.streaming.EventStreams.journalStream(s, s"$wpath/journal"),
-              wpath, ckpt, collectThreshold = 1000L, optimizeEvery = 1)
-              .awaitTermination()
-          run(s"$root/ckpt")
-          val genN = Layout.currentGen(s"$wpath/znodes").get
-          val genE = Layout.currentGen(s"$wpath/zedges").get
-          // fresh-checkpoint replay re-delivers every journal file: each
-          // re-tick is a caught-up no-op — nothing may commit
-          run(s"$root/ckpt_replay")
-          require(Layout.currentGen(s"$wpath/znodes").contains(genN) &&
-            Layout.currentGen(s"$wpath/zedges").contains(genE),
-            "replayed journal ticks must commit nothing")
-          require(wh.zNodes.select("uid").except(wh.nodes.select("uid"))
-              .count() == 0 &&
-            wh.nodes.select("uid").except(wh.zNodes.select("uid"))
-              .count() == 0 &&
-            wh.zEdges.select("uid").except(wh.edges.select("uid"))
-              .count() == 0 &&
-            wh.edges.select("uid").except(wh.zEdges.select("uid"))
-              .count() == 0,
-            "streamed z-state must equal the journal fold exactly")
-          require(wh.zPointNode("region:0").select("props").head()
-            .getString(0).contains("probed"), "the modify wave must land")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      wpath
-    }
+      val g = StarGraph.build(s, d)
+      val nodes = g.nodes
+      val edges = g.edges.filter(col("kind") =!= "Contains")
+      val key = substring_index(col("uid"), ":", -1).cast("long")
+      val wh = new WarehouseGraph(s, wpath)
+      wh.append(Journal.snapshotAsChanges(
+        nodes.filter(col("kind") =!= "orders"),
+        edges.filter(col("kind") =!= "PlacedBy"), startSeq = 1L))
+      wh.compactZorder(nFiles = 16)
+      // graph FTS over the mutable warehouse (g22): part names index
+      // into the maintained postings z-table; every later increment
+      // (including the streamed ones below) keeps it fresh
+      wh.resetZFts(Seq("p_name"))
+      // arrival 1: the orders wave — a create doc per orders node and
+      // per PlacedBy edge (the bulk-restatement shape)
+      wh.append(Journal.snapshotAsChanges(
+        nodes.filter(col("kind") === "orders"),
+        edges.filter(col("kind") === "PlacedBy"),
+        startSeq = wh.maxSeq + 1))
+      // arrival 2: full-image REMOVE docs (delete = remove every key
+      // of the image, the fold's own delete rule) + a modify wave
+      // whose add doc merges a new prop over the region images
+      val doomedN = nodes.filter(col("kind") === "supplier" && key % 7 === 0)
+      val startKey = substring_index(col("startuid"), ":", -1).cast("long")
+      val doomedE = edges.filter(col("kind") === "SuppNation" &&
+        startKey % 7 === 0)
+      val del = Journal.snapshotAsChanges(doomedN, doomedE,
+          startSeq = wh.maxSeq + 1)
+        .select(col("seq"), col("uid"),
+          lit(null).cast("string").as("add"), col("add").as("remove"),
+          col("time"), col("rev"), col("batch"))
+      val mod = Journal.snapshotAsChanges(
+        nodes.filter(col("kind") === "region")
+          .withColumn("props", lit("""{"tag":"probed"}""")),
+        edges.limit(0), startSeq = wh.maxSeq + 1)
+      wh.append(del.unionByName(mod))
+      def run(ckpt: String): Unit =
+        graft.streaming.EventStreams.journalCompactStream(
+          graft.streaming.EventStreams.journalStream(s, s"$wpath/journal"),
+          wpath, ckpt, collectThreshold = 1000L, optimizeEvery = 1)
+          .awaitTermination()
+      run(s"$root/ckpt")
+      val genN = Layout.currentGen(s"$wpath/znodes").get
+      val genE = Layout.currentGen(s"$wpath/zedges").get
+      // fresh-checkpoint replay re-delivers every journal file: each
+      // re-tick is a caught-up no-op — nothing may commit
+      run(s"$root/ckpt_replay")
+      require(Layout.currentGen(s"$wpath/znodes").contains(genN) &&
+        Layout.currentGen(s"$wpath/zedges").contains(genE),
+        "replayed journal ticks must commit nothing")
+      require(wh.zNodes.select("uid").except(wh.nodes.select("uid"))
+          .count() == 0 &&
+        wh.nodes.select("uid").except(wh.zNodes.select("uid"))
+          .count() == 0 &&
+        wh.zEdges.select("uid").except(wh.edges.select("uid"))
+          .count() == 0 &&
+        wh.edges.select("uid").except(wh.zEdges.select("uid"))
+          .count() == 0,
+        "streamed z-state must equal the journal fold exactly")
+      require(wh.zPointNode("region:0").select("props").head()
+        .getString(0).contains("probed"), "the modify wave must land")
+    } + "/wh"
 
   /** Memoized TIME-TRAVEL graph warehouse for w55 (r16 — the zsnap
     * snapshot log): the star projection (Contains excluded) lands in a
@@ -1075,64 +732,48 @@ object SparkEntry {
     * while the live view misses the doomed customers. The builder
     * REQUIREs both cuts' customer counts; `<root>/seq0` persists cut 0's
     * seq for the query. */
-  private val zttMemo = layoutMemo
   private def zTimeTravelFor(s: SparkSession, d: String): String =
-    memoizedLayout(zttMemo, s, d) {
-      import graft.engine.{Journal, WarehouseGraph, WarehouseMeta}
-      val name = "graft_w55_" + WarehouseMeta.md5Hex(d).take(12)
-      val root = WarehouseMeta.tableLocation(s, name).toString
-      val wpath = s"$root/wh"
-      val fp = WarehouseMeta.md5Hex(WarehouseMeta.sourceSignature(d) + "#ztt16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(s"$wpath/znodes").isDefined &&
-          java.nio.file.Files.isRegularFile(
-            java.nio.file.Paths.get(s"$root/seq0"))
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(root))
-          val g = StarGraph.build(s, d)
-          val nodes = g.nodes
-          val edges = g.edges.filter(col("kind") =!= "Contains")
-          val wh = new WarehouseGraph(s, wpath)
-          wh.append(Journal.snapshotAsChanges(nodes, edges, startSeq = 1L))
-          wh.compactZorder(nFiles = 16)
-          val seq0 = wh.maxSeq
-          val nCustFull = nodes.filter(col("kind") === "customer").count()
-          // disconnect-delete every 5th customer: the node plus every
-          // edge touching it (InNation starts at it, PlacedBy ends at
-          // it), as full-image REMOVE docs — the fold's delete rule
-          def doomedCust(c: Column): Column =
-            c.startsWith("customer:") &&
-              substring_index(c, ":", -1).cast("long") % 5 === 0
-          val doomedN = nodes.filter(col("kind") === "customer" &&
-            doomedCust(col("uid")))
-          val doomedE = edges.filter(doomedCust(col("startuid")) ||
-            doomedCust(col("enduid")))
-          val del = Journal.snapshotAsChanges(doomedN, doomedE,
-              startSeq = wh.maxSeq + 1)
-            .select(col("seq"), col("uid"),
-              lit(null).cast("string").as("add"), col("add").as("remove"),
-              col("time"), col("rev"), col("batch"))
-          wh.append(del)
-          wh.compactZorderIncremental()
-          // the live cut lost the doomed customers; the historical cut
-          // still serves every one of them — the snapshot log's claim
-          val nCustLive = wh.zNodes
-            .filter(col("kind") === "customer").count()
-          require(nCustLive < nCustFull,
-            s"delete wave must land: $nCustLive vs $nCustFull")
-          require(wh.zViewAt(seq0).nodes
-              .filter(col("kind") === "customer").count() == nCustFull,
-            "the historical cut must serve the full pre-delete graph")
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$root/seq0"), seq0.toString)
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv",
-            Map("sig" -> fp))
-        }
-      }
-      wpath
-    }
+    fixtureAt(s, d, "graft_w55_", d, "#ztt16", root =>
+        Layout.currentGen(s"$root/wh/znodes").isDefined &&
+          java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(s"$root/seq0"))) { root =>
+      import graft.engine.{Journal, WarehouseGraph}
+      val g = StarGraph.build(s, d)
+      val nodes = g.nodes
+      val edges = g.edges.filter(col("kind") =!= "Contains")
+      val wh = new WarehouseGraph(s, s"$root/wh")
+      wh.append(Journal.snapshotAsChanges(nodes, edges, startSeq = 1L))
+      wh.compactZorder(nFiles = 16)
+      val seq0 = wh.maxSeq
+      val nCustFull = nodes.filter(col("kind") === "customer").count()
+      // disconnect-delete every 5th customer: the node plus every
+      // edge touching it (InNation starts at it, PlacedBy ends at
+      // it), as full-image REMOVE docs — the fold's delete rule
+      def doomedCust(c: Column): Column =
+        c.startsWith("customer:") &&
+          substring_index(c, ":", -1).cast("long") % 5 === 0
+      val doomedN = nodes.filter(col("kind") === "customer" &&
+        doomedCust(col("uid")))
+      val doomedE = edges.filter(doomedCust(col("startuid")) ||
+        doomedCust(col("enduid")))
+      val del = Journal.snapshotAsChanges(doomedN, doomedE,
+          startSeq = wh.maxSeq + 1)
+        .select(col("seq"), col("uid"),
+          lit(null).cast("string").as("add"), col("add").as("remove"),
+          col("time"), col("rev"), col("batch"))
+      wh.append(del)
+      wh.compactZorderIncremental()
+      // the live cut lost the doomed customers; the historical cut
+      // still serves every one of them — the snapshot log's claim
+      val nCustLive = wh.zNodes
+        .filter(col("kind") === "customer").count()
+      require(nCustLive < nCustFull,
+        s"delete wave must land: $nCustLive vs $nCustFull")
+      require(wh.zViewAt(seq0).nodes
+          .filter(col("kind") === "customer").count() == nCustFull,
+        "the historical cut must serve the full pre-delete graph")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$root/seq0"), seq0.toString)
+    } + "/wh"
 
   /** Memoized MAINTAINED FTS POSTINGS z-table for g21 (r16 — VERDICT r15
     * "What's missing" #2): part-name postings stored term-major via
@@ -1145,56 +786,40 @@ object SparkEntry {
     * restored). The builder REQUIREs the maintained index equals a fresh
     * full tokenization EXACTLY (multiset), so the g21 MATCH twin checks
     * the whole lifecycle. */
-  private val zftsMemo = layoutMemo
   private def zFtsFor(s: SparkSession, d: String): String =
-    memoizedLayout(zftsMemo, s, d) {
-      import graft.engine.WarehouseMeta
+    fixtureAt(s, d, "graft_g21_", s"$d/part.parquet", "#zfts16") { path =>
       import graft.ops.ZFts
-      val name = "graft_g21_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/part.parquet") + "#zfts16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val parts = t(s, d, "part").select(
-            concat(lit("part:"), col("p_partkey")).as("uid"),
-            col("p_name"), col("p_partkey"))
-          val f2t = Map("name" -> "p_name")
-          val cut = parts.agg(max("p_partkey")).collect()(0)
-            .getLong(0) * 9 / 10
-          ZFts.init(s, parts.filter(col("p_partkey") <= cut), path,
-            "uid", f2t)
-          // insert increment: the tail docs arrive
-          ZFts.updatefts(s, path,
-            parts.filter(col("p_partkey") > cut), "uid", f2t)
-          // idempotent re-send: already-indexed docs delete-then-insert
-          ZFts.updatefts(s, path,
-            parts.filter(col("p_partkey") % 5 === 0), "uid", f2t)
-          // takedown + re-index round trip
-          val twoKeys = parts.orderBy("p_partkey").limit(2)
-            .select("uid").collect().map(_.getString(0)).toSeq
-          require(ZFts.deletefts(s, path, twoKeys)._1 > 0,
-            "deletefts must tombstone the two uids' postings")
-          ZFts.updatefts(s, path,
-            parts.filter(col("uid").isin(twoKeys: _*)), "uid", f2t)
-          // the maintained index ≡ a fresh full tokenization, exactly
-          // (name-ordered projection: column order is not part of the
-          // contract and exceptAll compares positionally)
-          val pCols = Seq("term", "field", "uid", "pos").map(col)
-          val full = graft.query.Fts.postings(parts, "uid", f2t)
-            .select(pCols: _*)
-          val live = ZFts.postings(s, path).select(pCols: _*)
-          require(live.exceptAll(full).count() == 0 &&
-            full.exceptAll(live).count() == 0,
-            "the maintained postings must equal the full build exactly")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+      val parts = t(s, d, "part").select(
+        concat(lit("part:"), col("p_partkey")).as("uid"),
+        col("p_name"), col("p_partkey"))
+      val f2t = Map("name" -> "p_name")
+      val cut = parts.agg(max("p_partkey")).collect()(0)
+        .getLong(0) * 9 / 10
+      ZFts.init(s, parts.filter(col("p_partkey") <= cut), path,
+        "uid", f2t)
+      // insert increment: the tail docs arrive
+      ZFts.updatefts(s, path,
+        parts.filter(col("p_partkey") > cut), "uid", f2t)
+      // idempotent re-send: already-indexed docs delete-then-insert
+      ZFts.updatefts(s, path,
+        parts.filter(col("p_partkey") % 5 === 0), "uid", f2t)
+      // takedown + re-index round trip
+      val twoKeys = parts.orderBy("p_partkey").limit(2)
+        .select("uid").collect().map(_.getString(0)).toSeq
+      require(ZFts.deletefts(s, path, twoKeys)._1 > 0,
+        "deletefts must tombstone the two uids' postings")
+      ZFts.updatefts(s, path,
+        parts.filter(col("uid").isin(twoKeys: _*)), "uid", f2t)
+      // the maintained index ≡ a fresh full tokenization, exactly
+      // (name-ordered projection: column order is not part of the
+      // contract and exceptAll compares positionally)
+      val pCols = Seq("term", "field", "uid", "pos").map(col)
+      val full = graft.query.Fts.postings(parts, "uid", f2t)
+        .select(pCols: _*)
+      val live = ZFts.postings(s, path).select(pCols: _*)
+      require(live.exceptAll(full).count() == 0 &&
+        full.exceptAll(live).count() == 0,
+        "the maintained postings must equal the full build exactly")
     }
 
   /** Memoized AUTO-PILOT table for w53: a lineitem z-table dirtied every
@@ -1205,53 +830,37 @@ object SparkEntry {
     * convergence and a clean census). Maintenance must never change
     * answers: the final table is exactly lineitem minus the band, which
     * the w53 oracle checks directly. */
-  private val zoptMemo = layoutMemo
   private def zorderOptimizedFor(s: SparkSession, d: String): String =
-    memoizedLayout(zoptMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w53_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zopt16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
-          val (ma, mb) = (mx.getLong(0), mx.getLong(1))
-          Layout.zorderInit(s, li.filter(col("l_orderkey") <= ma * 9 / 10),
-            path, "l_orderkey", "l_suppkey", nFiles = 16, keepGenerations = 2)
-          Layout.zorderBloomBuild(s, path, "l_orderkey")
-          Layout.zorderAppend(li.filter(col("l_orderkey") > ma * 9 / 10), path)
-          require(Layout.zorderDeleteVectored(s, path,
-            (ma / 4, ma / 2), (mb * 2 / 5, mb / 2))._1 > 0,
-            "the band must hold rows")
-          val actions = scala.collection.mutable.ListBuffer.empty[(String, String)]
-          var step = Layout.zorderOptimize(s, path,
-            smallFileRows = 100L, tombstoneFraction = 0.01)
-          var guard = 0
-          while (step.isDefined && guard < 16) {
-            actions += step.get; guard += 1
-            step = Layout.zorderOptimize(s, path,
-              smallFileRows = 100L, tombstoneFraction = 0.01)
-          }
-          // convergence = the LAST probe came back empty (a run needing
-          // exactly 16 actions converges too — the guard only bounds the
-          // loop, it is not the convergence signal)
-          require(step.isEmpty, s"auto-pilot must converge: $actions")
-          require(Layout.zorderAdvise(s, path,
-              smallFileRows = 100L, tombstoneFraction = 0.01)
-            .filter(col("fire")).count() == 0, "census must be all-clear")
-          require(actions.map(_._2).contains("zorderMaintain") &&
-            actions.map(_._2).contains("zorderDvMaterialize"),
-            s"the landing and tombstone signals must have executed: $actions")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
+    fixtureAt(s, d, "graft_w53_", s"$d/lineitem.parquet", "#zopt16") { path =>
+      val li = t(s, d, "lineitem")
+      val mx = li.agg(max("l_orderkey"), max("l_suppkey")).collect()(0)
+      val (ma, mb) = (mx.getLong(0), mx.getLong(1))
+      Layout.zorderInit(s, li.filter(col("l_orderkey") <= ma * 9 / 10),
+        path, "l_orderkey", "l_suppkey", nFiles = 16, keepGenerations = 2)
+      Layout.zorderBloomBuild(s, path, "l_orderkey")
+      Layout.zorderAppend(li.filter(col("l_orderkey") > ma * 9 / 10), path)
+      require(Layout.zorderDeleteVectored(s, path,
+        (ma / 4, ma / 2), (mb * 2 / 5, mb / 2))._1 > 0,
+        "the band must hold rows")
+      val actions = scala.collection.mutable.ListBuffer.empty[(String, String)]
+      var step = Layout.zorderOptimize(s, path,
+        smallFileRows = 100L, tombstoneFraction = 0.01)
+      var guard = 0
+      while (step.isDefined && guard < 16) {
+        actions += step.get; guard += 1
+        step = Layout.zorderOptimize(s, path,
+          smallFileRows = 100L, tombstoneFraction = 0.01)
       }
-      path
+      // convergence = the LAST probe came back empty (a run needing
+      // exactly 16 actions converges too — the guard only bounds the
+      // loop, it is not the convergence signal)
+      require(step.isEmpty, s"auto-pilot must converge: $actions")
+      require(Layout.zorderAdvise(s, path,
+          smallFileRows = 100L, tombstoneFraction = 0.01)
+        .filter(col("fire")).count() == 0, "census must be all-clear")
+      require(actions.map(_._2).contains("zorderMaintain") &&
+        actions.map(_._2).contains("zorderDvMaterialize"),
+        s"the landing and tombstone signals must have executed: $actions")
     }
 
   /** Memoized STRING-STATS table for w50/w52: orders plus a zero-padded
@@ -1263,87 +872,39 @@ object SparkEntry {
     * reference: decorrelated from the layout, so spans are useless for
     * it) with a STRING-domain bloom sidecar, so string POINT predicates
     * prune through the bitsets alone (w52). */
-  private val zstrMemo = layoutMemo
   private def zorderStrStatFor(s: SparkSession, d: String): String =
-    memoizedLayout(zstrMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w50_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/orders.parquet") + "#zstr16b")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val orders = t(s, d, "orders")
-            .withColumn("o_label",
-              lpad(col("o_orderkey").cast("string"), 8, "0"))
-            .withColumn("o_ref",
-              concat(lit("ref-"), reverse(lpad(col("o_orderkey").cast("string"), 8, "0"))))
-          Layout.zorderInit(s, orders, path, "o_orderkey", "o_custkey",
-            nFiles = 16, statCols = Seq("o_label"))
-          Layout.zorderBloomBuild(s, path, "o_ref")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w50_", s"$d/orders.parquet", "#zstr16b") { path =>
+      val orders = t(s, d, "orders")
+        .withColumn("o_label",
+          lpad(col("o_orderkey").cast("string"), 8, "0"))
+        .withColumn("o_ref",
+          concat(lit("ref-"), reverse(lpad(col("o_orderkey").cast("string"), 8, "0"))))
+      Layout.zorderInit(s, orders, path, "o_orderkey", "o_custkey",
+        nFiles = 16, statCols = Seq("o_label"))
+      Layout.zorderBloomBuild(s, path, "o_ref")
     }
 
   /** Memoized 64-file CENSUS table for w37: a plain zorderInit over full
     * lineitem (exact frozen bounds, no appends — tight spans), enough
     * files that a wide interior band fully covers interior tiles and the
     * metadata-only count path genuinely engages. */
-  private val zcensusMemo = layoutMemo
   private def zorderCensusFor(s: SparkSession, d: String): String =
-    memoizedLayout(zcensusMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w37_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zcensus64")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          Layout.zorderInit(s, t(s, d, "lineitem"), path,
-            "l_orderkey", "l_suppkey", nFiles = 64)
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w37_", s"$d/lineitem.parquet", "#zcensus64") { path =>
+      Layout.zorderInit(s, t(s, d, "lineitem"), path,
+        "l_orderkey", "l_suppkey", nFiles = 64)
     }
 
   /** Memoized BLOOM-INDEXED table for w36: orders clustered on
     * (o_custkey, o_totalprice) — spans useless for orderkey probes — with
     * a bloom sidecar over the UNIQUE o_orderkey, so point lookups must
     * resolve through the bitsets alone. */
-  private val zbloomMemo = layoutMemo
   private def zorderBloomFor(s: SparkSession, d: String): String =
-    memoizedLayout(zbloomMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w36_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/orders.parquet") + "#zbloom16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          Layout.zorderInit(s, t(s, d, "orders"), path,
-            "o_custkey", "o_totalprice", nFiles = 16)
-          val (scanned, _) = Layout.zorderBloomBuild(s, path, "o_orderkey",
-            bits = 1 << 16, hashes = 5)
-          require(scanned >= 1, "the bloom build must scan the fresh files")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w36_", s"$d/orders.parquet", "#zbloom16") { path =>
+      Layout.zorderInit(s, t(s, d, "orders"), path,
+        "o_custkey", "o_totalprice", nFiles = 16)
+      val (scanned, _) = Layout.zorderBloomBuild(s, path, "o_orderkey",
+        bits = 1 << 16, hashes = 5)
+      require(scanned >= 1, "the bloom build must scan the fresh files")
     }
 
   /** Memoized UPSERTED table for w34: init from lineitem with a
@@ -1352,73 +913,48 @@ object SparkEntry {
     * the span prune engaged and the replaced count to equal the band —
     * so the oracle's plain-lineitem twin passes ONLY if the merge
     * replaced every corrupted row and inserted nothing extra. */
-  private val zupsertMemo = layoutMemo
   private def zorderUpsertedFor(s: SparkSession, d: String): String =
-    memoizedLayout(zupsertMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w34_" + WarehouseMeta.md5Hex(d).take(12)
-      val path = WarehouseMeta.tableLocation(s, name).toString
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/lineitem.parquet") + "#zup16")
-      WarehouseMeta.withBuildLock(s, name) {
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp)) &&
-          Layout.currentGen(path).isDefined
-        if (!ok) {
-          WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(path))
-          val li = t(s, d, "lineitem")
-          val ma = li.agg(max("l_orderkey")).collect()(0).getLong(0)
-          val band = col("l_orderkey") > ma / 3 && col("l_orderkey") <= ma / 2
-          val corrupted = li.withColumn("l_quantity",
-            when(band, col("l_quantity") * 1000).otherwise(col("l_quantity")))
-          Layout.zorderInit(s, corrupted, path, "l_orderkey", "l_suppkey",
-            nFiles = 16)
-          val fix = li.filter(band)
-          val (replaced, upserted, rewritten) = Layout.zorderUpsert(s, fix, path)
-          require(replaced == upserted && replaced > 0,
-            s"every corrupted row must be replaced: $replaced vs $upserted")
-          require(rewritten < 16,
-            s"upsert must be span-pruned: rewrote $rewritten/16 files")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
-      }
-      path
+    fixtureAt(s, d, "graft_w34_", s"$d/lineitem.parquet", "#zup16") { path =>
+      val li = t(s, d, "lineitem")
+      val ma = li.agg(max("l_orderkey")).collect()(0).getLong(0)
+      val band = col("l_orderkey") > ma / 3 && col("l_orderkey") <= ma / 2
+      val corrupted = li.withColumn("l_quantity",
+        when(band, col("l_quantity") * 1000).otherwise(col("l_quantity")))
+      Layout.zorderInit(s, corrupted, path, "l_orderkey", "l_suppkey",
+        nFiles = 16)
+      val fix = li.filter(band)
+      val (replaced, upserted, rewritten) = Layout.zorderUpsert(s, fix, path)
+      require(replaced == upserted && replaced > 0,
+        s"every corrupted row must be replaced: $replaced vs $upserted")
+      require(rewritten < 16,
+        s"upsert must be span-pruned: rewrote $rewritten/16 files")
     }
 
   /** Memoized gopher GATE-ON-ARRIVAL ingest history for w24: the exactly-
     * once gate loop driven as two deterministic batches (doc_id parity),
     * with a committed-replay no-op proof on the seam — the first ingest
-    * loop whose end state is ORACLE-checked, not only spec-pinned. Same
-    * sidecar-fingerprint discipline as every durable layout here; a
-    * distinct outer lock (the loop takes the store's own lock per batch). */
-  private val gateLoopMemo = layoutMemo
+    * loop whose end state is ORACLE-checked, not only spec-pinned. The
+    * loop takes the store's own lock per batch, inside the ensure's. A
+    * FRESH JVM (in-memory catalog) may hold a valid on-disk history whose
+    * tables just aren't registered, so the existence check ensures the
+    * store first: metadata-only re-registration then, a create only on
+    * truly-first use. */
   private def gateStoreFor(s: SparkSession, d: String): String =
-    memoizedLayout(gateLoopMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w24_" + WarehouseMeta.md5Hex(d).take(12)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/documents.parquet") + "#gate#t19")
-      WarehouseMeta.withBuildLock(s, s"${name}_build") {
-        // a FRESH JVM (in-memory catalog) may hold a valid on-disk history
-        // whose tables just aren't registered — ensure is metadata-only
-        // re-registration then, a create only on truly-first use
-        TextAnalysis.ensureGateStore(s, name)
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp))
-        if (!ok) {
-          TextAnalysis.resetGateStore(s, name)
-          val docs = t(s, d, "documents")
-          val out = WarehouseMeta.tableLocation(s, s"${name}_out").toString
-          def apply(parity: Int) = TextAnalysis.applyGateIngestBatch(s,
-            docs.filter(col("doc_id") % 2 === parity), parity.toLong,
-            "doc_id", "text", name, out,
-            minWords = 30, maxWords = 90, minMeanWordLen = 4.0,
-            maxMeanWordLen = 4.9, minAlphaFrac = 0.8, minStopwords = 2,
-            stopwords = Seq("the", "a", "of", "and", "is"))
-          require(apply(0) >= 0 && apply(1) >= 0, "both batches must apply")
-          require(apply(1) == -1L, "committed-batch replay must no-op")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
+    WarehouseMeta.memoFixture(s, "graft_w24_", d) { name =>
+      WarehouseMeta.ensureFixture(s, name,
+          WarehouseMeta.fingerprint(s"$d/documents.parquet", "#gate#t19"),
+          { TextAnalysis.ensureGateStore(s, name); true }) {
+        TextAnalysis.resetGateStore(s, name)
+        val docs = t(s, d, "documents")
+        val out = WarehouseMeta.tableLocation(s, s"${name}_out").toString
+        def apply(parity: Int) = TextAnalysis.applyGateIngestBatch(s,
+          docs.filter(col("doc_id") % 2 === parity), parity.toLong,
+          "doc_id", "text", name, out,
+          minWords = 30, maxWords = 90, minMeanWordLen = 4.0,
+          maxMeanWordLen = 4.9, minAlphaFrac = 0.8, minStopwords = 2,
+          stopwords = Seq("the", "a", "of", "and", "is"))
+        require(apply(0) >= 0 && apply(1) >= 0, "both batches must apply")
+        require(apply(1) == -1L, "committed-batch replay must no-op")
       }
       name
     }
@@ -1427,43 +963,34 @@ object SparkEntry {
     * fixture through the exactly-once blocklist loop as two parity
     * batches with a TAKEDOWN between them — batch 0 gates under
     * {tracker.net} only, batch 1 under {tracker.net, spam-mill.com}, so
-    * the oracle checks the list-as-of-apply semantics end to end. */
-  private val blockLoopMemo = layoutMemo
+    * the oracle checks the list-as-of-apply semantics end to end. Same
+    * locking and re-registration rule as [[gateStoreFor]]. */
   private def blockStoreFor(s: SparkSession, d: String): String =
-    memoizedLayout(blockLoopMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_w25_" + WarehouseMeta.md5Hex(d).take(12)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/documents.parquet") + "#block#t22")
-      WarehouseMeta.withBuildLock(s, s"${name}_build") {
-        // same fresh-JVM re-registration rule as gateStoreFor
-        TextAnalysis.ensureBlocklistStore(s, name)
-        val ok = WarehouseMeta.readSidecar(s, s"${name}_meta.tsv")
-          .exists(_.get("sig").contains(fp))
-        if (!ok) {
-          TextAnalysis.resetBlocklistStore(s, name)
-          val url = concat(lit("https://"),
-            when(col("doc_id") % 5 === 0, lit("user:pw@Ads.Tracker.NET"))
-              .when(col("doc_id") % 5 === 1, lit("sub.spam-mill.com"))
-              .when(col("doc_id") % 5 === 2, lit("docs.example.org:8080"))
-              .when(col("doc_id") % 5 === 3, lit("tracker.net.example.org"))
-              .otherwise(lit("example.org")),
-            lit("/page/"), col("doc_id"))
-          val docs = t(s, d, "documents").withColumn("url", url)
-          val out = WarehouseMeta.tableLocation(s, s"${name}_out").toString
-          TextAnalysis.addBlockedDomains(s, name, Seq("tracker.net"))
-          require(TextAnalysis.applyBlockIngestBatch(s,
-            docs.filter(col("doc_id") % 2 === 0), 0L, "doc_id", "url",
-            name, out) >= 0)
-          TextAnalysis.addBlockedDomains(s, name, Seq("spam-mill.com"))
-          require(TextAnalysis.applyBlockIngestBatch(s,
-            docs.filter(col("doc_id") % 2 === 1), 1L, "doc_id", "url",
-            name, out) >= 0)
-          require(TextAnalysis.applyBlockIngestBatch(s,
-            docs.filter(col("doc_id") % 2 === 1), 1L, "doc_id", "url",
-            name, out) == -1L, "committed-batch replay must no-op")
-          WarehouseMeta.writeSidecar(s, s"${name}_meta.tsv", Map("sig" -> fp))
-        }
+    WarehouseMeta.memoFixture(s, "graft_w25_", d) { name =>
+      WarehouseMeta.ensureFixture(s, name,
+          WarehouseMeta.fingerprint(s"$d/documents.parquet", "#block#t22"),
+          { TextAnalysis.ensureBlocklistStore(s, name); true }) {
+        TextAnalysis.resetBlocklistStore(s, name)
+        val url = concat(lit("https://"),
+          when(col("doc_id") % 5 === 0, lit("user:pw@Ads.Tracker.NET"))
+            .when(col("doc_id") % 5 === 1, lit("sub.spam-mill.com"))
+            .when(col("doc_id") % 5 === 2, lit("docs.example.org:8080"))
+            .when(col("doc_id") % 5 === 3, lit("tracker.net.example.org"))
+            .otherwise(lit("example.org")),
+          lit("/page/"), col("doc_id"))
+        val docs = t(s, d, "documents").withColumn("url", url)
+        val out = WarehouseMeta.tableLocation(s, s"${name}_out").toString
+        TextAnalysis.addBlockedDomains(s, name, Seq("tracker.net"))
+        require(TextAnalysis.applyBlockIngestBatch(s,
+          docs.filter(col("doc_id") % 2 === 0), 0L, "doc_id", "url",
+          name, out) >= 0)
+        TextAnalysis.addBlockedDomains(s, name, Seq("spam-mill.com"))
+        require(TextAnalysis.applyBlockIngestBatch(s,
+          docs.filter(col("doc_id") % 2 === 1), 1L, "doc_id", "url",
+          name, out) >= 0)
+        require(TextAnalysis.applyBlockIngestBatch(s,
+          docs.filter(col("doc_id") % 2 === 1), 1L, "doc_id", "url",
+          name, out) == -1L, "committed-batch replay must no-op")
       }
       name
     }
@@ -1472,27 +999,19 @@ object SparkEntry {
     * store taken through the takedown surface — remove {8, 26} and COMPACT
     * them away, then tombstone {58} and leave it uncompacted so the
     * increment's store side exercises the tombstone anti-join. Same
-    * sidecar-flagged apply-once discipline as the s16 vector index. */
-  private val dedupForgetMemo = layoutMemo
+    * apply-once discipline as the s16 vector index: a freshly built store
+    * or a missing flag applies the sequence once. */
   private def dedupForgetStoreFor(s: SparkSession, d: String): String =
-    memoizedLayout(dedupForgetMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_dedupforget_" + WarehouseMeta.md5Hex(d).take(12)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/documents.parquet") + "#even#k3b4r4#forget")
-      WarehouseMeta.withBuildLock(s, s"${name}_life") {
-        val built = graft.ops.Dedup.ensureSignatureStore(s,
-          tPar(s, d, "documents").filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", name, fp)
-        val flag = s"${name}_life.tsv"
-        val applied = WarehouseMeta.readSidecar(s, flag)
-          .exists(_.get("applied").contains(fp))
-        if (built || !applied) {
-          graft.ops.Dedup.removeFromSignatureStore(s, name, Seq(8L, 26L))
-          graft.ops.Dedup.compactSignatureStore(s, name)
-          graft.ops.Dedup.removeFromSignatureStore(s, name, Seq(58L))
-          WarehouseMeta.writeSidecar(s, flag, Map("applied" -> fp))
-        }
+    WarehouseMeta.memoFixture(s, "graft_dedupforget_", d) { name =>
+      val fp = WarehouseMeta.fingerprint(s"$d/documents.parquet", "#even#k3b4r4#forget")
+      WarehouseMeta.ensureFixture(s, name, fp,
+          !Dedup.ensureSignatureStore(s,
+            tPar(s, d, "documents").filter(col("doc_id") % 2 === 0),
+            "doc_id", "text", name, fp),
+          applyOnce = true) {
+        Dedup.removeFromSignatureStore(s, name, Seq(8L, 26L))
+        Dedup.compactSignatureStore(s, name)
+        Dedup.removeFromSignatureStore(s, name, Seq(58L))
       }
       name
     }
@@ -1505,31 +1024,19 @@ object SparkEntry {
     * bucketed files metadata-only (the StarWarehouse restart-survival
     * contract). The table name is md5-derived from the dir so distinct SF
     * dirs never collide in the shared warehouse. */
-  private val dedupStoreMemo = layoutMemo
-  private val fuzzyEvalMemo = layoutMemo
+  private def dedupStoreFor(s: SparkSession, d: String): String =
+    signatureStoreFor(s, d, "graft_dedupstore_", "#even#k3b4r4", col("doc_id") % 2 === 0)
 
   /** Signature store over the EVAL split (doc_id % 50 == 0) — the fuzzy
     * contamination fixture (d21). */
   private def fuzzyEvalStoreFor(s: SparkSession, d: String): String =
-    memoizedLayout(fuzzyEvalMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_fuzzyeval_" + WarehouseMeta.md5Hex(d).take(12)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/documents.parquet") + "#eval50#k3b4r4")
-      graft.ops.Dedup.ensureSignatureStore(s,
-        tPar(s, d, "documents").filter(col("doc_id") % 50 === 0),
-        "doc_id", "text", name, fp)
-      name
-    }
-  private def dedupStoreFor(s: SparkSession, d: String): String =
-    memoizedLayout(dedupStoreMemo, s, d) {
-      import graft.engine.WarehouseMeta
-      val name = "graft_dedupstore_" + WarehouseMeta.md5Hex(d).take(12)
-      val fp = WarehouseMeta.md5Hex(
-        WarehouseMeta.sourceSignature(s"$d/documents.parquet") + "#even#k3b4r4")
-      graft.ops.Dedup.ensureSignatureStore(s,
-        tPar(s, d, "documents").filter(col("doc_id") % 2 === 0),
-        "doc_id", "text", name, fp)
+    signatureStoreFor(s, d, "graft_fuzzyeval_", "#eval50#k3b4r4", col("doc_id") % 50 === 0)
+
+  private def signatureStoreFor(s: SparkSession, d: String, prefix: String,
+      tag: String, split: Column): String =
+    WarehouseMeta.memoFixture(s, prefix, d) { name =>
+      Dedup.ensureSignatureStore(s, tPar(s, d, "documents").filter(split),
+        "doc_id", "text", name, WarehouseMeta.fingerprint(s"$d/documents.parquet", tag))
       name
     }
 
@@ -2167,8 +1674,7 @@ object SparkEntry {
     "d20_contamination_guard" -> ((s, d) => {
       // dir-keyed name (the dedupStoreFor discipline): distinct SF dirs
       // must never share one store in the common warehouse
-      val store = "graft_d20_guard_" +
-        graft.engine.WarehouseMeta.md5Hex(d).take(12)
+      val store = WarehouseMeta.fixtureName("graft_d20_guard_", d)
       val docs = tPar(s, d, "documents")
       Dedup.writeEvalShingleStore(s, docs.filter(col("doc_id") % 50 === 0),
         "doc_id", "text", store, k = 5)
@@ -3045,10 +2551,9 @@ object SparkEntry {
     // scratch, then a second maintain proves idempotence (no-op) before
     // the read-back; incremental/restate legs are EventsSpec-pinned
     "w22_daily_rollup" -> ((s, d) => {
-      import graft.engine.WarehouseMeta
       val lake = eventsLakeFor(s, d)
       val roll = WarehouseMeta.tableLocation(s,
-        "graft_w22_" + WarehouseMeta.md5Hex(d).take(12)).toString
+        WarehouseMeta.fixtureName("graft_w22_", d)).toString
       WarehouseMeta.deleteRecursively(
         java.nio.file.Paths.get(roll.stripPrefix("file:")))
       Events.maintainDailyRollup(s, lake, roll)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -11,33 +10,25 @@ import scala.collection.mutable.ArrayBuffer
   * ~10× round-4 numbers with unchanged code and data; this prints where
   * the seconds actually go).
   *
-  * Usage: runMain graft.StageAudit <query> [sfDir] [reps] [cpus]
+  * Usage: runMain graft.StageAudit <query> [sfDir] [reps] [cpus] (cpus
+  * defaults to `$SPARK_GRAFT_CPUS`, else the host's core count)
   */
 object StageAudit {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q04_region_revenue")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = if (args.length > 3) args(3) else "32"
+    val cpus = if (args.length > 3) args(3) else Bench.defaultCpus
     // optional A/B overrides: arg 5 = "key=value,key=value"
     val extra = if (args.length > 4)
       args(4).split(",").filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }.toSeq
     else Seq.empty
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // mirror the Bench session (AQE off, big codegen cache) so the audited
-      // stages are the stages the bench actually runs
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the Bench session, so the audited stages are the stages it runs
+    val spark = Bench.buildSession(cpus)
     extra.foreach { case (k, v) => spark.conf.set(k, v) }
     if (extra.nonEmpty) println(s"[stage-audit] extra conf: ${extra.mkString(", ")}")
-    spark.sparkContext.setLogLevel("WARN")
 
     case class Row(stage: Int, nTasks: Int, wallMs: Long, cpuMs: Long,
         gcMs: Long, deserMs: Long, site: String)

@@ -31,83 +31,74 @@ import graft.ops.{Layout, ManifestFileIndex, ZTable}
   * at scale wants exactly that second set. Both are ViewGraphs, so every
   * Fetch/Traversals operator runs unchanged over either.
   *
-  * Build is memoized per (session, dir) and reused across JVMs via the
-  * same fingerprint sidecar discipline as StarWarehouse: a matching
-  * signature + committed generations on disk reopen with zero writes.
+  * Build is memoized per (session, dir) by the shared fixture memo
+  * ([[graft.engine.WarehouseMeta.memoFixture]]) and reused across JVMs
+  * through the durable-fixture ensure ([[WarehouseMeta.ensureFixture]]):
+  * a matching signature + committed generations on disk reopen with zero
+  * writes.
   */
 object ZStarWarehouse {
+  import graft.engine.WarehouseMeta
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
+  private val prefix = "graft_zstar_"
 
   private def keyOf(uidCol: String) =
     substring_index(col(uidCol), ":", -1).cast("long")
 
+  private def pathOf(spark: SparkSession, name: String, table: String): String =
+    WarehouseMeta.tableLocation(spark, s"${name}_$table").toString
+
   /** (nodesTablePath, edgesTablePath) — built (or reused) maintained
     * z-tables for the star projection of `dir`. */
-  def tables(spark: SparkSession, dir: String): (String, String) =
-    memo.computeIfAbsent((spark, dir), { case (s, d) => build(s, d) })
+  def tables(spark: SparkSession, dir: String): (String, String) = {
+    val name = WarehouseMeta.memoFixture(spark, prefix, dir) { n => build(spark, dir, n); n }
+    (pathOf(spark, name, "nodes"), pathOf(spark, name, "edges"))
+  }
 
   /** Drop the per-session memo (tables stay on disk and re-open by
     * fingerprint). */
-  def invalidate(): Unit = memo.clear()
+  def invalidate(): Unit = WarehouseMeta.forgetFixtures(prefix)
 
-  private def ftsPathOf(spark: SparkSession, dir: String): String = {
-    import graft.engine.WarehouseMeta
-    val name = "graft_zstar_" + WarehouseMeta.md5Hex(dir).take(12)
-    WarehouseMeta.tableLocation(spark, s"${name}_fts").toString
-  }
+  private def ftsPathOf(spark: SparkSession, dir: String): String =
+    pathOf(spark, WarehouseMeta.fixtureName(prefix, dir), "fts")
 
-  private def build(spark: SparkSession, dir: String): (String, String) = {
-    import graft.engine.WarehouseMeta
-    val name = "graft_zstar_" + WarehouseMeta.md5Hex(dir).take(12)
-    val nPath = WarehouseMeta.tableLocation(spark, s"${name}_nodes").toString
-    val ePath = WarehouseMeta.tableLocation(spark, s"${name}_edges").toString
-    val fPath = ftsPathOf(spark, dir)
-    val fp = WarehouseMeta.md5Hex(WarehouseMeta.sourceSignature(dir) + "#zstar2")
-    WarehouseMeta.withBuildLock(spark, name) {
-      val ok = WarehouseMeta.readSidecar(spark, s"${name}_meta.tsv")
-        .exists(_.get("sig").contains(fp)) &&
-        Layout.currentGen(nPath).isDefined &&
-        Layout.currentGen(ePath).isDefined &&
-        Layout.currentGen(fPath).isDefined
-      if (!ok) {
-        WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(nPath))
-        WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(ePath))
-        WarehouseMeta.deleteRecursively(java.nio.file.Paths.get(fPath))
-        val g = StarGraph.build(spark, dir)
-        Layout.zorderInit(spark,
-          g.nodes.withColumn("_key", keyOf("uid")),
-          nPath, "_key", "_key", nFiles = 16)
-        Layout.zorderInit(spark,
-          g.edges.withColumn("_start_key", keyOf("startuid"))
-            .withColumn("_end_key", keyOf("enduid")),
-          ePath, "_start_key", "_end_key", nFiles = 24)
-        // bloom sidecars over every traversal key: z spans alone admit
-        // every file whose key RANGE covers a probe; the bitsets cut that
-        // to files that may actually CONTAIN it (the getuid/outE shape).
-        // 2^18 bits keeps the per-file load low enough to prune at sf0.1
-        // (~30k keys/file → ~0.6 bits/key load at 5 hashes)
-        Layout.zorderBloomBuild(spark, nPath, "_key", bits = 1 << 18,
-          shards = Layout.zorderBloomAutoShards(nPath, "_key"))
-        Layout.zorderBloomBuild(spark, ePath, "_start_key", bits = 1 << 18,
-          shards = Layout.zorderBloomAutoShards(ePath, "_start_key"))
-        Layout.zorderBloomBuild(spark, ePath, "_end_key", bits = 1 << 18,
-          shards = Layout.zorderBloomAutoShards(ePath, "_end_key"))
-        // the star FTS (part names, field "name") as a MAINTAINED
-        // postings z-table (r16): same tokenizer as StarGraph's cached
-        // postings (plain lower — the star projection predates the
-        // unicode61 default and its oracles pin that), so FTS chains
-        // answer identically over all three storage layouts
-        graft.ops.ZFts.init(spark,
-          spark.read.parquet(s"$dir/part.parquet").select(
-            concat(lit("part:"), col("p_partkey")).as("uid"),
-            col("p_name")),
-          fPath, "uid", Map("name" -> "p_name"))
-        WarehouseMeta.writeSidecar(spark, s"${name}_meta.tsv", Map("sig" -> fp))
-      }
+  private def build(spark: SparkSession, dir: String, name: String): Unit = {
+    val (nPath, ePath, fPath) =
+      (pathOf(spark, name, "nodes"), pathOf(spark, name, "edges"), pathOf(spark, name, "fts"))
+    val paths = Seq(nPath, ePath, fPath)
+    WarehouseMeta.ensureFixture(spark, name, WarehouseMeta.fingerprint(dir, "#zstar2"),
+        paths.forall(Layout.currentGen(_).isDefined),
+        paths.map(java.nio.file.Paths.get(_))) {
+      val g = StarGraph.build(spark, dir)
+      Layout.zorderInit(spark,
+        g.nodes.withColumn("_key", keyOf("uid")),
+        nPath, "_key", "_key", nFiles = 16)
+      Layout.zorderInit(spark,
+        g.edges.withColumn("_start_key", keyOf("startuid"))
+          .withColumn("_end_key", keyOf("enduid")),
+        ePath, "_start_key", "_end_key", nFiles = 24)
+      // bloom sidecars over every traversal key: z spans alone admit
+      // every file whose key RANGE covers a probe; the bitsets cut that
+      // to files that may actually CONTAIN it (the getuid/outE shape).
+      // 2^18 bits keeps the per-file load low enough to prune at sf0.1
+      // (~30k keys/file → ~0.6 bits/key load at 5 hashes)
+      Layout.zorderBloomBuild(spark, nPath, "_key", bits = 1 << 18,
+        shards = Layout.zorderBloomAutoShards(nPath, "_key"))
+      Layout.zorderBloomBuild(spark, ePath, "_start_key", bits = 1 << 18,
+        shards = Layout.zorderBloomAutoShards(ePath, "_start_key"))
+      Layout.zorderBloomBuild(spark, ePath, "_end_key", bits = 1 << 18,
+        shards = Layout.zorderBloomAutoShards(ePath, "_end_key"))
+      // the star FTS (part names, field "name") as a MAINTAINED
+      // postings z-table (r16): same tokenizer as StarGraph's cached
+      // postings (plain lower — the star projection predates the
+      // unicode61 default and its oracles pin that), so FTS chains
+      // answer identically over all three storage layouts
+      graft.ops.ZFts.init(spark,
+        spark.read.parquet(s"$dir/part.parquet").select(
+          concat(lit("part:"), col("p_partkey")).as("uid"),
+          col("p_name")),
+        fPath, "uid", Map("name" -> "p_name"))
     }
-    (nPath, ePath)
   }
 
   /** The star graph as a [[ViewGraph]] whose node/edge frames are

@@ -7,12 +7,81 @@ import java.nio.file.{Files, Path, Paths}
   * ([[graft.StarWarehouse]] and the incremental-dedup signature store,
   * `Dedup.ensureSignatureStore`): a 100 TB deployment must never rewrite a
   * valid on-disk layout just because the process restarted, and must
-  * invalidate it exactly when the source data changed. */
+  * invalidate it exactly when the source data changed.
+  *
+  * Durable fixtures (the `SparkEntry` `*For` layouts, [[graft.ZStarWarehouse]])
+  * share one ensure, [[ensureFixture]], behind one memo, [[memoFixture]]. A
+  * fixture is named [[fixtureName]] (prefix + md5 of its source dir), keyed
+  * by [[fingerprint]] (its source's listing signature + a recipe tag), and
+  * is valid when its own existence check holds AND its sidecar records that
+  * fingerprint. The contract:
+  *   - stamp after build: the sidecar is written only after the build body
+  *     returns, so a crashed or throwing build rebuilds on the next call;
+  *   - on-disk names and keys: `${name}_meta.tsv` / `sig`, or for the
+  *     apply-once lifecycles `${name}_life.tsv` / `applied` — a warehouse
+  *     built by an earlier version re-opens with no rebuild;
+  *   - distinct outer lock: the ensure locks its sidecar stem
+  *     (`${name}_meta` or `${name}_life`), never `name` itself, so a body
+  *     may take its store's own lock (`name`) — the OS file lock throws
+  *     when one JVM takes it twice on one file;
+  *   - existence checks and deletes stay the caller's: each fixture passes
+  *     its own check and the paths it clears before a rebuild. */
 object WarehouseMeta {
 
   def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** A fixture's warehouse name: distinct source dirs never collide. */
+  def fixtureName(prefix: String, dir: String): String = prefix + md5Hex(dir).take(12)
+
+  /** A fixture's build fingerprint: the source's [[sourceSignature]] plus
+    * the `tag` naming its recipe. */
+  def fingerprint(src: String, tag: String): String = md5Hex(sourceSignature(src) + tag)
+
+  /** The durable-fixture decision (see the object doc). Under the lock
+    * of the sidecar stem: run `exists` first (it may re-register or ensure
+    * a store), then compare the sidecar; when either fails, delete `clear`,
+    * run `build`, and only then stamp the sidecar. Returns true when
+    * `build` ran. `applyOnce`: `build` applies a non-idempotent mutation
+    * sequence to a store `exists` ensured, recorded as `${name}_life`. */
+  def ensureFixture(spark: SparkSession, name: String, fp: String,
+      exists: => Boolean, clear: Seq[Path] = Nil,
+      applyOnce: Boolean = false)(build: => Unit): Boolean = {
+    val (stem, key) = if (applyOnce) (s"${name}_life", "applied") else (s"${name}_meta", "sig")
+    withBuildLock(spark, stem) {
+      val valid = exists && readSidecar(spark, s"$stem.tsv").exists(_.get(key).contains(fp))
+      if (!valid) {
+        clear.foreach(deleteRecursively)
+        build
+        writeSidecar(spark, s"$stem.tsv", Map(key -> fp))
+      }
+      !valid
+    }
+  }
+
+  /** Once per (fixture prefix, session, dir): `make` gets the fixture's
+    * name and returns what callers read (a name or a location). Each entry
+    * keeps its session, and an `eq` mismatch (identityHashCode reuse after
+    * GC) re-runs `make` — safe because every fixture is a durable ensure,
+    * so re-running against existing files is metadata-only. */
+  private val fixtureMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, Int, String), (SparkSession, String)]
+  def memoFixture(spark: SparkSession, prefix: String, dir: String)(
+      make: String => String): String = {
+    val key = (prefix, System.identityHashCode(spark), dir)
+    fixtureMemo.get(key) match {
+      case Some((s, v)) if s eq spark => v
+      case _ =>
+        val v = make(fixtureName(prefix, dir))
+        fixtureMemo.put(key, (spark, v))
+        v
+    }
+  }
+  /** Drop every memo entry of one fixture prefix (the files stay on disk
+    * and re-open by fingerprint). */
+  def forgetFixtures(prefix: String): Unit =
+    fixtureMemo.keys.filter(_._1 == prefix).foreach(fixtureMemo.remove)
 
   /** Cheap change detector for a source path (file or directory): file
     * listing only (relative path, size, mtime), never a data scan — listing

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.util.Locale
 
@@ -26,15 +25,8 @@ object IngestProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = Runtime.getRuntime.availableProcessors().toString
     val wh = java.nio.file.Files.createTempDirectory("graft_ingestprobe")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir", s"$wh/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.buildSession(warehouseDir = Some(s"$wh/warehouse"))
     val sf1 = "/root/repo/tmp-scale/sf1"
     val dir = if (new java.io.File(s"$sf1/_GENERATED").exists()) sf1
       else "/root/testdata/sf0.1"

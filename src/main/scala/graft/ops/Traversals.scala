@@ -53,7 +53,7 @@ object Traversals {
     * iterative plan. `visited` needs no checkpoint: its lineage is a
     * bounded union of already-checkpointed frontiers. The node table enters
     * exactly once, at the end, to materialize the reached rows. Beyond a
-    * few hops switch to [[connectedReach]].
+    * few hops switch to [[Analytics.hopDistances]] (one GraphX Pregel BFS).
     *
     * Frontier joins BROADCAST the frontier while it stays under
     * `broadcastFrontierRows` (r5): a checkpointed frontier is a LogicalRDD
@@ -172,21 +172,9 @@ object Traversals {
     GxGraph(verts, edges)
   }
 
-  /** Undirected reachable set from a seed uid via GraphX Pregel BFS —
-    * the large-k / whole-graph path. Returns a DF of reached uids. */
-  def connectedReach(spark: SparkSession, g: GraphSource, seedUid: String): DataFrame = {
-    val (dict, gx) = graphXOf(g)
-    val seedVid = dict.filter(col("uid") === seedUid).head().getAs[Long]("vid")
-    val init = gx.mapVertices((vid, _) => vid == seedVid)
-    val reached = init.pregel[Boolean](false)(
-      (_, attr, msg) => attr || msg,
-      triplet =>
-        if (triplet.srcAttr && !triplet.dstAttr) Iterator((triplet.dstId, true))
-        else if (triplet.dstAttr && !triplet.srcAttr) Iterator((triplet.srcId, true))
-        else Iterator.empty,
-      (a, b) => a || b)
-    import spark.implicits._
-    val reachedIds = reached.vertices.filter(_._2).map(_._1).toDF("vid")
-    dict.join(reachedIds, "vid").select("uid")
-  }
+  /** Undirected reachable set from a seed uid, seed included — the
+    * large-k / whole-graph path: the uid column of the one Pregel BFS,
+    * [[Analytics.hopDistances]]. */
+  def connectedReach(spark: SparkSession, g: GraphSource, seedUid: String): DataFrame =
+    Analytics.hopDistances(spark, g, seedUid).select("uid")
 }

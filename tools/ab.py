@@ -3,10 +3,11 @@
 
     python3 tools/ab.py --base HEAD --workloads oltp --seeds 101-110
 
-Extracts the base revision into its own directory (`git archive`, so the
-repository's own metadata is untouched), then runs `perfbench/run.py` of the
-base checkout and of the working tree in alternating pairs, one pair per
-seed, flipping which side runs first from pair to pair. Both sides run the
+Extracts the base revision and the working tree (uncommitted edits and new
+files included, as `git add -A` would stage them) each into its own fresh
+directory under --workdir with `git archive`, so neither side runs from the
+repository checkout and its build leftovers, then runs `perfbench/run.py` of
+the two extracts in alternating pairs, one pair per seed, flipping which side runs first from pair to pair. Both sides run the
 same benchmark settings (`run_seconds` from BENCHMARK.json). For every
 workload it prints each side's failed share of operations and errored runs,
 then for every metric each side's median and quartiles, the change/base
@@ -58,8 +59,19 @@ def seeds_arg(text):
     return out
 
 
+def working_tree():
+    """A tree object of the working tree as `git add -A` would stage it,
+    written through a scratch index so the repository's own index is
+    untouched."""
+    with tempfile.TemporaryDirectory() as tmp:
+        env = dict(os.environ, GIT_INDEX_FILE=os.path.join(tmp, "index"))
+        subprocess.run(["git", "add", "-A"], cwd=ROOT, env=env, check=True)
+        return subprocess.run(["git", "write-tree"], cwd=ROOT, env=env, check=True,
+                              capture_output=True, text=True).stdout.strip()
+
+
 def checkout(rev, workdir):
-    """The base revision's files, extracted once per commit."""
+    """A revision's (or tree's) files, extracted once per object id."""
     sha = subprocess.run(["git", "rev-parse", rev], cwd=ROOT, check=True,
                          capture_output=True, text=True).stdout.strip()
     d = os.path.join(workdir, sha[:12])
@@ -202,15 +214,16 @@ def main():
                     help="one pair per seed, e.g. 101-110 or 3,5,8")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--workdir", default=os.path.join(tempfile.gettempdir(), "graft-ab"),
-                    help="where the base checkout is extracted")
+                    help="where both sides are extracted")
     ap.add_argument("--out", help="JSON lines file every run's result is appended to")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
     sha, base_tree = checkout(a.base, a.workdir)
+    change_sha, change_tree = checkout(working_tree(), a.workdir)
     seconds = spec["run_seconds"]
-    trees = {"base": base_tree, "change": ROOT}
+    trees = {"base": base_tree, "change": change_tree}
     results = []
     n = 0
     for wl in a.workloads.split(","):
@@ -219,7 +232,8 @@ def main():
             n += 1
             for i, side in enumerate(order):
                 res = run(trees[side], wl, seed, seconds, a.trace)
-                rec = {"side": side, "rev": sha if side == "base" else "working tree",
+                rec = {"side": side,
+                       "rev": sha if side == "base" else f"working tree {change_sha}",
                        "workload": wl, "seed": seed, "first": i == 0, "trace": a.trace,
                        "result": res}
                 results.append(rec)
