@@ -39,9 +39,13 @@ import scala.jdk.CollectionConverters._
   * `org.apache.spark.sql.graft.LocalFrame`. Catalyst never walks its rows
   * while it analyses or compares plans; filters and projections over it
   * fold into new rows on the driver; its scan is a single partition whose
-  * broadcast needs no Spark job. A fetch chain over these views therefore
-  * runs one Spark job of one stage with no shuffle, and a filtered
-  * single-link fetch, or one whose filters match nothing, runs none.
+  * broadcast needs no Spark job. A fetch chain over these views is
+  * therefore one partition with no shuffle, and every read here (fetches,
+  * traversals, FTS matches, `fetchCount`, `stats`) collects through
+  * `LocalFrame.collect`, which computes such a plan on the calling thread:
+  * one SQL execution and no Spark job (with AQE on, a plan is adaptive and
+  * runs its job as before). A driver-run read has no job group to cancel;
+  * the ~10k-item working set this class targets is what bounds it.
   */
 final class MemGraph(val spark: SparkSession) extends GraphSource {
 
@@ -221,7 +225,7 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
     val isEdge = Fetch.collectsEdges(args)
     val core = Fetch.coreCols(isEdge)
     val extraCols = df.columns.filterNot(core.contains)
-    df.collect().toSeq.map { row =>
+    LocalFrame.collect(df).toSeq.map { row =>
       val payload = mutable.LinkedHashMap.empty[String, Any]
       core.foreach { c => payload(c) = row.get(row.fieldIndex(c)) }
       val props = Option(row.getAs[String]("props")).getOrElse("{}")
@@ -380,15 +384,17 @@ final class MemGraph(val spark: SparkSession) extends GraphSource {
   // ------------------------------------------------------------------- stats
 
   /** Totals + per-kind counts (graphydb.py:704-739) — computed over the
-    * snapshot DataFrames so the same code path scales. */
+    * snapshot DataFrames so the same code path scales; a total is the sum
+    * of its table's per-kind counts, so each table is read once. */
   def stats: Map[String, Any] = {
     def kindCounts(df: DataFrame): Map[String, Long] =
-      df.groupBy("kind").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      LocalFrame.collect(df.groupBy("kind").count()).map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (nodeKinds, edgeKinds) = (kindCounts(nodes), kindCounts(edges))
     Map(
-      "Total nodes" -> nodes.count(),
-      "Total edges" -> edges.count(),
-      "Node kinds" -> kindCounts(nodes),
-      "Edge kinds" -> kindCounts(edges),
+      "Total nodes" -> nodeKinds.values.sum,
+      "Total edges" -> edgeKinds.values.sum,
+      "Node kinds" -> nodeKinds,
+      "Edge kinds" -> edgeKinds,
       // engine-version fields mirror 'SQLite version'/'GraphyDB version'
       // (graphydb.py:733-736); 'File size' is durable-store-only there too,
       // so the :memory: analogue rightly omits it (WarehouseSession has it)

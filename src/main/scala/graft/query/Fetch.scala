@@ -1,6 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.LocalFrame
 import graft.engine.GraphSource
 
 /** Compiles a chain-DSL fetch into ONE Spark SQL statement over the source's
@@ -39,7 +40,9 @@ import graft.engine.GraphSource
   * (`org.apache.spark.sql.graft.LocalFrame`): filters and projections fold
   * into its rows during optimization, a broadcast of it starts no job, and
   * its scan is one partition, so a chain's dedup needs no shuffle and the
-  * whole fetch runs as one Spark job of one stage.
+  * whole fetch is one partition: `df(...).collect()` runs it as one Spark
+  * job of one stage, and `LocalFrame.collect` (how `MemGraph` and [[count]]
+  * read) computes it on the driver with none.
   */
 object Fetch extends org.apache.spark.internal.Logging {
 
@@ -257,7 +260,9 @@ object Fetch extends org.apache.spark.internal.Logging {
   def df(src: GraphSource, args: Args): DataFrame =
     src.sql(sql(src, args))
 
-  /** COUNT(DISTINCT uid) as a Long. With `group` set the reference returns
+  /** COUNT(DISTINCT uid) as a Long, read with `LocalFrame.collect` of the
+    * plan `head()` runs: on the driver over driver-held views, through its
+    * job over any other source. With `group` set the reference returns
     * the first group's count (fetchone, graphydb.py:988-990) — a quirk, so
     * here the group is dropped and the total is returned (with a warning,
     * so the silent drop can't surprise a caller expecting per-group rows). */
@@ -265,7 +270,7 @@ object Fetch extends org.apache.spark.internal.Logging {
     args.group.foreach(grp => logWarning(
       s"Fetch.count ignores group='$grp' and returns the TOTAL distinct count " +
         "(the reference's fetchone quirk, graphydb.py:988-990); use df() for per-group rows"))
-    df(src, args.copy(count = true, group = None)).head().getLong(0)
+    LocalFrame.collect(df(src, args.copy(count = true, group = None)).limit(1)).head.getLong(0)
   }
 
   /** Whether the collected link (thus result row shape) is an edge. */

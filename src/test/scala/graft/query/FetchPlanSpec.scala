@@ -7,14 +7,21 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.graft.{DriverRelation, DriverRows}
+import org.apache.spark.{SparkEnv, TaskContext}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.graft.{DriverRelation, DriverRows, DriverScanExec, LocalFrame}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan shape of fetches over MemGraph, whose views hold one row per uid
   * in driver-held relations: a single-link fetch plans no dedup and runs no
   * Spark job, a chain dedups in one job of one stage, an empty result runs
   * no job, a read binds its views by plan (no temp view, one SQL
-  * execution), and the SQL over any other source is unchanged. */
+  * execution), and the SQL over any other source is unchanged. Through
+  * `LocalFrame.collect` (every `MemGraph` read) a driver-only plan runs on
+  * the driver: no job, one SQL execution, its metrics counted, its task
+  * context and memory released. */
 class FetchPlanSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHelper {
 
   private val personNames = Seq("apple pie", "apple apple tart", "pear", "apple apple apple", "plum")
@@ -193,5 +200,112 @@ class FetchPlanSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHel
     val leaf = g.nodes.queryExecution.analyzed.asInstanceOf[DriverRelation]
     assert(leaf.computeStats() == LocalRelation(leaf.output, leaf.data.rows).computeStats())
     assert(leaf.maxRows.contains(leaf.data.rows.length.toLong))
+  }
+
+  /** `body` with adaptive execution off, as every graft main and the
+    * benchmark run it; an adaptive plan is never driver-run. */
+  private def withoutAqe[A](body: => A): A = {
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, was)
+  }
+
+  /** Every fetch shape an `oltp`-style read takes, through `MemGraph`. */
+  private def reads: Seq[(String, () => Int)] = {
+    val co = uid("Acme")
+    val p0 = g.getuid(uid("apple pie")).get.asInstanceOf[Node]
+    Seq(
+      "2-link chain" -> (() => g.fetchN("<(e:WorksAt)- [n]", Seq(s"e.enduid = '$co'")).size),
+      "3-link chain" -> (() => g.fetchN("[a] -(e:Knows)> (b)").size),
+      "5-link chain" -> (() => g.fetchN("[a] -(e:Knows)> (b) -(w:WorksAt)> (c:Company)").size),
+      "group + COUNT extra" -> (() => g.fetchN("[c:Company,x] <(e:WorksAt)- (p)",
+        group = Some("c.uid"), params = Map("x" -> "COUNT(p.uid)")).size),
+      "order + limit" -> (() => g.fetchN("[a:Person] -(e:WorksAt)> (c)",
+        order = Some("a.uid DESC"), limit = Some(2)).size),
+      "outN" -> (() => p0.outN().size),
+      "inE" -> (() => g.getuid(co).get.asInstanceOf[Node].inE().size),
+      "FTS match" -> (() => g.fetchN("(n:Person)", params = Map("n_fts" -> "apple")).size),
+      "fetchCount" -> (() => g.fetchCount("[a] -(e:Knows)> (b)").toInt))
+  }
+
+  test("MemGraph reads run 0 Spark jobs: chains, group, order + limit, traversals and FTS")(withoutAqe {
+    val want = Seq(5, 1, 1, 1, 2, 2, 5, 3, 1)
+    reads.zip(want).foreach { case ((name, read), n) =>
+      val (got, jobs) = jobsOf(read())
+      assert(got == n, s"$name: $got rows")
+      assert(jobs == 0, s"$name ran $jobs Spark jobs")
+    }
+  })
+
+  test("a driver-run read is one SQL execution, and a QueryExecutionListener sees it succeed")(withoutAqe {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add("failed " + funcName)
+    }
+    spark.listenerManager.register(listener)
+    try reads.foreach { case (name, read) =>
+      seen.clear()
+      val (_, executions) = sqlExecutionsDuring(spark.sparkContext)(read())
+      assert(executions == 1, s"$name: $executions SQL executions")
+      assert(seen.toArray.toSeq == Seq("collect"), s"$name: listener saw $seen")
+    } finally spark.listenerManager.unregister(listener)
+  })
+
+  test("a driver-run read counts numOutputRows: every scan its rows, the FTS broadcast its matches")(withoutAqe {
+    val df = Fetch.df(g, Fetch.Args("[a:Person] -(e:Knows)> (b)", params = Map("a_fts" -> "apple")))
+    val (rows, jobs) = jobsOf(LocalFrame.collect(df))
+    assert(rows.length == 1 && jobs == 0, s"${rows.length} rows, $jobs jobs")
+    val plan = df.queryExecution.executedPlan
+    val scans = plan.collectWithSubqueries { case s: DriverScanExec => s }
+    assert(scans.nonEmpty)
+    scans.foreach(s => assert(s.metrics("numOutputRows").value == s.rows.length, s))
+    val broadcasts = plan.collectWithSubqueries { case b: BroadcastExchangeExec => b }
+    assert(broadcasts.nonEmpty, plan.toString)
+    // the FTS match set: three uids hold the term "apple"
+    assert(broadcasts.map(_.metrics("numOutputRows").value).contains(3L),
+      broadcasts.map(_.metrics("numOutputRows").value))
+  })
+
+  test("a driver-run read releases its task context and memory, after success and after failure")(withoutAqe {
+    def released(after: String): Unit = {
+      assert(TaskContext.get() == null, s"a TaskContext is left set after $after")
+      assert(SparkEnv.get.memoryManager.executionMemoryUsed == 0L,
+        s"execution memory held after $after")
+    }
+    reads.foreach { case (name, read) => read(); released(name) }
+    // an expression that throws while the plan runs (not while it folds)
+    val args = Fetch.Args("<(e:WorksAt)- [n]",
+      Seq("raise_error(concat('boom ', e.uid, n.uid)) IS NULL"))
+    val viaJob = intercept[Exception](Fetch.df(g, args).collect())
+    released("a failed collect")
+    val (viaDriver, jobs) = jobsOf(intercept[Exception](g.fetchN(args.chain, args.where)))
+    assert(jobs == 0, s"the failing read ran $jobs jobs")
+    assert(viaDriver.getClass == viaJob.getClass, s"$viaDriver vs $viaJob")
+    released("a failed driver-run read")
+    reads.foreach { case (name, read) => read(); released(s"$name after a failure") }
+  })
+
+  test("a plan with a file scan, a shuffle or adaptive execution still runs its job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_driverrun").toString
+    g.nodes.write.mode("overwrite").parquet(dir)
+    val chain = Fetch.Args("[a] -(e:Knows)> (b)")
+    val fromFile = spark.read.parquet(dir).filter("kind = 'Person'")
+    val shuffled = withoutAqe(g.nodes.repartition(3, g.nodes("kind")))
+    // the session default: the chain's broadcasts put it under an adaptive plan
+    val adaptive = Fetch.df(g, chain)
+    Seq("file scan" -> fromFile, "shuffle" -> shuffled, "adaptive" -> adaptive).foreach {
+      case (name, df) =>
+        assert(!LocalFrame.driverOnly(df.queryExecution.executedPlan), name)
+        val (rows, jobs) = jobsOf(LocalFrame.collect(df))
+        assert(jobs >= 1, s"$name ran $jobs jobs")
+        assert(rows.map(_.getString(0)).sorted.toSeq ==
+          df.collect().map(_.getString(0)).sorted.toSeq, name)
+    }
+    val fetch = withoutAqe(Fetch.df(g, chain).queryExecution.executedPlan)
+    assert(LocalFrame.driverOnly(fetch), fetch.toString)
   }
 }

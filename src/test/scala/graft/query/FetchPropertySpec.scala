@@ -2,7 +2,9 @@ package graft.query
 
 import graft.SparkSpec
 import graft.engine.{GraphSource, MemGraph, ViewGraph}
+import org.apache.spark.grafttest.ListenerDrain.jobsDuring
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.LocalFrame
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import scala.util.Random
@@ -249,6 +251,34 @@ class FetchPropertySpec extends AnyFunSuite with SparkSpec {
           s"$label: COUNT")
       }
     }
+    assert(covered == Set("where", "fts", "order+limit", "group", "extra", "distinct=false",
+      "chain", "a source read twice"), covered)
+  }
+
+  test("random fetches: the driver-side collect ≡ df.collect()") {
+    // adaptive execution off, as graft's mains and the benchmark run it, so
+    // that every MemGraph fetch plan is driver-only and runs on the driver
+    val rng = new Random(4711)
+    val covered = scala.collection.mutable.Set.empty[String]
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try for (round <- 1 to 4) {
+      val g = randomGraph(rng)
+      for (q <- 1 to 8) {
+        val (args, features) = randomFetch(rng)
+        val label = s"round $round query $q: $args"
+        val driverRun = Fetch.df(g, args)
+        assert(LocalFrame.driverOnly(driverRun.queryExecution.executedPlan),
+          s"$label\n${driverRun.queryExecution.executedPlan}")
+        val (rows, jobs) = jobsDuring(spark.sparkContext)(LocalFrame.collect(driverRun))
+        assert(jobs == 0, s"$label: $jobs Spark jobs")
+        val got = rows.toSeq.map(_.toSeq)
+        val want = rowsOf(Fetch.df(g, args))
+        if (want.nonEmpty) covered ++= features
+        assertSameRows(got, want, args, label)
+      }
+    } finally spark.conf.set(key, was)
     assert(covered == Set("where", "fts", "order+limit", "group", "extra", "distinct=false",
       "chain", "a source read twice"), covered)
   }
